@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import token_hash
-from ..graph import DST, SRC, nodes_of
+from ..graph import DST, SRC, join_side, nodes_of
 
 FM_PHI = 0.77351  # Flajolet–Martin bias correction
 
@@ -95,17 +95,12 @@ def neighborhood_function(
             ).alias("avg_reach")
         ).select(F.lit(t).alias("t"), "avg_reach")
 
-    tiny = n_nodes <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
-
     out = estimate(state, 0)
     for t in range(1, max_t + 1):
         nbr = (
             e.join(
-                _hint(
-                    state.select(F.col("id").alias(DST), *masks)
+                join_side(
+                    state.select(F.col("id").alias(DST), *masks), n_nodes
                 ),
                 DST,
             )
@@ -227,14 +222,9 @@ def _hyperball_centralities(
     )
     state.count()
 
-    tiny = n_nodes <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
-
     for t in range(1, max_t + 1):
         nbr = (
-            e.join(_hint(state.select(F.col("id").alias(DST), *masks)), DST)
+            e.join(join_side(state.select(F.col("id").alias(DST), *masks), n_nodes), DST)
             .groupBy(F.col(SRC).alias("id"))
             .agg(*[F.expr(f"bit_or({m})").alias(f"o{m}") for m in masks])
         )

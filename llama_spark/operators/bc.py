@@ -22,10 +22,10 @@ edge table per depth):
 
 Scale design (the three round-1 scale-killers, fixed):
 - **No unconditional broadcasts.** The frontier can reach K×V rows; every
-  frontier/level join follows the measured tiny-state policy
-  (pagerank.py:99-108): broadcast only while the state side is ≤100k rows,
-  else ``hint("shuffle_hash")`` so the cached, src-partitioned edge table
-  STREAMS and only the small state side shuffles.
+  frontier/level join goes through ``graph.join_side``: broadcast only
+  while the state side is small (``graph.BROADCAST_MAX_ROWS``), else a
+  shuffle-hash hint so the cached, src-partitioned edge table STREAMS and
+  only the small state side shuffles.
 - **Forward levels accumulate in a Python list** of checkpointed per-level
   DataFrames; ``visited`` is a lazy union over them (each piece already
   materialized), so nothing is rewritten per depth — O(K·V) total writes,
@@ -41,15 +41,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, nodes_of
-
-# Broadcasting iteration state is driver-serial poison past ~100k rows
-# (measured: 550k-row broadcast 25.8s vs 11.9s shuffle-hash for 3 iters).
-_BROADCAST_MAX_ROWS = 100_000
-
-
-def _hint(df: DataFrame, rows: int) -> DataFrame:
-    return F.broadcast(df) if rows <= _BROADCAST_MAX_ROWS else df.hint("shuffle_hash")
+from ..graph import DST, SRC, join_side, nodes_of
 
 
 def pick_roots(edges: DataFrame, k: int, seed: int = 42) -> list[int]:
@@ -123,12 +115,12 @@ def betweenness_centrality(
             visited = visited.unionByName(lv)
         fr = frontier.select("root", F.col("id").alias("vid"), "sigma")
         cand = (
-            _hint(fr, counts[-1])
+            join_side(fr, counts[-1])
             .join(e, fr["vid"] == e[SRC])
             .select("root", "vid", F.col(DST).alias("id"), "sigma")
         )
         stepped = cand.join(
-            _hint(visited.select("root", "id"), sum(counts)),
+            join_side(visited.select("root", "id"), sum(counts)),
             ["root", "id"],
             "left_anti",
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -183,7 +175,7 @@ def betweenness_centrality(
             downs[d + 1]
             .select("root", "vid", F.col("id").alias("wid"))
             .withColumnRenamed("vid", "id")
-            .join(_hint(w, counts[d + 1]), ["root", "wid"])
+            .join(join_side(w, counts[d + 1]), ["root", "wid"])
             .groupBy("root", "id")
             .agg(F.sum((F.lit(1.0) + F.col("wdelta")) / F.col("wsigma")).alias("acc"))
         )
@@ -281,12 +273,12 @@ def edge_betweenness(
             visited = visited.unionByName(lv)
         fr = frontier.select("root", F.col("id").alias("vid"), "sigma")
         cand = (
-            _hint(fr, counts[-1])
+            join_side(fr, counts[-1])
             .join(e, fr["vid"] == e[SRC])
             .select("root", "vid", F.col(DST).alias("id"), "sigma")
         )
         stepped = cand.join(
-            _hint(visited.select("root", "id"), sum(counts)),
+            join_side(visited.select("root", "id"), sum(counts)),
             ["root", "id"],
             "left_anti",
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -336,8 +328,8 @@ def edge_betweenness(
         joined = (
             downs[d + 1]
             .select("root", "vid", F.col("id").alias("wid"))
-            .join(_hint(w, counts[d + 1]), ["root", "wid"])
-            .join(_hint(vsig, counts[d]), ["root", "vid"])
+            .join(join_side(w, counts[d + 1]), ["root", "wid"])
+            .join(join_side(vsig, counts[d]), ["root", "vid"])
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         # node δ recursion keeps the node kernel's exact expression shape

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, nodes_of, symmetrize
+from ..graph import DST, SRC, join_side, nodes_of, symmetrize
 from .components import connected_components
 
 
@@ -66,13 +66,6 @@ def bfs_forest(edges: DataFrame, max_iter: int = 100) -> DataFrame:
 
     nodes = nodes_of(edges)
     n = nodes.count()
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row frontier/candidate side while tiny so the
-        # cached symmetrized edge table streams with no exchange (the
-        # pagerank/cc join-side policy); shuffled-hash past the threshold
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     init = nodes.select(
         "id",
@@ -84,7 +77,7 @@ def bfs_forest(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     def step(state: DataFrame, _i: int) -> DataFrame:
         frontier = state.filter(F.col("changed")).select("id", "comp", "depth")
         cand = (
-            _hint(frontier).join(und, frontier["id"] == und[SRC])
+            join_side(frontier, n).join(und, frontier["id"] == und[SRC])
             .groupBy(F.col(DST).alias("id"))
             .agg(
                 F.min(F.struct(F.col("comp"), (F.col("depth") + 1).alias("depth"))).alias(
@@ -96,7 +89,7 @@ def bfs_forest(edges: DataFrame, max_iter: int = 100) -> DataFrame:
             (F.col("c.comp") < F.col("comp"))
             | ((F.col("c.comp") == F.col("comp")) & (F.col("c.depth") < F.col("depth")))
         )
-        return state.join(_hint(cand), "id", "left").select(
+        return state.join(join_side(cand, n), "id", "left").select(
             "id",
             F.when(improved, F.col("c.comp")).otherwise(F.col("comp")).alias("comp"),
             F.when(improved, F.col("c.depth")).otherwise(F.col("depth")).alias("depth"),

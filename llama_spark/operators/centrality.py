@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, materialize, nodes_of
+from ..graph import DST, SRC, join_side, materialize, nodes_of
 from ..plans.fixpoint import FixpointResult, IterationMetrics, iterate
 
 
@@ -59,16 +59,12 @@ def katz_centrality(
     if n == 0:
         return nodes.select("id", F.lit(0.0).alias("katz"))
     e = _cached_edges(edges, p)
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     init = nodes.select("id", F.lit(beta).alias("x"))
 
     def step(state: DataFrame, i: int) -> DataFrame:
         contrib = (
-            e.join(_hint(state.select(F.col("id").alias(SRC), "x")), SRC)
+            e.join(join_side(state.select(F.col("id").alias(SRC), "x"), n), SRC)
             .groupBy(F.col(DST).alias("id"))
             .agg(F.sum("x").alias("s"))
         )
@@ -104,10 +100,6 @@ def eigenvector_centrality(
             state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
         )
     e = _cached_edges(edges, p)
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     state = materialize(nodes.select("id", F.lit(1.0 / n).alias("score")))
     metrics: list[IterationMetrics] = []
@@ -115,7 +107,7 @@ def eigenvector_centrality(
     for i in range(max_iter):
         t0 = time.time()
         raw = (
-            e.join(_hint(state.select(F.col("id").alias(SRC), "score")), SRC)
+            e.join(join_side(state.select(F.col("id").alias(SRC), "score"), n), SRC)
             .groupBy(F.col(DST).alias("id"))
             .agg(F.sum("score").alias("s"))
             .persist(StorageLevel.MEMORY_AND_DISK)

@@ -29,7 +29,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, drop_self_loops, materialize, nodes_of, symmetrize
+from ..graph import (
+    DST,
+    SRC,
+    drop_self_loops,
+    is_small,
+    join_side,
+    materialize,
+    nodes_of,
+    symmetrize,
+)
 from ..plans.fixpoint import FixpointResult, iterate
 
 
@@ -53,7 +62,6 @@ def connected_components_result(
     und.count()
     nodes = nodes_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = nodes.count()
-    tiny_state = n <= 100_000
     if initial_components is not None:
         # warm start (incremental recompute): hash-min is monotone, so any
         # init with component(v) ≥ fixpoint(v) — e.g. the previous
@@ -72,19 +80,14 @@ def connected_components_result(
             "id", F.col("id").alias("component"), F.lit(True).alias("changed")
         )
 
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast only tiny state; else shuffled-hash join so the cached
-        # symmetrized edge table streams unsorted (see pagerank.py)
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
     def step(labels: DataFrame, _i: int) -> DataFrame:
         frontier = labels.filter(F.col("changed")).select("id", "component")
         neighbor_min = (
-            _hint(frontier).join(und, frontier["id"] == und[SRC])
+            join_side(frontier, n).join(und, frontier["id"] == und[SRC])
             .groupBy(F.col(DST).alias("id"))
             .agg(F.min("component").alias("nmin"))
         )
-        return labels.join(_hint(neighbor_min), "id", "left").select(
+        return labels.join(join_side(neighbor_min, n), "id", "left").select(
             "id",
             F.least("component", F.coalesce("nmin", "component")).alias("component"),
             (F.col("nmin").isNotNull() & (F.col("nmin") < F.col("component"))).alias(
@@ -98,7 +101,7 @@ def connected_components_result(
         max_iter=max_iter,
         updated_metric=F.sum(F.col("changed").cast("long")),
         checkpoint_dir=checkpoint_dir,
-        truncate_every=1 if tiny_state else 4,
+        truncate_every=1 if is_small(n) else 4,
         resume=resume,
         name="connected_components",
     )
@@ -242,28 +245,25 @@ def label_propagation(
     und = symmetrize(edges).repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
     und.count()
     nodes = nodes_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    tiny_state = nodes.count() <= 100_000
+    n = nodes.count()
     init = (
         initial_labels
         if initial_labels is not None
         else nodes.select("id", F.col("id").alias("label"))
     )
 
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
     def step(labels: DataFrame, _i: int) -> DataFrame:
         # mode() with smallest-label tie-break, one shuffle:
         # max over struct(cnt, -label) picks highest count then lowest label.
         votes = (
-            _hint(labels).join(und, labels["id"] == und[SRC])
+            join_side(labels, n).join(und, labels["id"] == und[SRC])
             .groupBy(F.col(DST).alias("id"), "label")
             .agg(F.count("*").alias("cnt"))
             .groupBy("id")
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("best"))
             .select("id", (-F.col("best.neg")).alias("new_label"))
         )
-        return labels.join(_hint(votes), "id", "left").select(
+        return labels.join(join_side(votes, n), "id", "left").select(
             "id", F.coalesce("new_label", "label").alias("label")
         )
 
@@ -274,7 +274,7 @@ def label_propagation(
         updated_count=None,  # fixed rounds for cross-engine determinism
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
-        truncate_every=1 if tiny_state else 4,
+        truncate_every=1 if is_small(n) else 4,
         resume=resume,
         name="label_propagation",
     )
@@ -343,7 +343,7 @@ def _louvain_rounds(
     deg: DataFrame,
     m2: int,
     rounds: int,
-    tiny_state: bool,
+    n_nodes: int,
     name: str = "louvain",
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
@@ -357,16 +357,15 @@ def _louvain_rounds(
     level 2+ passes the contracted multigraph, where the SAME integer gain
     score(c) = m2·e_{v,c} − k_v·Σ'_c stays exact because contracted
     weights are edge counts. Returns [id, comm] after exactly ``rounds``
-    staged rounds (movers: (id + r) % 2 == 0; see louvain_communities)."""
+    staged rounds (movers: (id + r) % 2 == 0; see louvain_communities).
+    ``n_nodes`` (the level-1 node count) sizes every state join through
+    ``graph.join_side`` and picks the truncation cadence."""
     # node mass k is a per-node CONSTANT — carried in the round state
     # (the pagerank/trophic convention) so Σ'_c is a plain aggregate over
     # the state instead of a state⨝deg broadcast join, and the gain join
     # drops its deg side: two fewer broadcast builds and one fewer join
     # per round, bit-identical integer scores.
     init = deg.select("id", F.col("id").alias("comm"), "k")
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     def step(state: DataFrame, it: int) -> DataFrame:
         movers = F.pmod(F.col("id") + F.lit(it), F.lit(2)) == 0
@@ -375,7 +374,7 @@ def _louvain_rounds(
         # only this round's movers need candidates, so the edge stream is
         # pre-filtered on the gathering endpoint's parity (halves the join)
         evc = (
-            _hint(state.select("id", "comm")).join(
+            join_side(state.select("id", "comm"), n_nodes).join(
                 und_w.filter(F.pmod(F.col(DST) + F.lit(it), F.lit(2)) == 0),
                 state["id"] == und_w[SRC],
             )
@@ -398,8 +397,8 @@ def _louvain_rounds(
             .agg(F.sum("k").alias("tot"))
         )
         scored = (
-            cand.join(_hint(state), "id")
-            .join(_hint(tot), "c")
+            cand.join(join_side(state, n_nodes), "id")
+            .join(join_side(tot, n_nodes), "c")
             .select(
                 "id",
                 "c",
@@ -422,7 +421,7 @@ def _louvain_rounds(
             )
             .select("id", (-F.col("b.negc")).alias("new_comm"))
         )
-        return state.join(_hint(picks), "id", "left").select(
+        return state.join(join_side(picks, n_nodes), "id", "left").select(
             "id", F.coalesce("new_comm", "comm").alias("comm"), "k"
         )
 
@@ -433,7 +432,7 @@ def _louvain_rounds(
         updated_count=None,  # fixed rounds for cross-engine determinism
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
-        truncate_every=1 if tiny_state else 4,
+        truncate_every=1 if is_small(n_nodes) else 4,
         resume=resume,
         name=name,
     )
@@ -484,7 +483,7 @@ def louvain_communities(
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     nodes = nodes_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    tiny_state = nodes.count() <= 100_000
+    n = nodes.count()
     if weight_col is not None:
         # weighted gain with exact integers: quantize ŵ = floor(w·res)+1
         # per canonical pair (max over directions), emit both directions —
@@ -538,7 +537,7 @@ def louvain_communities(
         )
         und_w = und.withColumn("w", F.lit(1).cast("long"))
     out = _louvain_rounds(
-        und_w, deg, m2, max_iter, tiny_state,
+        und_w, deg, m2, max_iter, n,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         resume=resume,
     )
@@ -575,7 +574,7 @@ def louvain_multilevel(
     und = symmetrize(edges).repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
     m2 = und.count()
     nodes = nodes_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    tiny_state = nodes.count() <= 100_000
+    n = nodes.count()
     deg = (
         und.groupBy(F.col(SRC).alias("id"))
         .agg(F.count("*").alias("k"))
@@ -585,7 +584,7 @@ def louvain_multilevel(
     assign = materialize(
         _louvain_rounds(
             und.withColumn("w", F.lit(1).cast("long")), deg, m2,
-            rounds_per_level, tiny_state, name="louvain_l1",
+            rounds_per_level, n, name="louvain_l1",
         )
     )
     for lvl in range(2, levels + 1):
@@ -612,7 +611,7 @@ def louvain_multilevel(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         sup = _louvain_rounds(
-            und2, deg2, m2, rounds_per_level, tiny_state,
+            und2, deg2, m2, rounds_per_level, n,
             name=f"louvain_l{lvl}",
         )
         prev = assign
@@ -788,7 +787,7 @@ def label_spreading(
     und = symmetrize(edges).repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
     und.count()
     nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    tiny_state = nodes.count() <= 100_000
+    n = nodes.count()
     sd = seeds.select("id", F.col("label").cast("long").alias("_seed"))
     init = nodes.join(sd, "id", "left").select(
         "id",
@@ -797,12 +796,11 @@ def label_spreading(
         F.col("_seed"),
     )
 
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
     def step(state: DataFrame, _i: int) -> DataFrame:
         votes = (
-            _hint(state.filter(F.col("label").isNotNull()).select("id", "label"))
+            join_side(
+                state.filter(F.col("label").isNotNull()).select("id", "label"), n
+            )
             .join(und, F.col("id") == und[SRC])
             .groupBy(F.col(DST).alias("id"), "label")
             .agg(F.count("*").alias("cnt"))
@@ -814,7 +812,7 @@ def label_spreading(
             )
             .select("id", (-F.col("best.neg")).alias("new_label"))
         )
-        return state.join(_hint(votes), "id", "left").select(
+        return state.join(join_side(votes, n), "id", "left").select(
             "id",
             F.when(F.col("seeded"), F.col("_seed"))
             .otherwise(F.coalesce("new_label", "label"))
@@ -828,7 +826,7 @@ def label_spreading(
         step,
         max_iter=max_iter,
         updated_count=None,  # fixed rounds for cross-engine determinism
-        truncate_every=1 if tiny_state else 4,
+        truncate_every=1 if is_small(n) else 4,
         name="label_spreading",
     )
     und.unpersist()
@@ -871,19 +869,16 @@ def label_propagation_weighted(
     )
     und.count()
     nodes = nodes_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    tiny_state = nodes.count() <= 100_000
+    n = nodes.count()
     init = (
         initial_labels
         if initial_labels is not None
         else nodes.select("id", F.col("id").alias("label"))
     )
 
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
     def step(labels: DataFrame, _i: int) -> DataFrame:
         votes = (
-            _hint(labels).join(und, labels["id"] == und[SRC])
+            join_side(labels, n).join(und, labels["id"] == und[SRC])
             .groupBy(F.col(DST).alias("id"), "label")
             .agg(F.sum("_w").alias("wcnt"))
             .groupBy("id")
@@ -894,7 +889,7 @@ def label_propagation_weighted(
             )
             .select("id", (-F.col("best.neg")).alias("new_label"))
         )
-        return labels.join(_hint(votes), "id", "left").select(
+        return labels.join(join_side(votes, n), "id", "left").select(
             "id", F.coalesce("new_label", "label").alias("label")
         )
 
@@ -903,7 +898,7 @@ def label_propagation_weighted(
         step,
         max_iter=max_iter,
         updated_count=None,  # fixed rounds for cross-engine determinism
-        truncate_every=1 if tiny_state else 4,
+        truncate_every=1 if is_small(n) else 4,
         name="label_propagation_weighted",
     )
     und.unpersist()

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, symmetrize
+from ..graph import DST, SRC, join_side, symmetrize
 
 _DEC = "decimal(38,0)"
 
@@ -96,13 +96,8 @@ def densest_subgraph_trace(
             F.lit(den * s).cast(_DEC) * F.col("d").cast(_DEC)
             > F.lit(num).cast(_DEC) * F.lit(e).cast(_DEC)
         ).select(SRC)
-        keep_h = F.broadcast(keep) if und_rows <= 100_000 else keep.hint("shuffle_hash")
-        pruned = und.join(keep_h, SRC, "left_semi").join(
-            F.broadcast(keep.withColumnRenamed(SRC, DST))
-            if und_rows <= 100_000
-            else keep.withColumnRenamed(SRC, DST).hint("shuffle_hash"),
-            DST,
-            "left_semi",
+        pruned = und.join(join_side(keep, und_rows), SRC, "left_semi").join(
+            join_side(keep.withColumnRenamed(SRC, DST), und_rows), DST, "left_semi"
         )
         if r % 4 == 3:
             pruned = pruned.localCheckpoint(eager=True)

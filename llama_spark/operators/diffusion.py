@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, materialize, nodes_of
+from ..graph import DST, SRC, join_side, materialize, nodes_of
 
 
 def heat_coefficients(t: float, taylor_k: int) -> list[float]:
@@ -151,21 +151,17 @@ def truncated_hitting_time(
     ew.count()
 
     is_seed = F.col("id").isin(seeds)
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     def step(h: DataFrame, _i: int) -> DataFrame:
         gathered = (
-            _hint(h).join(ew, h["id"] == ew[DST])
+            join_side(h, n).join(ew, h["id"] == ew[DST])
             .select(F.col(SRC).alias("id"), (F.col("inv") * F.col("h")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
         return (
             h.select("id", F.col("h").alias("_hp"))
-            .join(_hint(gathered), "id", "left")
+            .join(join_side(gathered, n), "id", "left")
             .select(
                 "id",
                 F.when(is_seed, F.lit(0.0))
@@ -250,10 +246,6 @@ def trophic_levels(
     )
     gather.count()
     n = base.count()
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     # d and v are per-node CONSTANTS — carry them in the iterate state
     # (the pagerank/fiedler convention) so each sweep joins only the
@@ -261,12 +253,12 @@ def trophic_levels(
     # build of h per sweep (same arithmetic, same operand order).
     def step(h: DataFrame, _i: int) -> DataFrame:
         s = (
-            _hint(h.select("id", "h")).join(gather, h["id"] == gather[SRC])
+            join_side(h.select("id", "h"), n).join(gather, h["id"] == gather[SRC])
             .select(F.col(DST).alias("id"), (F.col("_w") * F.col("h")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        return h.join(_hint(s), "id", "left").select(
+        return h.join(join_side(s, n), "id", "left").select(
             "id",
             "d",
             "v",

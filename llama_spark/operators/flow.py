@@ -36,10 +36,9 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, drop_self_loops, materialize
+from ..graph import DST, SRC, drop_self_loops, join_side, materialize
 
 _obs_seq = 0
-_BROADCAST_NODE_BOUND = 100_000  # repo-wide small-frontier policy
 
 
 def _next_obs() -> Observation:
@@ -65,7 +64,7 @@ def _residual_bfs(
     root: DataFrame,
     sink: int,
     max_depth: int,
-    hint,
+    n_nodes: int,
     block: int = 2,
 ) -> tuple[DataFrame, int | None]:
     """(parent map [id,parent,depth], walk_bound|None) — min-parent BFS
@@ -89,11 +88,11 @@ def _residual_bfs(
         for j in range(1, width + 1):
             cand = (
                 resid.filter(F.col("cap") > 0)
-                .join(hint(front_cur.withColumnRenamed("id", "a")), "a")
+                .join(join_side(front_cur.withColumnRenamed("id", "a"), n_nodes), "a")
                 .select(F.col("b").alias("id"), F.col("a").alias("parent"))
             )
             nxt = (
-                cand.join(hint(reach_cur), "id", "left_anti")
+                cand.join(join_side(reach_cur, n_nodes), "id", "left_anti")
                 .groupBy("id")
                 .agg(F.min("parent").alias("parent"))
                 .withColumn("depth", F.lit(d + j))
@@ -160,11 +159,6 @@ def max_flow_unit(
         .distinct()
         .count()
     )
-    tiny = n_nodes <= _BROADCAST_NODE_BOUND
-
-    def hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
-
     resid = materialize(
         orig.select(
             F.col(SRC).alias("a"), F.col(DST).alias("b"), F.col("cap")
@@ -177,7 +171,7 @@ def max_flow_unit(
     flow = 0
     converged = False
     while True:
-        pm, walk_bound = _residual_bfs(resid, root, sink, max_depth, hint)
+        pm, walk_bound = _residual_bfs(resid, root, sink, max_depth, n_nodes)
         if walk_bound is None:
             converged = True
             s_side = materialize(pm.select("id"))

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, nodes_of
+from ..graph import DST, SRC, join_side, nodes_of
 from ..plans.fixpoint import FixpointResult
 
 
@@ -65,11 +65,6 @@ def hits_result(
     e_src.count()
     e_dst.count()
 
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
     import time
 
     from ..graph import materialize
@@ -93,7 +88,7 @@ def hits_result(
         # iterations at sf0.01 vs ~20s with the caches).
         a_raw = (
             e_src.join(
-                _hint(state.select(F.col("id").alias(SRC), "hub")), SRC
+                join_side(state.select(F.col("id").alias(SRC), "hub"), n), SRC
             )
             .groupBy(F.col(DST).alias("id"))
             .agg(F.sum("hub").alias("ar"))
@@ -117,7 +112,7 @@ def hits_result(
         # hub half-step: pull the NEW auth mass over out-edges
         h_raw = (
             e_dst.join(
-                _hint(auth.select(F.col("id").alias(DST), "auth")), DST
+                join_side(auth.select(F.col("id").alias(DST), "auth"), n), DST
             )
             .groupBy(F.col(SRC).alias("id"))
             .agg(F.sum("auth").alias("hr"))
@@ -212,11 +207,6 @@ def salsa_result(
     e_dst.count()
     n_src = od.count()
 
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
     from ..graph import materialize
 
     state = materialize(
@@ -229,14 +219,14 @@ def salsa_result(
     for i in range(max_iter):
         t0 = time.time()
         a_raw = (
-            e_src.join(_hint(state.select(F.col("id").alias(SRC), "hub")), SRC)
+            e_src.join(join_side(state.select(F.col("id").alias(SRC), "hub"), n), SRC)
             .groupBy(F.col(DST).alias("id"))
             .agg(F.sum(F.col("hub") / F.col("od")).alias("ar"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         h_raw = (
             e_dst.join(
-                _hint(a_raw.select(F.col("id").alias(DST), "ar")), DST
+                join_side(a_raw.select(F.col("id").alias(DST), "ar"), n), DST
             )
             .groupBy(F.col(SRC).alias("id"))
             .agg(F.sum(F.col("ar") / F.col("idg")).alias("hr"))

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import DST, SRC, symmetrize
+from ..graph import DST, SRC, is_small, join_side, symmetrize
 
 
 def k_core(
@@ -72,22 +72,19 @@ def k_core(
     n_edges = und.count()
     und_is_persisted = True
 
-    def _keep_hint(df: DataFrame) -> DataFrame:
-        # node-keyed keep list: ≤ V ≤ current edge count rows. The bound is
-        # re-read from the CURRENT round's n_edges (not frozen at entry) so
-        # a graph whose core collapses flips from shuffled-hash joins to
-        # broadcast once the surviving edge set is small enough.
-        return F.broadcast(df) if n_edges <= 100_000 else df.hint("shuffle_hash")
-
     limit = rounds if rounds is not None else max_iter
     for _i in range(limit):
         if n_edges == 0:
             break
         deg = und.groupBy(SRC).agg(deg_agg.alias(out_col))
         keep = deg.filter(F.col(out_col) >= k).select(SRC)
+        # node-keyed keep list: ≤ V ≤ current edge count rows. The side is
+        # chosen from the CURRENT round's n_edges (not frozen at entry) so
+        # a graph whose core collapses flips from shuffled-hash joins to
+        # broadcast once the surviving edge set is small enough.
         pruned = (
-            und.join(_keep_hint(keep), SRC, "left_semi")
-            .join(_keep_hint(keep.withColumnRenamed(SRC, DST)), DST, "left_semi")
+            und.join(join_side(keep, n_edges), SRC, "left_semi")
+            .join(join_side(keep.withColumnRenamed(SRC, DST), n_edges), DST, "left_semi")
         )
         if _i % 4 == 3:
             pruned = pruned.localCheckpoint(eager=True)
@@ -192,18 +189,12 @@ def coreness(
     _row = c.agg(F.count(F.lit(1)).alias("n"), F.max("c").alias("m")).head()
     n = int(_row[0])
     max_deg = int(_row[1] or 0)
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row value vector while tiny so the edge table's
-        # join needs no exchange at all; else shuffled-hash (edges stream)
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     w = Window.partitionBy("id").orderBy(F.desc("value"))
     limit = rounds if rounds is not None else max_iter
     changed_ids = None  # None → full-recompute round (round 0 / big frontier)
     for _ in range(limit):
-        joined = _hint(c).join(und, c["id"] == und[SRC])
+        joined = join_side(c, n).join(und, c["id"] == und[SRC])
         if changed_ids is not None:
             aff = (
                 und.join(
@@ -215,7 +206,7 @@ def coreness(
                 .distinct()
             )
             joined = joined.join(F.broadcast(aff), DST, "left_semi")
-        if tiny_state:
+        if is_small(n):
             # single-shuffle h-index: fold the per-node sorted neighbor
             # value list in one expression — one exchange per round
             # instead of the histogram+window pair (the trussness round
@@ -274,7 +265,8 @@ def coreness(
         changed_ids = (
             new_c.filter(F.col("changed")).select("id")
             if m_edges >= 5_000_000
-            and 0 < changed <= min(100_000, max(1, n // 4))
+            and 0 < changed <= max(1, n // 4)
+            and is_small(changed)
             and changed * max(1, max_deg) <= 4_000_000
             else None
         )

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, materialize, materialize_counted
+from ..graph import DST, SRC, is_small, materialize, materialize_counted
 
 
 def _canonical_und(edges: DataFrame, weight_col: str) -> DataFrame:
@@ -130,7 +130,7 @@ def minimum_spanning_forest(
         # already cached, so the k+1 lazy references stay cheap). Past
         # the bound every step materializes on its own — a V-row
         # first-round table must not be re-referenced k+1 times lazily.
-        block = 4 if n_chosen <= 100_000 else 1
+        block = 4 if is_small(n_chosen) else 1
         pp = None
         while True:
             obs2 = Observation()

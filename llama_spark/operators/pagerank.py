@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, materialize, nodes_of
+from ..graph import DST, SRC, is_small, join_side, materialize, nodes_of
 from ..plans.fixpoint import FixpointResult, iterate
 
 
@@ -145,17 +145,6 @@ def pagerank_result(
     else:
         init = nodes.select("id", F.lit(1.0 / n).alias("rank"))
 
-    # LLAMA's adaptive frontier (ll_bfs_template.h:170-292) maps to join-side
-    # selection: broadcast the rank vector only while it's genuinely tiny
-    # (driver-serial broadcast build dominates past ~100k rows — measured);
-    # otherwise force a shuffled-hash join so the cached edge table is
-    # STREAMED, never sorted (sort-merge would re-sort all edges every
-    # iteration) and only the small rank side shuffles.
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
     if dangling not in ("lost", "redistribute"):
         raise ValueError(f"dangling must be 'lost' or 'redistribute', got {dangling!r}")
     dangling_ids = None
@@ -166,15 +155,19 @@ def pagerank_result(
         )
         dangling_ids.count()
 
+    # join sides follow graph.join_side: the rank vector broadcasts while
+    # small; past that the cached edge table is STREAMED through a
+    # shuffled-hash join, never sorted (sort-merge would re-sort all edges
+    # every iteration) and only the small rank side shuffles.
     def step(ranks: DataFrame, _i: int) -> DataFrame:
         contribs = (
-            _hint(ranks).join(edges_inv, ranks["id"] == edges_inv[SRC])
+            join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
             .select(F.col(DST).alias("id"), (F.col("rank") * F.col("inv_deg")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("contrib"))
         )
         new_rank = F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-        out = nodes.join(_hint(contribs), "id", "left")
+        out = nodes.join(join_side(contribs, n), "id", "left")
         if dangling_ids is not None:
             dmass = (
                 ranks.join(dangling_ids, "id", "left_semi")
@@ -206,7 +199,7 @@ def pagerank_result(
         # (the state never shuffles) but pay per-iteration plan depth —
         # truncate every iteration; big states keep the exchange-free
         # persist window (measured: 9.9s vs 13.5s warm at sf0.1 tiny)
-        truncate_every=1 if tiny_state else 4,
+        truncate_every=1 if is_small(n) else 4,
         resume=resume,
         name="pagerank",
     )
@@ -286,19 +279,15 @@ def personalized_pagerank_result(
         F.lit(0.0)
     )
     init = nodes.select("id", e_v.alias("rank"))
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     def step(ranks: DataFrame, _i: int) -> DataFrame:
         contribs = (
-            _hint(ranks).join(edges_inv, ranks["id"] == edges_inv[SRC])
+            join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
             .select(F.col(DST).alias("id"), (F.col("rank") * F.col("inv_deg")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("contrib"))
         )
-        return nodes.join(_hint(contribs), "id", "left").select(
+        return nodes.join(join_side(contribs, n), "id", "left").select(
             "id",
             (
                 F.lit(1.0 - damping) * e_v
@@ -310,7 +299,7 @@ def personalized_pagerank_result(
         init,
         step,
         max_iter=max_iter,
-        truncate_every=1 if tiny_state else 4,
+        truncate_every=1 if is_small(n) else 4,
         name="personalized_pagerank",
     )
     nodes.unpersist()
@@ -367,10 +356,6 @@ def pagerank_trace(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     edges_inv.count()
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     def _scaled_micro(col):
         return F.round(F.round(col * F.lit(float(n)), 6) * F.lit(1e6)).cast("long")
@@ -382,7 +367,7 @@ def pagerank_trace(
     rows = []
     for i in range(1, iters + 1):
         contribs = (
-            _hint(ranks).join(edges_inv, ranks["id"] == edges_inv[SRC])
+            join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
             .select(
                 F.col(DST).alias("id"),
                 (F.col("rank") * F.col("inv_deg")).alias("c"),
@@ -489,23 +474,17 @@ def topic_sensitive_pagerank(
         )
     )
 
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row state while tiny (the pagerank/cc join-side
-        # policy) so the cached hash(src) edge table streams with no
-        # exchange and the partial-sum partitioning is unchanged; past the
-        # threshold the shuffled-hash path engages
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
+    # graph.join_side: while small the broadcast V-row state lets the
+    # cached hash(src) edge table stream with no exchange and leaves the
+    # partial-sum partitioning unchanged
     d = damping
     for _ in range(max_iter):
         contribs = (
             e_inv.join(
-                _hint(state.select(
+                join_side(state.select(
                     F.col("id").alias(SRC),
                     *[F.col(f"r{t}").alias(f"x{t}") for t in ks],
-                )),
+                ), n),
                 SRC,
             )
             .groupBy(F.col(DST).alias("id"))
@@ -518,7 +497,7 @@ def topic_sensitive_pagerank(
         )
         prev = state
         state = materialize(
-            state.join(_hint(contribs), "id", "left").select(
+            state.join(join_side(contribs, n), "id", "left").select(
                 "id",
                 *[F.col(f"e{t}") for t in ks],
                 *[
@@ -626,18 +605,11 @@ def truncated_pagerank(
     state0 = nodes.select(
         "id", (F.lit(1.0) / n).alias("x"), F.lit(0.0).alias("acc")
     )
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # the pagerank/cc join-side policy: broadcast the V-row state while
-        # tiny so the cached edge table streams; shuffled-hash past it
-        # (the old plan built the shuffled-hash table over the E-row side)
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     def step(state: DataFrame, i: int) -> DataFrame:
         t = i + 1
         contrib = (
-            _hint(state).join(ew, state["id"] == ew[SRC])
+            join_side(state, n).join(ew, state["id"] == ew[SRC])
             .groupBy(F.col(DST).alias("id"))
             .agg(F.sum(F.col("x") * F.col("w")).alias("nx"))
         )

@@ -47,7 +47,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, materialize, materialize_counted, symmetrize
+from ..graph import (
+    DST,
+    SRC,
+    join_side,
+    materialize,
+    materialize_counted,
+    symmetrize,
+)
 
 PARTITION_K = 8
 PARTITION_ROUNDS = 6
@@ -84,23 +91,15 @@ def spinner_partition(
         und.unpersist()
         return state
 
-    n_nodes_tiny = n_nodes <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row label vector while tiny (the pagerank/cc
-        # join-side policy; neighbor tallies are integer counts, so the
-        # partial-aggregation grouping is order-free); shuffled-hash past it
-        return F.broadcast(df) if n_nodes_tiny else df.hint("shuffle_hash")
-
     for _ in range(rounds):
         loads = state.groupBy(F.col("part").alias("lbl")).agg(
             F.sum("d").alias("load")
         )
         nbr = (
             und.join(
-                _hint(state.select(
+                join_side(state.select(
                     F.col("id").alias(SRC), F.col("part").alias("lbl")
-                )),
+                ), n_nodes),
                 SRC,
             )
             .groupBy(F.col(DST).alias("id"), "lbl")

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, drop_self_loops, nodes_of
+from ..graph import DST, SRC, drop_self_loops, join_side, nodes_of
 
 
 def strongly_connected_components(
@@ -104,15 +104,14 @@ def strongly_connected_components(
             assigned_parts.append(trivial)
             _stats["trim_rounds"] += 1
             _stats["trimmed"] += n_trivial
-            tiny = n_keep <= 100_000
-
-            def _keep_hint(df: DataFrame) -> DataFrame:
-                return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
             active_nodes = keep
             active_edges = _swap_edges(
-                active_edges.join(_keep_hint(keep.withColumnRenamed("id", SRC)), SRC, "left_semi")
-                .join(_keep_hint(keep.withColumnRenamed("id", DST)), DST, "left_semi"),
+                active_edges.join(
+                    join_side(keep.withColumnRenamed("id", SRC), n_keep), SRC, "left_semi"
+                ).join(
+                    join_side(keep.withColumnRenamed("id", DST), n_keep), DST, "left_semi"
+                ),
                 active_edges,
             )
             remaining = n_keep
@@ -122,13 +121,6 @@ def strongly_connected_components(
         # 1. forward coloring to fixpoint (max-propagation along out-edges);
         # the changed-count rides the checkpoint job via observe — one job
         # per propagation iteration
-        tiny_state = remaining <= 100_000
-
-        def _state_hint(df: DataFrame) -> DataFrame:
-            # broadcast the V-row state while tiny; else shuffled-hash so
-            # the persisted edge table STREAMS (pagerank.py policy)
-            return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
         colors = active_nodes.select("id", F.col("id").alias("color"))
         colors = colors.localCheckpoint(eager=True)
         colors_persisted = False
@@ -136,7 +128,8 @@ def strongly_connected_components(
         changed = 0
         for _pi in range(max_prop_iters):
             incoming = (
-                _state_hint(colors).join(active_edges, colors["id"] == active_edges[SRC])
+                join_side(colors, remaining)
+                .join(active_edges, colors["id"] == active_edges[SRC])
                 .groupBy(F.col(DST).alias("id"))
                 .agg(F.max("color").alias("cmax"))
             )

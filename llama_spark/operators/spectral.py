@@ -49,19 +49,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, materialize, symmetrize
+from ..graph import DST, SRC, join_side, materialize, symmetrize
 
 FIEDLER_ITERS = 16
 
 
 def _py_sqrt(v: float | None) -> float | None:
-    """sqrt with Spark SQL's NULL semantics: sqrt(NULL) = sqrt(<0) = NULL.
+    """sqrt with Spark SQL's NULL semantics: sqrt(NULL) = NULL, and a NaN
+    result (negative or NaN input) is NULL too.
 
     The iterate-normalization constants are computed driver-side from the
     collected 1-row statistics; this keeps the degenerate branches (empty
-    iterate, negative one-pass variance from float cancellation) returning
-    NULL columns exactly as the previous all-SQL expression did."""
-    if v is None or v < 0.0:
+    iterate, negative one-pass variance from float cancellation, NaN sums
+    from an overflow) returning NULL columns exactly as the previous
+    all-SQL expression did."""
+    if v is None or v < 0.0 or math.isnan(v):
         return None
     return math.sqrt(v)
 
@@ -94,13 +96,6 @@ def fiedler_vector(
         return deg.select("id", "d", F.lit(0.0).alias("fiedler"))
     c = 1.0 + deg.agg(F.max("d")).head()[0]
     n_d = float(n)
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row side while tiny (the pagerank/cc join-side
-        # policy): the cached edge table / big side then streams with no
-        # exchange; past the threshold the shuffled-hash path engages
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     # deterministic non-constant start vector, exact-integer both engines
     state = materialize(
@@ -118,10 +113,10 @@ def fiedler_vector(
     prev_mat = state
     for _ in range(max_iter):
         gather = und.join(
-            _hint(state.select(F.col("id").alias(SRC), F.col("x").alias("xs"))),
+            join_side(state.select(F.col("id").alias(SRC), F.col("x").alias("xs")), n),
             SRC,
         ).groupBy(F.col(DST).alias("id")).agg(F.sum("xs").alias("s"))
-        y = state.join(_hint(gather), "id", "left").select(
+        y = state.join(join_side(gather, n), "id", "left").select(
             "id",
             "d",
             (
@@ -371,14 +366,6 @@ def fiedler_vector_normalized(
         und.unpersist()
         return deg.select("id", "d", F.lit(0.0).alias("nfiedler"))
     s2 = float(deg.agg(F.sum("d")).head()[0])  # Σd = Σ(√d)², exact integer sum
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row side while tiny (the pagerank/cc join-side
-        # policy): the cached edge table / big side then streams with no
-        # exchange; past the threshold the shuffled-hash path engages
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
-
 
     state = materialize(
         deg.select(
@@ -397,15 +384,15 @@ def fiedler_vector_normalized(
     for _ in range(max_iter):
         gather = (
             und.join(
-                _hint(state.select(
+                join_side(state.select(
                     F.col("id").alias(SRC), (F.col("x") / F.col("sd")).alias("xs")
-                )),
+                ), n),
                 SRC,
             )
             .groupBy(F.col(DST).alias("id"))
             .agg(F.sum(F.col("w") * F.col("xs")).alias("g"))
         )
-        y = state.join(_hint(gather), "id", "left").select(
+        y = state.join(join_side(gather, n), "id", "left").select(
             "id",
             "d",
             "sd",

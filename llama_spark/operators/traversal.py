@@ -22,7 +22,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, drop_self_loops, nodes_of, symmetrize
+from ..graph import (
+    DST,
+    SRC,
+    drop_self_loops,
+    is_small,
+    join_side,
+    nodes_of,
+    symmetrize,
+)
 from ..plans.fixpoint import iterate
 
 
@@ -50,12 +58,6 @@ def sssp(
     m_edges = rel.count()
     nodes = nodes_of(edges)
     n = nodes.count()
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row frontier/candidate side while tiny so the
-        # cached edge table streams with no exchange (pagerank/cc policy)
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     init = nodes.select(
         "id",
@@ -71,11 +73,11 @@ def sssp(
     def step(dists: DataFrame, _i: int) -> DataFrame:
         frontier = dists.filter(F.col("changed")).select("id", "dist")
         cand = (
-            _hint(frontier).join(rel, frontier["id"] == rel[SRC])
+            join_side(frontier, n).join(rel, frontier["id"] == rel[SRC])
             .groupBy(F.col(DST).alias("id"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
         )
-        return dists.join(_hint(cand), "id", "left").select(
+        return dists.join(join_side(cand, n), "id", "left").select(
             "id",
             F.when(
                 F.col("cand").isNotNull()
@@ -98,7 +100,7 @@ def sssp(
         checkpoint_dir=checkpoint_dir,
         # edge count is already materialized; nodes ≤ 2m, so m bounds the
         # state size for the tiny/big truncation-cadence choice
-        truncate_every=1 if m_edges <= 100_000 else 4,
+        truncate_every=1 if is_small(m_edges) else 4,
         resume=resume,
         name="sssp",
     )
@@ -145,11 +147,6 @@ def multi_source_bfs_depths(
     )
     rel.count()
 
-    def _hint(df: DataFrame, rows: int) -> DataFrame:
-        # tiny frontier → broadcast; else shuffled-hash so the cached edge
-        # table streams (the bc.py forward-phase policy)
-        return F.broadcast(df) if rows <= 100_000 else df.hint("shuffle_hash")
-
     level0 = spark.createDataFrame(
         [(r, r, 0) for r in roots], "root long, id long, depth long"
     ).localCheckpoint(eager=True)
@@ -162,7 +159,7 @@ def multi_source_bfs_depths(
             visited = visited.unionByName(lv)
         fr = frontier.select("root", "id")
         cand = (
-            _hint(fr, counts[-1])
+            join_side(fr, counts[-1])
             .join(rel, fr["id"] == rel[SRC])
             .select("root", F.col(DST).alias("id"))
             .distinct()
@@ -176,7 +173,7 @@ def multi_source_bfs_depths(
         obs = Observation(f"msbfs_d{depth}_{next(_OBS_SEQ)}")
         nxt = (
             cand.join(
-                _hint(visited.select("root", "id"), sum(counts)),
+                join_side(visited.select("root", "id"), sum(counts)),
                 ["root", "id"],
                 "left_anti",
             )
@@ -439,12 +436,6 @@ def widest_paths(
     m_edges = rel.count()
     nodes = nodes_of(edges)
     n = nodes.count()
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row frontier/candidate side while tiny (the
-        # pagerank/cc join-side policy); shuffled-hash past the threshold
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     init = nodes.select(
         "id",
@@ -457,7 +448,7 @@ def widest_paths(
     def step(state: DataFrame, _i: int) -> DataFrame:
         frontier = state.filter(F.col("changed")).select("id", "width")
         cand = (
-            _hint(frontier).join(rel, frontier["id"] == rel[SRC])
+            join_side(frontier, n).join(rel, frontier["id"] == rel[SRC])
             .groupBy(F.col(DST).alias("id"))
             .agg(F.max(F.least(F.col("width"), F.col("w"))).alias("cand"))
         )
@@ -475,7 +466,7 @@ def widest_paths(
         step,
         max_iter=max_iter,
         updated_metric=F.sum(F.col("changed").cast("long")),
-        truncate_every=1 if m_edges <= 100_000 else 4,
+        truncate_every=1 if is_small(m_edges) else 4,
         name="widest_paths",
     )
     rel.unpersist()

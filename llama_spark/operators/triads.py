@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .. import graph
 from ..graph import DST, SRC, drop_self_loops, nodes_of
 
 TRIAD_TYPES = [
@@ -93,7 +94,7 @@ def triad_census(edges: DataFrame) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     m_dy = dy.count()
-    small_dy = m_dy <= 2_000_000
+    small_dy = m_dy <= graph.EDGE_BROADCAST_MAX_ROWS
 
     # ---- per-vertex arc-type counts → combinatorial path-class sums ----
     ends = dy.select(

@@ -66,7 +66,12 @@ def _tri_intersections(e_oriented: DataFrame) -> DataFrame:
     triangle_counting.h:531-567, as an array expression). Replaces the
     2-path self-join: no open-wedge rows ever materialize — the O(Σ d⁺²)
     intersection work runs inside codegen over E rows, and under degree
-    orientation each adjacency array is O(√E)-bounded."""
+    orientation each adjacency array is O(√E)-bounded.
+
+    That bound holds only for ``orient="degree"``. Under ``orient="id"`` a
+    hub's full out-adjacency array is copied onto every oriented edge
+    incident to it, so the two joins move O(d_hub²) bytes per hub, where
+    the old 2-path self-join streamed its wedges row by row."""
     adj = e_oriented.groupBy(F.col(SRC)).agg(F.collect_list(DST).alias("nb"))
     a1 = adj.select(F.col(SRC).alias("_u"), F.col("nb").alias("nu"))
     a2 = adj.select(F.col(SRC).alias("_v"), F.col("nb").alias("nv"))

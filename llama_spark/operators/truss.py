@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .. import graph
 from ..graph import DST, SRC
 
 
@@ -160,13 +161,13 @@ def trussness(
     m_edges = e.count()
     # Broadcast the E-row value vector into the three per-round side joins
     # while it is genuinely small (the same join-side policy as the node
-    # kernels' tiny_state, scaled for edge rows): the persisted T-row
+    # kernels' graph.join_side, scaled for edge rows): the persisted T-row
     # triangle table then streams through three broadcast hash joins with
     # ZERO exchanges — in shuffle mode each round paid three full
     # exchanges of the triangle table plus three of the value vector.
     # At web scale (E past the threshold) the shuffle path engages
     # unchanged.
-    small_t = m_edges <= 2_000_000
+    small_t = m_edges <= graph.EDGE_BROADCAST_MAX_ROWS
 
     def _side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_t else df

@@ -125,7 +125,7 @@ def sybilrank(
 
     from pyspark.storagelevel import StorageLevel
 
-    from ..graph import DST, SRC, materialize, nodes_of, symmetrize
+    from ..graph import DST, SRC, join_side, materialize, nodes_of, symmetrize
     from ..plans.fixpoint import iterate
 
     if not seeds:
@@ -150,10 +150,6 @@ def sybilrank(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ew.count()
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     init = nodes.select(
         "id",
@@ -164,12 +160,12 @@ def sybilrank(
 
     def step(t: DataFrame, _i: int) -> DataFrame:
         gathered = (
-            _hint(t).join(ew, t["id"] == ew[SRC])
+            join_side(t, n).join(ew, t["id"] == ew[SRC])
             .select(F.col(DST).alias("id"), (F.col("inv") * F.col("t")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        return nodes.join(_hint(gathered), "id", "left").select(
+        return nodes.join(join_side(gathered, n), "id", "left").select(
             "id", F.coalesce("s", F.lit(0.0)).alias("t")
         )
 

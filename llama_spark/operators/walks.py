@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import token_hash
-from ..graph import DST, SRC, nodes_of
+from ..graph import DST, SRC, join_side, nodes_of
 
 ADJ_SALTS = 64  # sub-lists per src in the two-phase rank (bounds task sorts)
 
@@ -207,11 +207,6 @@ def random_walks(
         )
         n_deg = deg.count()
 
-    def _hint(df: DataFrame) -> DataFrame:
-        # the walker state side: broadcast while tiny, else shuffled-hash
-        # so the persisted deg/adj tables stream (pagerank.py policy)
-        return F.broadcast(df) if n_deg <= 100_000 else df.hint("shuffle_hash")
-
     nodes = nodes_of(edges)
     if sources is not None:
         seeds = sorted(set(sources))
@@ -232,7 +227,7 @@ def random_walks(
         )
         if weighted:
             with_pick = (
-                _hint(frontier.select("walk_id", "node"))
+                join_side(frontier.select("walk_id", "node"), n_deg)
                 .join(deg, frontier["node"] == deg[SRC])
                 .select(
                     "walk_id",
@@ -243,7 +238,7 @@ def random_walks(
                 .withColumn("b", F.floor(F.col("u") / F.col("step_w")).cast("long"))
             )
             nxt = (
-                _hint(with_pick)
+                join_side(with_pick, n_deg)
                 .join(
                     adj,
                     (with_pick["node"] == adj[SRC])
@@ -259,7 +254,7 @@ def random_walks(
             )
         else:
             with_pick = (
-                _hint(frontier.select("walk_id", "node"))
+                join_side(frontier.select("walk_id", "node"), n_deg)
                 .join(deg, frontier["node"] == deg[SRC])
                 .select(
                     "walk_id",
@@ -268,7 +263,7 @@ def random_walks(
                 )
             )
             nxt = (
-                _hint(with_pick)
+                join_side(with_pick, n_deg)
                 .join(
                     adj,
                     (with_pick["node"] == adj[SRC])
@@ -360,9 +355,6 @@ def node2vec_walks(
     )
     e_probe.count()
 
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if n_deg <= 100_000 else df.hint("shuffle_hash")
-
     nodes = nodes_of(edges)
     if sources is not None:
         seeds = sorted(set(sources))
@@ -395,7 +387,7 @@ def node2vec_walks(
         )
         n_r = 1 if t == 0 else retries
         cands = (
-            _hint(frontier)
+            join_side(frontier, n_deg)
             .join(deg, frontier["node"] == deg[SRC])
             .select(
                 "walk_id",
@@ -407,7 +399,7 @@ def node2vec_walks(
             .withColumn("pick", F.pmod(pick_h, F.col("od")) + 1)
         )
         cands = (
-            _hint(cands)
+            join_side(cands, n_deg)
             .join(
                 adj,
                 (cands["node"] == adj[SRC]) & (cands["pick"] == adj["idx"]),
@@ -590,9 +582,6 @@ def fanout_sample(
     )
     n_src = e.select(SRC).distinct().count()
 
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if n_src <= 100_000 else df.hint("shuffle_hash")
-
     root_rows = sorted(set(int(r) for r in roots))
     frontier = spark.createDataFrame(
         [(r, r) for r in root_rows], "root long, node long"
@@ -600,7 +589,7 @@ def fanout_sample(
     parts: list[DataFrame] = []
     for hop, f in enumerate(fanouts, start=1):
         cand = (
-            _hint(frontier)
+            join_side(frontier, n_src)
             .join(e, frontier["node"] == e[SRC])
             .select("root", SRC, DST)
             .withColumn(

@@ -36,6 +36,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import join_side
+
 MANIFEST = "graph_manifest.json"
 
 
@@ -335,10 +337,7 @@ class VersionedEdgeStore:
                 dels = dels.unionByName(p)
             dels = dels.distinct()
             # manifest row counts are free — broadcast only small delete sets
-            if sum(e["rows"] for e in deletes) > 100_000:
-                dels = dels.hint("shuffle_hash")
-            else:
-                dels = F.broadcast(dels)
+            dels = join_side(dels, sum(e["rows"] for e in deletes))
             df = df.alias("a").join(
                 dels.alias("d"),
                 (F.col("a.src") == F.col("d.src"))
@@ -360,10 +359,7 @@ class VersionedEdgeStore:
             for p in nparts[1:]:
                 ndels = ndels.unionByName(p)
             ndels = ndels.distinct()
-            if sum(e["rows"] for e in node_deletes) <= 100_000:
-                ndels = F.broadcast(ndels)
-            else:
-                ndels = ndels.hint("shuffle_hash")
+            ndels = join_side(ndels, sum(e["rows"] for e in node_deletes))
             for endpoint in ("src", "dst"):
                 df = df.alias("a").join(
                     ndels.alias("n"),

@@ -28,7 +28,7 @@ _spec.loader.exec_module(_eb)
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
     from llama_spark.entry_queries import load_edges
     from llama_spark.session import get_spark

@@ -61,6 +61,17 @@ def test_fiedler_path_monotone(spark):
     assert all(d > 0 for d in diffs) or all(d < 0 for d in diffs)
 
 
+def test_py_sqrt_matches_spark_null_semantics():
+    from llama_spark.operators.spectral import _py_sqrt
+
+    # Spark's sqrt turns NULL input and any NaN result into NULL
+    assert _py_sqrt(None) is None
+    assert _py_sqrt(-1.0) is None
+    assert _py_sqrt(float("nan")) is None
+    assert _py_sqrt(4.0) == 2.0
+    assert _py_sqrt(2.0) == math.sqrt(2.0)
+
+
 # ---- DSIR importance weights ----
 
 
