@@ -21,25 +21,16 @@ same CASE guards the SQL oracle, keeping NaN out of both engines.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..graph import DST, SRC, join_side, materialize, nodes_of
-from ..plans.fixpoint import FixpointResult, IterationMetrics, iterate
+from ..plans.fixpoint import FixpointResult, iterate, rounds
 
 
-def _cached_edges(edges: DataFrame, p: int) -> DataFrame:
-    e = (
-        edges.select(SRC, DST)
-        .distinct()
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()
-    return e
+def _distinct_edges(edges: DataFrame, p: int) -> DataFrame:
+    return edges.select(SRC, DST).distinct().repartition(p, SRC)
 
 
 def katz_centrality(
@@ -54,32 +45,29 @@ def katz_centrality(
     0.05 covers any graph with max in-degree < 20/α)."""
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        return nodes.select("id", F.lit(0.0).alias("katz"))
-    e = _cached_edges(edges, p)
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            return nodes.select("id", F.lit(0.0).alias("katz"))
+        e, _ = r.keep(_distinct_edges(edges, p))
 
-    init = nodes.select("id", F.lit(beta).alias("x"))
+        init = nodes.select("id", F.lit(beta).alias("x"))
 
-    def step(state: DataFrame, i: int) -> DataFrame:
-        contrib = (
-            e.join(join_side(state.select(F.col("id").alias(SRC), "x"), n), SRC)
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.sum("x").alias("s"))
-        )
-        return nodes.join(contrib, "id", "left").select(
-            "id",
-            (
-                F.lit(beta) + F.lit(alpha) * F.coalesce("s", F.lit(0.0))
-            ).alias("x"),
-        )
+        def step(state: DataFrame, i: int) -> DataFrame:
+            contrib = (
+                e.join(join_side(state.select(F.col("id").alias(SRC), "x"), n), SRC)
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum("x").alias("s"))
+            )
+            return nodes.join(contrib, "id", "left").select(
+                "id",
+                (
+                    F.lit(beta) + F.lit(alpha) * F.coalesce("s", F.lit(0.0))
+                ).alias("x"),
+            )
 
-    res = iterate(init, step, max_iter=max_iter, name="katz")
-    out = res.state.select("id", F.col("x").alias("katz"))
-    e.unpersist()
-    nodes.unpersist()
-    return out
+        res = iterate(init, step, max_iter=max_iter, name="katz")
+        return res.state.select("id", F.col("x").alias("katz"))
 
 
 def eigenvector_centrality(
@@ -92,59 +80,43 @@ def eigenvector_centrality(
     in-component; exact 0s on a DAG once the mass drains)."""
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        empty = nodes.select("id", F.lit(0.0).alias("score"))
-        return FixpointResult(
-            state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
-        )
-    e = _cached_edges(edges, p)
-
-    state = materialize(nodes.select("id", F.lit(1.0 / n).alias("score")))
-    metrics: list[IterationMetrics] = []
-    scratch: list[DataFrame] = []
-    for i in range(max_iter):
-        t0 = time.time()
-        raw = (
-            e.join(join_side(state.select(F.col("id").alias(SRC), "score"), n), SRC)
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.sum("score").alias("s"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        tot = raw.agg(F.sum("s").alias("t"))
-        prev = state
-        state = materialize(
-            nodes.join(raw, "id", "left")
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "id",
-                F.when(
-                    F.col("t") > 0.0,
-                    F.coalesce("s", F.lit(0.0)) / F.col("t"),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("score"),
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            empty = nodes.select("id", F.lit(0.0).alias("score"))
+            return FixpointResult(
+                state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
             )
+        e, _ = r.keep(_distinct_edges(edges, p))
+
+        state = r.start(nodes.select("id", F.lit(1.0 / n).alias("score")))
+        for _ in range(max_iter):
+            raw = r.cache(
+                e.join(join_side(state.select(F.col("id").alias(SRC), "score"), n), SRC)
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum("score").alias("s"))
+            )
+            tot = raw.agg(F.sum("s").alias("t"))
+            state = r.materialize(
+                nodes.join(raw, "id", "left")
+                .crossJoin(F.broadcast(tot))
+                .select(
+                    "id",
+                    F.when(
+                        F.col("t") > 0.0,
+                        F.coalesce("s", F.lit(0.0)) / F.col("t"),
+                    )
+                    .otherwise(F.lit(0.0))
+                    .alias("score"),
+                )
+            )
+        return FixpointResult(
+            state=state,
+            iterations=max_iter,
+            converged=True,
+            metrics=r.metrics,
+            n_nodes=n,
         )
-        prev.unpersist()
-        for df in scratch:
-            df.unpersist()
-        scratch = [raw]
-        metrics.append(
-            IterationMetrics(iteration=i, seconds=time.time() - t0, rows=n)
-        )
-    for df in scratch:
-        df.unpersist()
-    e.unpersist()
-    nodes.unpersist()
-    return FixpointResult(
-        state=state,
-        iterations=max_iter,
-        converged=True,
-        metrics=metrics,
-        n_nodes=n,
-    )
 
 
 def nonbacktracking_centrality(
@@ -181,41 +153,42 @@ def nonbacktracking_centrality(
     double cover."""
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = _cached_edges(edges, p)
+    with rounds() as r:
+        e, _ = r.keep(_distinct_edges(edges, p))
 
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        into = (
-            state.groupBy(F.col(DST).alias("_u"))
-            .agg(F.sum("x").alias("_t"))
-        )
-        rev = state.select(
-            F.col(DST).alias(SRC), F.col(SRC).alias(DST), F.col("x").alias("_xr")
+        def step(state: DataFrame, _i: int) -> DataFrame:
+            into = (
+                state.groupBy(F.col(DST).alias("_u"))
+                .agg(F.sum("x").alias("_t"))
+            )
+            rev = state.select(
+                F.col(DST).alias(SRC), F.col(SRC).alias(DST), F.col("x").alias("_xr")
+            )
+            return (
+                e.join(into, e[SRC] == F.col("_u"), "left")
+                .drop("_u")
+                .join(rev, [SRC, DST], "left")
+                .select(
+                    SRC,
+                    DST,
+                    (
+                        F.coalesce("_t", F.lit(0).cast("long"))
+                        - F.coalesce("_xr", F.lit(0).cast("long"))
+                    ).alias("x"),
+                )
+            )
+
+        result = iterate(
+            e.select(SRC, DST, F.lit(1).cast("long").alias("x")),
+            step,
+            max_iter=max_iter,
+            name="nonbacktracking",
         )
         return (
-            e.join(into, e[SRC] == F.col("_u"), "left")
-            .drop("_u")
-            .join(rev, [SRC, DST], "left")
-            .select(
-                SRC,
-                DST,
-                (
-                    F.coalesce("_t", F.lit(0).cast("long"))
-                    - F.coalesce("_xr", F.lit(0).cast("long"))
-                ).alias("x"),
-            )
+            result.state.groupBy(F.col(DST).alias("id"))
+            .agg(F.sum("x").alias("nbc"))
+            .localCheckpoint(eager=True)
         )
-
-    result = iterate(
-        e.select(SRC, DST, F.lit(1).cast("long").alias("x")),
-        step,
-        max_iter=max_iter,
-        name="nonbacktracking",
-    )
-    out = materialize(
-        result.state.groupBy(F.col(DST).alias("id")).agg(F.sum("x").alias("nbc"))
-    )
-    e.unpersist()
-    return out
 
 
 def collective_influence(

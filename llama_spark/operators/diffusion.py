@@ -21,9 +21,9 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, join_side, materialize, nodes_of
+from ..graph import DST, SRC, join_side, nodes_of
+from ..plans.fixpoint import iterate, rounds
 
 
 def heat_coefficients(t: float, taylor_k: int) -> list[float]:
@@ -43,47 +43,42 @@ def heat_kernel_pagerank(
     """
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        return nodes.select("id", F.lit(0.0).alias("heat_scaled"))
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            return nodes.select("id", F.lit(0.0).alias("heat_scaled"))
 
-    outdeg = edges.groupBy(F.col(SRC).alias("id")).agg(F.count("*").alias("od"))
-    # per-edge share factor precomputed once; cached hash(src) so the
-    # per-term join streams it without re-exchange (pagerank plan shape)
-    ew = (
-        edges.join(outdeg, edges[SRC] == outdeg["id"])
-        .select(edges[SRC], edges[DST], (F.lit(1.0) / F.col("od")).alias("share"))
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ew.count()
-
-    coef = heat_coefficients(t, taylor_k)
-    state = nodes.select(
-        "id", F.lit(1.0 / n).alias("x"), F.lit(coef[0] / n).alias("h")
-    )
-    for k in range(1, taylor_k + 1):
-        contrib = (
-            ew.join(state.select(F.col("id").alias(SRC), "x"), SRC)
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.sum(F.col("x") * F.col("share")).alias("nx"))
+        outdeg = edges.groupBy(F.col(SRC).alias("id")).agg(F.count("*").alias("od"))
+        # per-edge share factor precomputed once; cached hash(src) so the
+        # per-term join streams it without re-exchange (pagerank plan shape)
+        ew, _ = r.keep(
+            edges.join(outdeg, edges[SRC] == outdeg["id"])
+            .select(edges[SRC], edges[DST], (F.lit(1.0) / F.col("od")).alias("share"))
+            .repartition(p, SRC)
         )
-        state = materialize(
-            state.join(contrib, "id", "left").select(
-                "id",
-                F.coalesce(F.col("nx"), F.lit(0.0)).alias("x"),
-                (F.col("h") + F.lit(coef[k]) * F.coalesce(F.col("nx"), F.lit(0.0))).alias(
-                    "h"
-                ),
+
+        coef = heat_coefficients(t, taylor_k)
+        state = nodes.select(
+            "id", F.lit(1.0 / n).alias("x"), F.lit(coef[0] / n).alias("h")
+        )
+        for k in range(1, taylor_k + 1):
+            contrib = (
+                ew.join(state.select(F.col("id").alias(SRC), "x"), SRC)
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum(F.col("x") * F.col("share")).alias("nx"))
             )
-        )
-    out = state.select(
-        "id", F.round(F.col("h") * F.lit(float(n)), 6).alias("heat_scaled")
-    ).localCheckpoint(eager=True)
-    ew.unpersist()
-    nodes.unpersist()
-    return out
+            state = r.materialize(
+                state.join(contrib, "id", "left").select(
+                    "id",
+                    F.coalesce(F.col("nx"), F.lit(0.0)).alias("x"),
+                    (
+                        F.col("h") + F.lit(coef[k]) * F.coalesce(F.col("nx"), F.lit(0.0))
+                    ).alias("h"),
+                )
+            )
+        return state.select(
+            "id", F.round(F.col("h") * F.lit(float(n)), 6).alias("heat_scaled")
+        ).localCheckpoint(eager=True)
 
 
 def truncated_hitting_time(
@@ -119,67 +114,59 @@ def truncated_hitting_time(
     each step costs ONE Spark job. Reference parity: the same
     vertex-centric fixpoint loop as benchmark/benchmarks/pagerank.h,
     absorbing variant."""
-    from ..plans.fixpoint import iterate
-
     if not seeds:
         raise ValueError("seeds must be non-empty")
     seeds = sorted(set(seeds))
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        nodes.unpersist()
-        return nodes.select("id", F.lit(0.0).alias("hitting"))
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            return nodes.select("id", F.lit(0.0).alias("hitting"))
 
-    # walk matrix: uniform 1/outdeg, or weight-proportional w/Σ_out w when
-    # weight_col is given (the weighted-walk variant — same recursion, the
-    # step distribution follows edge weights, ll_load_utils.h:1076-1090)
-    wexpr = (
-        F.col(weight_col).cast("double")
-        if weight_col is not None
-        else F.lit(1.0)
-    )
-    e = edges.select(SRC, DST, wexpr.alias("_w"))
-    out_w = e.groupBy(SRC).agg(F.sum("_w").alias("ow"))
-    ew = (
-        e.join(out_w, SRC)
-        .select(SRC, DST, (F.col("_w") / F.col("ow")).alias("inv"))
-        .repartition(p, DST)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ew.count()
-
-    is_seed = F.col("id").isin(seeds)
-
-    def step(h: DataFrame, _i: int) -> DataFrame:
-        gathered = (
-            join_side(h, n).join(ew, h["id"] == ew[DST])
-            .select(F.col(SRC).alias("id"), (F.col("inv") * F.col("h")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
+        # walk matrix: uniform 1/outdeg, or weight-proportional w/Σ_out w when
+        # weight_col is given (the weighted-walk variant — same recursion, the
+        # step distribution follows edge weights, ll_load_utils.h:1076-1090)
+        wexpr = (
+            F.col(weight_col).cast("double")
+            if weight_col is not None
+            else F.lit(1.0)
         )
-        return (
-            h.select("id", F.col("h").alias("_hp"))
-            .join(join_side(gathered, n), "id", "left")
-            .select(
-                "id",
-                F.when(is_seed, F.lit(0.0))
-                .otherwise(F.lit(1.0) + F.coalesce("s", F.col("_hp")))
-                .alias("h"),
+        e = edges.select(SRC, DST, wexpr.alias("_w"))
+        out_w = e.groupBy(SRC).agg(F.sum("_w").alias("ow"))
+        ew, _ = r.keep(
+            e.join(out_w, SRC)
+            .select(SRC, DST, (F.col("_w") / F.col("ow")).alias("inv"))
+            .repartition(p, DST)
+        )
+
+        is_seed = F.col("id").isin(seeds)
+
+        def step(h: DataFrame, _i: int) -> DataFrame:
+            gathered = (
+                join_side(h, n).join(ew, h["id"] == ew[DST])
+                .select(F.col(SRC).alias("id"), (F.col("inv") * F.col("h")).alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("s"))
             )
-        )
+            return (
+                h.select("id", F.col("h").alias("_hp"))
+                .join(join_side(gathered, n), "id", "left")
+                .select(
+                    "id",
+                    F.when(is_seed, F.lit(0.0))
+                    .otherwise(F.lit(1.0) + F.coalesce("s", F.col("_hp")))
+                    .alias("h"),
+                )
+            )
 
-    result = iterate(
-        nodes.select("id", F.lit(0.0).alias("h")),
-        step,
-        max_iter=horizon,
-        name="hitting_time",
-    )
-    out = materialize(result.state.select("id", F.col("h").alias("hitting")))
-    ew.unpersist()
-    nodes.unpersist()
-    return out
+        result = iterate(
+            nodes.select("id", F.lit(0.0).alias("h")),
+            step,
+            max_iter=horizon,
+            name="hitting_time",
+        )
+        return result.state.select("id", F.col("h").alias("hitting"))
 
 
 def trophic_levels(
@@ -213,8 +200,6 @@ def trophic_levels(
     job per sweep). Same audited shape as the pagerank kernel.
     Reference parity: vertex-centric fixpoint loop family
     (benchmark/benchmarks/pagerank.h)."""
-    from ..plans.fixpoint import iterate
-
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     w = (
@@ -226,60 +211,52 @@ def trophic_levels(
     sym = e.unionByName(
         e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST), "_w")
     )
-    # per-node denominator d = in_w + out_w and numerator base v = in_w - out_w
-    base = (
-        e.select(F.col(DST).alias("id"), F.col("_w").alias("iw"), F.lit(0.0).alias("ow"))
-        .unionByName(
-            e.select(F.col(SRC).alias("id"), F.lit(0.0).alias("iw"), F.col("_w").alias("ow"))
-        )
-        .groupBy("id")
-        .agg(
-            (F.sum("iw") + F.sum("ow")).alias("d"),
-            (F.sum("iw") - F.sum("ow")).alias("v"),
-        )
-        .repartition(p, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    base.count()
-    gather = (
-        sym.select(SRC, DST, "_w").repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    gather.count()
-    n = base.count()
-
-    # d and v are per-node CONSTANTS — carry them in the iterate state
-    # (the pagerank/fiedler convention) so each sweep joins only the
-    # gathered sum: drops the fixed-table join and the second broadcast
-    # build of h per sweep (same arithmetic, same operand order).
-    def step(h: DataFrame, _i: int) -> DataFrame:
-        s = (
-            join_side(h.select("id", "h"), n).join(gather, h["id"] == gather[SRC])
-            .select(F.col(DST).alias("id"), (F.col("_w") * F.col("h")).alias("c"))
+    with rounds() as r:
+        # per-node denominator d = in_w + out_w and numerator base v = in_w - out_w
+        base, n = r.keep(
+            e.select(F.col(DST).alias("id"), F.col("_w").alias("iw"), F.lit(0.0).alias("ow"))
+            .unionByName(
+                e.select(F.col(SRC).alias("id"), F.lit(0.0).alias("iw"), F.col("_w").alias("ow"))
+            )
             .groupBy("id")
-            .agg(F.sum("c").alias("s"))
+            .agg(
+                (F.sum("iw") + F.sum("ow")).alias("d"),
+                (F.sum("iw") - F.sum("ow")).alias("v"),
+            )
+            .repartition(p, "id")
         )
-        return h.join(join_side(s, n), "id", "left").select(
-            "id",
-            "d",
-            "v",
-            (
-                F.lit(1.0 - omega) * F.col("h")
-                + F.lit(omega)
-                * (F.col("v") + F.coalesce("s", F.lit(0.0)))
-                / F.col("d")
-            ).alias("h"),
-        )
+        gather, _ = r.keep(sym.select(SRC, DST, "_w").repartition(p, SRC))
 
-    result = iterate(
-        base.select("id", "d", "v", F.lit(0.0).alias("h")),
-        step,
-        max_iter=max_iter,
-        name="trophic_levels",
-    )
-    out = materialize(result.state.select("id", F.col("h").alias("level")))
-    base.unpersist()
-    gather.unpersist()
-    return out
+        # d and v are per-node CONSTANTS — carry them in the iterate state
+        # (the pagerank/fiedler convention) so each sweep joins only the
+        # gathered sum: drops the fixed-table join and the second broadcast
+        # build of h per sweep (same arithmetic, same operand order).
+        def step(h: DataFrame, _i: int) -> DataFrame:
+            s = (
+                join_side(h.select("id", "h"), n).join(gather, h["id"] == gather[SRC])
+                .select(F.col(DST).alias("id"), (F.col("_w") * F.col("h")).alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("s"))
+            )
+            return h.join(join_side(s, n), "id", "left").select(
+                "id",
+                "d",
+                "v",
+                (
+                    F.lit(1.0 - omega) * F.col("h")
+                    + F.lit(omega)
+                    * (F.col("v") + F.coalesce("s", F.lit(0.0)))
+                    / F.col("d")
+                ).alias("h"),
+            )
+
+        result = iterate(
+            base.select("id", "d", "v", F.lit(0.0).alias("h")),
+            step,
+            max_iter=max_iter,
+            name="trophic_levels",
+        )
+        return result.state.select("id", F.col("h").alias("level"))
 
 
 def trophic_incoherence(

@@ -31,10 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..graph import DST, SRC, join_side, nodes_of
-from ..plans.fixpoint import FixpointResult
+from ..plans.fixpoint import FixpointResult, rounds
 
 
 def hits_result(
@@ -49,105 +48,79 @@ def hits_result(
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        empty = nodes.select(
-            "id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub")
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            empty = nodes.select(
+                "id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub")
+            )
+            return FixpointResult(
+                state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
+            )
+
+        e = edges.select(SRC, DST).distinct()
+        e_src, _ = r.keep(e.repartition(p, SRC))
+        e_dst, _ = r.keep(e.repartition(p, DST))
+
+        state = r.start(
+            nodes.select(
+                "id", F.lit(1.0 / n).alias("auth"), F.lit(1.0 / n).alias("hub")
+            )
         )
+        for _ in range(max_iter):
+            # auth half-step: pull hub mass over in-edges, then L1-normalize.
+            # The raw E-join aggregates are CACHED: each one is referenced
+            # twice (once by the normalized vector, once by its L1 total) and
+            # the normalized vector up to three more times downstream — left
+            # lazy, every reference re-walks the E-row join and the plan cost
+            # goes exponential in the iteration depth (measured: 568s for 8
+            # iterations at sf0.01 vs ~20s with the caches).
+            a_raw = r.cache(
+                e_src.join(
+                    join_side(state.select(F.col("id").alias(SRC), "hub"), n), SRC
+                )
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum("hub").alias("ar"))
+            )
+            a_tot = a_raw.agg(F.sum("ar").alias("at"))
+            # the normalized auth vector is referenced twice (the hub
+            # half-step's broadcast build AND the state materialization) —
+            # cache it so the second reference reads V rows from cache
+            # instead of re-running the nodes⨝a_raw join (no arithmetic
+            # change; measured 196 → 172 jobs / ~25% fewer stages at sf0.1)
+            auth = r.cache(
+                nodes.join(a_raw, "id", "left")
+                .crossJoin(F.broadcast(a_tot))
+                .select(
+                    "id",
+                    (F.coalesce("ar", F.lit(0.0)) / F.col("at")).alias("auth"),
+                )
+            )
+            # hub half-step: pull the NEW auth mass over out-edges
+            h_raw = r.cache(
+                e_dst.join(
+                    join_side(auth.select(F.col("id").alias(DST), "auth"), n), DST
+                )
+                .groupBy(F.col(SRC).alias("id"))
+                .agg(F.sum("auth").alias("hr"))
+            )
+            h_tot = h_raw.agg(F.sum("hr").alias("ht"))
+            state = r.materialize(
+                auth.join(h_raw, "id", "left")
+                .crossJoin(F.broadcast(h_tot))
+                .select(
+                    "id",
+                    "auth",
+                    (F.coalesce("hr", F.lit(0.0)) / F.col("ht")).alias("hub"),
+                )
+            )
         return FixpointResult(
-            state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
+            state=state,
+            iterations=max_iter,
+            converged=True,
+            metrics=r.metrics,
+            n_nodes=n,
         )
-
-    e = edges.select(SRC, DST).distinct()
-    e_src = e.repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
-    e_dst = e.repartition(p, DST).persist(StorageLevel.MEMORY_AND_DISK)
-    e_src.count()
-    e_dst.count()
-
-    import time
-
-    from ..graph import materialize
-    from ..plans.fixpoint import IterationMetrics
-
-    state = materialize(
-        nodes.select(
-            "id", F.lit(1.0 / n).alias("auth"), F.lit(1.0 / n).alias("hub")
-        )
-    )
-    metrics: list[IterationMetrics] = []
-    scratch: list[DataFrame] = []
-    for i in range(max_iter):
-        t0 = time.time()
-        # auth half-step: pull hub mass over in-edges, then L1-normalize.
-        # The raw E-join aggregates are PERSISTED: each one is referenced
-        # twice (once by the normalized vector, once by its L1 total) and
-        # the normalized vector up to three more times downstream — left
-        # lazy, every reference re-walks the E-row join and the plan cost
-        # goes exponential in the iteration depth (measured: 568s for 8
-        # iterations at sf0.01 vs ~20s with the caches).
-        a_raw = (
-            e_src.join(
-                join_side(state.select(F.col("id").alias(SRC), "hub"), n), SRC
-            )
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.sum("hub").alias("ar"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        a_tot = a_raw.agg(F.sum("ar").alias("at"))
-        # the normalized auth vector is referenced twice (the hub
-        # half-step's broadcast build AND the state materialization) —
-        # persist it so the second reference reads V rows from cache
-        # instead of re-running the nodes⨝a_raw join (no arithmetic
-        # change; measured 196 → 172 jobs / ~25% fewer stages at sf0.1)
-        auth = (
-            nodes.join(a_raw, "id", "left")
-            .crossJoin(F.broadcast(a_tot))
-            .select(
-                "id",
-                (F.coalesce("ar", F.lit(0.0)) / F.col("at")).alias("auth"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # hub half-step: pull the NEW auth mass over out-edges
-        h_raw = (
-            e_dst.join(
-                join_side(auth.select(F.col("id").alias(DST), "auth"), n), DST
-            )
-            .groupBy(F.col(SRC).alias("id"))
-            .agg(F.sum("auth").alias("hr"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        h_tot = h_raw.agg(F.sum("hr").alias("ht"))
-        prev = state
-        state = materialize(
-            auth.join(h_raw, "id", "left")
-            .crossJoin(F.broadcast(h_tot))
-            .select(
-                "id",
-                "auth",
-                (F.coalesce("hr", F.lit(0.0)) / F.col("ht")).alias("hub"),
-            )
-        )
-        prev.unpersist()
-        for df in scratch:
-            df.unpersist()
-        scratch = [a_raw, auth, h_raw]
-        metrics.append(
-            IterationMetrics(iteration=i, seconds=time.time() - t0, rows=n)
-        )
-    for df in scratch:
-        df.unpersist()
-    e_src.unpersist()
-    e_dst.unpersist()
-    nodes.unpersist()
-    return FixpointResult(
-        state=state,
-        iterations=max_iter,
-        converged=True,
-        metrics=metrics,
-        n_nodes=n,
-    )
 
 
 def hits(edges: DataFrame, max_iter: int = 8) -> DataFrame:
@@ -179,88 +152,61 @@ def salsa_result(
     pagerank/HITS policy. State: [id, auth, hub]; init hub = 1/|sources|
     on nodes with out-edges; fixed ``max_iter`` synchronous iterations
     (deterministic, SQL-replayable)."""
-    import time
-
-    from ..plans.fixpoint import IterationMetrics
-
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        empty = nodes.select("id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub"))
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            empty = nodes.select("id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub"))
+            return FixpointResult(
+                state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
+            )
+
+        e = edges.select(SRC, DST).distinct()
+        od = e.groupBy(SRC).agg(F.count("*").alias("od"))
+        idg = e.groupBy(DST).agg(F.count("*").alias("idg"))
+        e_src, _ = r.keep(e.join(od, SRC).repartition(p, SRC))
+        e_dst, _ = r.keep(e.join(idg, DST).repartition(p, DST))
+        n_src = od.count()
+
+        state = r.start(
+            nodes.join(od.select(F.col(SRC).alias("id")), "id", "left_semi")
+            .select("id", F.lit(1.0 / n_src).alias("hub"))
+        )
+        auth = None
+        for _ in range(max_iter):
+            auth = r.cache(
+                e_src.join(join_side(state.select(F.col("id").alias(SRC), "hub"), n), SRC)
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum(F.col("hub") / F.col("od")).alias("ar"))
+            )
+            h_raw = r.cache(
+                e_dst.join(
+                    join_side(auth.select(F.col("id").alias(DST), "ar"), n), DST
+                )
+                .groupBy(F.col(SRC).alias("id"))
+                .agg(F.sum(F.col("ar") / F.col("idg")).alias("hr"))
+            )
+            state = r.materialize(
+                state.select("id").join(h_raw, "id", "left").select(
+                    "id", F.coalesce("hr", F.lit(0.0)).alias("hub")
+                )
+            )
+        # checkpointed before the scope releases the last round's auth cache
+        out = (
+            nodes.join(auth.withColumnRenamed("ar", "auth"), "id", "left")
+            .join(state, "id", "left")
+            .select(
+                "id",
+                F.coalesce("auth", F.lit(0.0)).alias("auth"),
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+            )
+            .localCheckpoint(eager=True)
+        )
         return FixpointResult(
-            state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
+            state=out, iterations=max_iter, converged=True, metrics=r.metrics, n_nodes=n
         )
-
-    e = edges.select(SRC, DST).distinct()
-    od = e.groupBy(SRC).agg(F.count("*").alias("od"))
-    idg = e.groupBy(DST).agg(F.count("*").alias("idg"))
-    e_src = (
-        e.join(od, SRC).repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_dst = (
-        e.join(idg, DST).repartition(p, DST).persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_src.count()
-    e_dst.count()
-    n_src = od.count()
-
-    from ..graph import materialize
-
-    state = materialize(
-        nodes.join(od.select(F.col(SRC).alias("id")), "id", "left_semi")
-        .select("id", F.lit(1.0 / n_src).alias("hub"))
-    )
-    metrics: list[IterationMetrics] = []
-    scratch: list[DataFrame] = []
-    auth = None
-    for i in range(max_iter):
-        t0 = time.time()
-        a_raw = (
-            e_src.join(join_side(state.select(F.col("id").alias(SRC), "hub"), n), SRC)
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.sum(F.col("hub") / F.col("od")).alias("ar"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        h_raw = (
-            e_dst.join(
-                join_side(a_raw.select(F.col("id").alias(DST), "ar"), n), DST
-            )
-            .groupBy(F.col(SRC).alias("id"))
-            .agg(F.sum(F.col("ar") / F.col("idg")).alias("hr"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        prev = state
-        auth = a_raw
-        state = materialize(
-            prev.select("id").join(h_raw, "id", "left").select(
-                "id", F.coalesce("hr", F.lit(0.0)).alias("hub")
-            )
-        )
-        prev.unpersist()
-        for df in scratch:
-            df.unpersist()
-        scratch = [a_raw, h_raw]
-        metrics.append(IterationMetrics(iteration=i, seconds=time.time() - t0, rows=n))
-    out = materialize(
-        nodes.join(auth.withColumnRenamed("ar", "auth"), "id", "left")
-        .join(state.withColumnRenamed("hub", "hub"), "id", "left")
-        .select(
-            "id",
-            F.coalesce("auth", F.lit(0.0)).alias("auth"),
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-        )
-    )
-    for df in scratch:
-        df.unpersist()
-    e_src.unpersist()
-    e_dst.unpersist()
-    nodes.unpersist()
-    return FixpointResult(
-        state=out, iterations=max_iter, converged=True, metrics=metrics, n_nodes=n
-    )
 
 
 def salsa(edges: DataFrame, max_iter: int = 8) -> DataFrame:

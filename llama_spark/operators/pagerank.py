@@ -32,8 +32,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, is_small, join_side, materialize, nodes_of
-from ..plans.fixpoint import FixpointResult, iterate
+from ..graph import DST, SRC, is_small, join_side, nodes_of
+from ..plans.fixpoint import FixpointResult, iterate, rounds
+
+
+def _inv_degree_edges(edges: DataFrame, p: int) -> DataFrame:
+    """DataFrame[src, dst, inv_deg] hash-partitioned on src: the per-edge
+    1/out-degree factor every pull step streams (LL_PRECOMPUTED_DEGREE
+    analog)."""
+    out_deg = edges.groupBy(SRC).agg(F.count("*").alias("od"))
+    return (
+        edges.select(SRC, DST)
+        .join(out_deg, SRC)
+        .select(SRC, DST, (F.lit(1.0) / F.col("od")).alias("inv_deg"))
+        .repartition(p, SRC)
+    )
 
 
 def pagerank(
@@ -99,116 +112,101 @@ def pagerank_result(
     (ll_load_utils.h:1076-1090) that only SSSP consumed until now."""
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # nodes cached HASH-PARTITIONED ON id: the per-iteration ranks-update
-    # join (nodes ⟕ contribs) keys on id, and contribs already arrives
-    # hash(id)-distributed from its groupBy — pinning nodes' layout removes
-    # the only other per-iteration exchange (V rows reshuffled per iter).
-    p0 = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nodes = nodes_of(edges).repartition(p0, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        # empty graph → empty result (max_nodes()==0, ll_mlcsr_sp.h:587-589)
-        from ..plans.fixpoint import FixpointResult
-
-        empty = nodes.select("id", F.lit(0.0).alias("rank"))
-        return FixpointResult(
-            state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
-        )
-
-    # Precompute the per-edge contribution factor once (LL_PRECOMPUTED_DEGREE
-    # analog) and pin the edge table's partitioning on src for the
-    # per-iteration join: 1/out_degree unweighted, weight/Σweights weighted.
-    if weight_col is None:
-        out_deg = edges.groupBy(SRC).agg(F.count("*").alias("od"))
-        edges_inv = (
-            edges.select(SRC, DST)
-            .join(out_deg, SRC)
-            .select(SRC, DST, (F.lit(1.0) / F.col("od")).alias("inv_deg"))
-        )
-    else:
-        w = F.col(weight_col).cast("double")
-        out_deg = edges.groupBy(SRC).agg(F.sum(w).alias("ow"))
-        edges_inv = (
-            edges.select(SRC, DST, w.alias("_w"))
-            .join(out_deg, SRC)
-            .select(SRC, DST, (F.col("_w") / F.col("ow")).alias("inv_deg"))
-        )
-    edges_inv = edges_inv.repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
-    edges_inv.count()
-
-    base = (1.0 - damping) / n
-    if initial_ranks is not None:
-        init = nodes.join(
-            initial_ranks.select("id", F.col("rank").alias("_r0")), "id", "left"
-        ).select("id", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"))
-    else:
-        init = nodes.select("id", F.lit(1.0 / n).alias("rank"))
-
-    if dangling not in ("lost", "redistribute"):
-        raise ValueError(f"dangling must be 'lost' or 'redistribute', got {dangling!r}")
-    dangling_ids = None
-    if dangling == "redistribute":
-        dangling_ids = (
-            nodes.join(out_deg.select(F.col(SRC).alias("id")), "id", "left_anti")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        dangling_ids.count()
-
-    # join sides follow graph.join_side: the rank vector broadcasts while
-    # small; past that the cached edge table is STREAMED through a
-    # shuffled-hash join, never sorted (sort-merge would re-sort all edges
-    # every iteration) and only the small rank side shuffles.
-    def step(ranks: DataFrame, _i: int) -> DataFrame:
-        contribs = (
-            join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
-            .select(F.col(DST).alias("id"), (F.col("rank") * F.col("inv_deg")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_rank = F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-        out = nodes.join(join_side(contribs, n), "id", "left")
-        if dangling_ids is not None:
-            dmass = (
-                ranks.join(dangling_ids, "id", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
+    with rounds() as r:
+        # nodes cached HASH-PARTITIONED ON id: the per-iteration ranks-update
+        # join (nodes ⟕ contribs) keys on id, and contribs already arrives
+        # hash(id)-distributed from its groupBy — pinning nodes' layout removes
+        # the only other per-iteration exchange (V rows reshuffled per iter).
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            # empty graph → empty result (max_nodes()==0, ll_mlcsr_sp.h:587-589)
+            empty = nodes.select("id", F.lit(0.0).alias("rank"))
+            return FixpointResult(
+                state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
             )
-            out = out.crossJoin(F.broadcast(dmass))
-            new_rank = new_rank + F.lit(damping) * F.col("_dm") / F.lit(float(n))
-        return out.select("id", new_rank.alias("rank"))
 
-    updated = None
-    if tol is not None:
-        def updated(prev: DataFrame, new: DataFrame) -> int:
-            diff = (
-                prev.alias("a")
-                .join(new.alias("b"), "id")
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("l1"))
-                .collect()[0]["l1"]
+        # Precompute the per-edge contribution factor once (LL_PRECOMPUTED_DEGREE
+        # analog) and pin the edge table's partitioning on src for the
+        # per-iteration join: 1/out_degree unweighted, weight/Σweights weighted.
+        if weight_col is None:
+            edges_inv = _inv_degree_edges(edges, p)
+        else:
+            w = F.col(weight_col).cast("double")
+            out_w = edges.groupBy(SRC).agg(F.sum(w).alias("ow"))
+            edges_inv = (
+                edges.select(SRC, DST, w.alias("_w"))
+                .join(out_w, SRC)
+                .select(SRC, DST, (F.col("_w") / F.col("ow")).alias("inv_deg"))
+                .repartition(p, SRC)
             )
-            return 0 if diff is not None and diff <= tol else 1
+        edges_inv, _ = r.keep(edges_inv)
 
-    result = iterate(
-        init,
-        step,
-        max_iter=max_iter,
-        updated_count=updated,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        # broadcast-tiny states gain nothing from persist's partitioning
-        # (the state never shuffles) but pay per-iteration plan depth —
-        # truncate every iteration; big states keep the exchange-free
-        # persist window (measured: 9.9s vs 13.5s warm at sf0.1 tiny)
-        truncate_every=1 if is_small(n) else 4,
-        resume=resume,
-        name="pagerank",
-    )
-    nodes.unpersist()
-    edges_inv.unpersist()
-    if dangling_ids is not None:
-        dangling_ids.unpersist()
-    result.n_nodes = n
-    return result
+        base = (1.0 - damping) / n
+        if initial_ranks is not None:
+            init = nodes.join(
+                initial_ranks.select("id", F.col("rank").alias("_r0")), "id", "left"
+            ).select("id", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"))
+        else:
+            init = nodes.select("id", F.lit(1.0 / n).alias("rank"))
+
+        if dangling not in ("lost", "redistribute"):
+            raise ValueError(f"dangling must be 'lost' or 'redistribute', got {dangling!r}")
+        dangling_ids = None
+        if dangling == "redistribute":
+            dangling_ids, _ = r.keep(
+                nodes.join(edges.select(F.col(SRC).alias("id")), "id", "left_anti")
+            )
+
+        # join sides follow graph.join_side: the rank vector broadcasts while
+        # small; past that the cached edge table is STREAMED through a
+        # shuffled-hash join, never sorted (sort-merge would re-sort all edges
+        # every iteration) and only the small rank side shuffles.
+        def step(ranks: DataFrame, _i: int) -> DataFrame:
+            contribs = (
+                join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
+                .select(F.col(DST).alias("id"), (F.col("rank") * F.col("inv_deg")).alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            new_rank = F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+            out = nodes.join(join_side(contribs, n), "id", "left")
+            if dangling_ids is not None:
+                dmass = (
+                    ranks.join(dangling_ids, "id", "left_semi")
+                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
+                )
+                out = out.crossJoin(F.broadcast(dmass))
+                new_rank = new_rank + F.lit(damping) * F.col("_dm") / F.lit(float(n))
+            return out.select("id", new_rank.alias("rank"))
+
+        updated = None
+        if tol is not None:
+            def updated(prev: DataFrame, new: DataFrame) -> int:
+                diff = (
+                    prev.alias("a")
+                    .join(new.alias("b"), "id")
+                    .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("l1"))
+                    .collect()[0]["l1"]
+                )
+                return 0 if diff is not None and diff <= tol else 1
+
+        result = iterate(
+            init,
+            step,
+            max_iter=max_iter,
+            updated_count=updated,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            # broadcast-tiny states gain nothing from persist's partitioning
+            # (the state never shuffles) but pay per-iteration plan depth —
+            # truncate every iteration; big states keep the exchange-free
+            # persist window (measured: 9.9s vs 13.5s warm at sf0.1 tiny)
+            truncate_every=1 if is_small(n) else 4,
+            resume=resume,
+            name="pagerank",
+        )
+        result.n_nodes = n
+        return result
 
 
 def personalized_pagerank(
@@ -246,66 +244,56 @@ def personalized_pagerank_result(
     sources = sorted(set(sources))
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        return FixpointResult(
-            state=nodes.select("id", F.lit(0.0).alias("rank")),
-            iterations=0, converged=True, metrics=[], n_nodes=0,
-        )
-    # teleport mass only lands on nodes of the edge-derived node set; a
-    # source id absent from it would silently lose its 1/|S| share and
-    # degenerate the whole ranking toward zero — fail loudly instead
-    present = nodes.filter(F.col("id").isin(sources)).count()
-    if present != len(set(sources)):
-        found = {r["id"] for r in nodes.filter(F.col("id").isin(sources)).collect()}
-        missing = sorted(set(sources) - found)
-        raise ValueError(
-            f"personalized_pagerank sources not in the graph's node set: "
-            f"{missing} (teleport mass for them would be silently dropped)"
-        )
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            return FixpointResult(
+                state=nodes.select("id", F.lit(0.0).alias("rank")),
+                iterations=0, converged=True, metrics=[], n_nodes=0,
+            )
+        # teleport mass only lands on nodes of the edge-derived node set; a
+        # source id absent from it would silently lose its 1/|S| share and
+        # degenerate the whole ranking toward zero — fail loudly instead
+        present = nodes.filter(F.col("id").isin(sources)).count()
+        if present != len(set(sources)):
+            found = {row["id"] for row in nodes.filter(F.col("id").isin(sources)).collect()}
+            missing = sorted(set(sources) - found)
+            raise ValueError(
+                f"personalized_pagerank sources not in the graph's node set: "
+                f"{missing} (teleport mass for them would be silently dropped)"
+            )
 
-    out_deg = edges.groupBy(SRC).agg(F.count("*").alias("od"))
-    edges_inv = (
-        edges.select(SRC, DST)
-        .join(out_deg, SRC)
-        .select(SRC, DST, (F.lit(1.0) / F.col("od")).alias("inv_deg"))
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges_inv.count()
+        edges_inv, _ = r.keep(_inv_degree_edges(edges, p))
 
-    e_v = F.when(F.col("id").isin(sources), F.lit(1.0 / len(sources))).otherwise(
-        F.lit(0.0)
-    )
-    init = nodes.select("id", e_v.alias("rank"))
-
-    def step(ranks: DataFrame, _i: int) -> DataFrame:
-        contribs = (
-            join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
-            .select(F.col(DST).alias("id"), (F.col("rank") * F.col("inv_deg")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
+        e_v = F.when(F.col("id").isin(sources), F.lit(1.0 / len(sources))).otherwise(
+            F.lit(0.0)
         )
-        return nodes.join(join_side(contribs, n), "id", "left").select(
-            "id",
-            (
-                F.lit(1.0 - damping) * e_v
-                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-            ).alias("rank"),
-        )
+        init = nodes.select("id", e_v.alias("rank"))
 
-    result = iterate(
-        init,
-        step,
-        max_iter=max_iter,
-        truncate_every=1 if is_small(n) else 4,
-        name="personalized_pagerank",
-    )
-    nodes.unpersist()
-    edges_inv.unpersist()
-    result.n_nodes = n
-    return result
+        def step(ranks: DataFrame, _i: int) -> DataFrame:
+            contribs = (
+                join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
+                .select(F.col(DST).alias("id"), (F.col("rank") * F.col("inv_deg")).alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            return nodes.join(join_side(contribs, n), "id", "left").select(
+                "id",
+                (
+                    F.lit(1.0 - damping) * e_v
+                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                ).alias("rank"),
+            )
+
+        result = iterate(
+            init,
+            step,
+            max_iter=max_iter,
+            truncate_every=1 if is_small(n) else 4,
+            name="personalized_pagerank",
+        )
+        result.n_nodes = n
+        return result
 
 
 def top_k_pagerank(edges: DataFrame, k: int = 10, **kwargs) -> DataFrame:
@@ -342,62 +330,51 @@ def pagerank_trace(
     capped per iteration like every fixpoint kernel here."""
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        nodes.unpersist()
-        return spark.createDataFrame([], "iter long, l1_residual double")
-    out_deg = edges.groupBy(SRC).agg(F.count("*").alias("od"))
-    edges_inv = (
-        edges.select(SRC, DST)
-        .join(out_deg, SRC)
-        .select(SRC, DST, (F.lit(1.0) / F.col("od")).alias("inv_deg"))
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges_inv.count()
-
-    def _scaled_micro(col):
-        return F.round(F.round(col * F.lit(float(n)), 6) * F.lit(1e6)).cast("long")
-
-    ranks = nodes.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-        eager=True
-    )
-    base = (1.0 - damping) / n
     rows = []
-    for i in range(1, iters + 1):
-        contribs = (
-            join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
-            .select(
-                F.col(DST).alias("id"),
-                (F.col("rank") * F.col("inv_deg")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            return spark.createDataFrame([], "iter long, l1_residual double")
+        edges_inv, _ = r.keep(_inv_degree_edges(edges, p))
+
+        def _scaled_micro(col):
+            return F.round(F.round(col * F.lit(float(n)), 6) * F.lit(1e6)).cast("long")
+
+        ranks = nodes.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
+            eager=True
         )
-        nxt = (
-            nodes.join(contribs, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
+        base = (1.0 - damping) / n
+        for i in range(1, iters + 1):
+            contribs = (
+                join_side(ranks, n).join(edges_inv, ranks["id"] == edges_inv[SRC])
+                .select(
+                    F.col(DST).alias("id"),
+                    (F.col("rank") * F.col("inv_deg")).alias("c"),
+                )
+                .groupBy("id")
+                .agg(F.sum("c").alias("contrib"))
             )
-            .localCheckpoint(eager=True)
-        )
-        res = (
-            nxt.select("id", _scaled_micro(F.col("rank")).alias("m1"))
-            .join(
-                ranks.select("id", _scaled_micro(F.col("rank")).alias("m0")), "id"
+            nxt = (
+                nodes.join(contribs, "id", "left")
+                .select(
+                    "id",
+                    (
+                        F.lit(base)
+                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                    ).alias("rank"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .agg(F.sum(F.abs(F.col("m1") - F.col("m0"))).alias("s"))
-            .collect()
-        )[0]
-        rows.append((i, int(res["s"] or 0) / 1e6))
-        ranks = nxt
-    nodes.unpersist()
-    edges_inv.unpersist()
+            res = (
+                nxt.select("id", _scaled_micro(F.col("rank")).alias("m1"))
+                .join(
+                    ranks.select("id", _scaled_micro(F.col("rank")).alias("m0")), "id"
+                )
+                .agg(F.sum(F.abs(F.col("m1") - F.col("m0"))).alias("s"))
+                .collect()
+            )[0]
+            rows.append((i, int(res["s"] or 0) / 1e6))
+            ranks = nxt
     return spark.createDataFrame(rows, "iter long, l1_residual double")
 
 
@@ -426,95 +403,79 @@ def topic_sensitive_pagerank(
     ``personalized_pagerank`` on that seed set."""
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
     ks = list(range(n_topics))
-    if n == 0:
-        nodes.unpersist()
-        return nodes.select("id", *[F.lit(0.0).alias(f"r{t}") for t in ks])
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            return nodes.select("id", *[F.lit(0.0).alias(f"r{t}") for t in ks])
+        e_inv, _ = r.keep(_inv_degree_edges(edges, p))
 
-    out_deg = edges.groupBy(SRC).agg(F.count("*").alias("od"))
-    e_inv = (
-        edges.select(SRC, DST)
-        .join(out_deg, SRC)
-        .select(SRC, DST, (F.lit(1.0) / F.col("od")).alias("inv_deg"))
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_inv.count()
+        tagged = nodes.select("id", topic_of.cast("long").alias("_t"))
+        sizes = {
+            int(row["_t"]): int(row["cnt"])
+            for row in tagged.filter(F.col("_t").isNotNull())
+            .groupBy("_t")
+            .agg(F.count("*").alias("cnt"))
+            .collect()
+        }
+        for t in ks:
+            if sizes.get(t, 0) == 0:
+                raise ValueError(f"topic {t} has no seed nodes")
 
-    tagged = nodes.select("id", topic_of.cast("long").alias("_t"))
-    sizes = {
-        int(r["_t"]): int(r["cnt"])
-        for r in tagged.filter(F.col("_t").isNotNull())
-        .groupBy("_t")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    for t in ks:
-        if sizes.get(t, 0) == 0:
-            raise ValueError(f"topic {t} has no seed nodes")
-
-    e_cols = [
-        F.when(F.col("_t") == t, F.lit(1.0 / sizes[t]))
-        .otherwise(F.lit(0.0))
-        .alias(f"e{t}")
-        for t in ks
-    ]
-    state = materialize(
-        tagged.select(
-            "id",
-            *e_cols,
-            *[
-                F.when(F.col("_t") == t, F.lit(1.0 / sizes[t]))
-                .otherwise(F.lit(0.0))
-                .alias(f"r{t}")
-                for t in ks
-            ],
-        )
-    )
-
-    # graph.join_side: while small the broadcast V-row state lets the
-    # cached hash(src) edge table stream with no exchange and leaves the
-    # partial-sum partitioning unchanged
-    d = damping
-    for _ in range(max_iter):
-        contribs = (
-            e_inv.join(
-                join_side(state.select(
-                    F.col("id").alias(SRC),
-                    *[F.col(f"r{t}").alias(f"x{t}") for t in ks],
-                ), n),
-                SRC,
-            )
-            .groupBy(F.col(DST).alias("id"))
-            .agg(
-                *[
-                    F.sum(F.col(f"x{t}") * F.col("inv_deg")).alias(f"c{t}")
-                    for t in ks
-                ]
-            )
-        )
-        prev = state
-        state = materialize(
-            state.join(join_side(contribs, n), "id", "left").select(
+        e_cols = [
+            F.when(F.col("_t") == t, F.lit(1.0 / sizes[t]))
+            .otherwise(F.lit(0.0))
+            .alias(f"e{t}")
+            for t in ks
+        ]
+        state = r.start(
+            tagged.select(
                 "id",
-                *[F.col(f"e{t}") for t in ks],
+                *e_cols,
                 *[
-                    (
-                        F.lit(1.0 - d) * F.col(f"e{t}")
-                        + F.lit(d) * F.coalesce(F.col(f"c{t}"), F.lit(0.0))
-                    ).alias(f"r{t}")
+                    F.when(F.col("_t") == t, F.lit(1.0 / sizes[t]))
+                    .otherwise(F.lit(0.0))
+                    .alias(f"r{t}")
                     for t in ks
                 ],
             )
         )
-        prev.unpersist()
 
-    out = state.select("id", *[f"r{t}" for t in ks])
-    e_inv.unpersist()
-    nodes.unpersist()
-    return out
+        # graph.join_side: while small the broadcast V-row state lets the
+        # cached hash(src) edge table stream with no exchange and leaves the
+        # partial-sum partitioning unchanged
+        d = damping
+        for _ in range(max_iter):
+            contribs = (
+                e_inv.join(
+                    join_side(state.select(
+                        F.col("id").alias(SRC),
+                        *[F.col(f"r{t}").alias(f"x{t}") for t in ks],
+                    ), n),
+                    SRC,
+                )
+                .groupBy(F.col(DST).alias("id"))
+                .agg(
+                    *[
+                        F.sum(F.col(f"x{t}") * F.col("inv_deg")).alias(f"c{t}")
+                        for t in ks
+                    ]
+                )
+            )
+            state = r.materialize(
+                state.join(join_side(contribs, n), "id", "left").select(
+                    "id",
+                    *[F.col(f"e{t}") for t in ks],
+                    *[
+                        (
+                            F.lit(1.0 - d) * F.col(f"e{t}")
+                            + F.lit(d) * F.coalesce(F.col(f"c{t}"), F.lit(0.0))
+                        ).alias(f"r{t}")
+                        for t in ks
+                    ],
+                )
+            )
+        return state.select("id", *[f"r{t}" for t in ks])
 
 
 def cheirank_plane(

@@ -93,7 +93,9 @@ def attack_percolation(
             .limit(r_ties)
         )
         removed = hi.unionByName(ties)
-    return _survivor_census(e, nodes, removed, k, cc)
+    out = _survivor_census(e, nodes, removed, k, cc)
+    e.unpersist()
+    return out
 
 
 def random_percolation(
@@ -152,7 +154,9 @@ def random_percolation(
             ranked.filter(F.col("rv") == t).select("id").orderBy("id").limit(r_ties)
         )
         removed = lo.unionByName(ties)
-    return _survivor_census(e, nodes, removed, k, cc)
+    out = _survivor_census(e, nodes, removed, k, cc)
+    e.unpersist()
+    return out
 
 
 def _survivor_census(
@@ -199,9 +203,7 @@ def _survivor_census(
     n_surv = survivors.count()
     n_isolated = n_surv - int(stats["n_in_cc"])
     giant = max(int(stats["giant_edgeful"]), 1 if n_surv > 0 else 0)
-    spark = e.sparkSession
-    e.unpersist()  # no-op when the caller never persisted it
-    return spark.createDataFrame(
+    return e.sparkSession.createDataFrame(
         [
             (
                 k,

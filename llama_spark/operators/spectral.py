@@ -49,7 +49,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, join_side, materialize, symmetrize
+from ..graph import DST, SRC, join_side, symmetrize
+from ..plans.fixpoint import rounds
 
 FIEDLER_ITERS = 16
 
@@ -78,82 +79,68 @@ def fiedler_vector(
     undirected degree (handy for downstream cut/conductance queries)."""
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    und = (
-        symmetrize(edges)
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    und.count()
-    deg = (
-        und.groupBy(F.col(SRC).alias("id"))
-        .agg(F.count("*").cast("double").alias("d"))
-        .repartition(p, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = deg.count()
-    if n == 0:
-        und.unpersist()
-        return deg.select("id", "d", F.lit(0.0).alias("fiedler"))
-    c = 1.0 + deg.agg(F.max("d")).head()[0]
-    n_d = float(n)
-
-    # deterministic non-constant start vector, exact-integer both engines
-    state = materialize(
-        deg.select(
-            "id",
-            "d",
-            (
-                ((F.col("id") * F.lit(2654435761)) % F.lit(1048576)).cast("double")
-                / F.lit(1048576.0)
-                - F.lit(0.5)
-            ).alias("x"),
+    with rounds() as r:
+        und, _ = r.keep(symmetrize(edges).repartition(p, SRC))
+        deg, n = r.keep(
+            und.groupBy(F.col(SRC).alias("id"))
+            .agg(F.count("*").cast("double").alias("d"))
+            .repartition(p, "id")
         )
-    )
+        if n == 0:
+            return deg.select("id", "d", F.lit(0.0).alias("fiedler"))
+        c = 1.0 + deg.agg(F.max("d")).head()[0]
+        n_d = float(n)
 
-    prev_mat = state
-    for _ in range(max_iter):
-        gather = und.join(
-            join_side(state.select(F.col("id").alias(SRC), F.col("x").alias("xs")), n),
-            SRC,
-        ).groupBy(F.col(DST).alias("id")).agg(F.sum("xs").alias("s"))
-        y = state.join(join_side(gather, n), "id", "left").select(
-            "id",
-            "d",
-            (
-                (F.lit(c) - F.col("d")) * F.col("x")
-                + F.coalesce(F.col("s"), F.lit(0.0))
-            ).alias("y"),
+        # deterministic non-constant start vector, exact-integer both engines
+        state = r.start(
+            deg.select(
+                "id",
+                "d",
+                (
+                    ((F.col("id") * F.lit(2654435761)) % F.lit(1048576)).cast("double")
+                    / F.lit(1048576.0)
+                    - F.lit(0.5)
+                ).alias("x"),
+            )
         )
-        # one materialization per step; the normalization scalars are read
-        # back from the cached rows and re-entered as literals — same
-        # binary64 ops in the same order as the previous broadcast-stats
-        # plan (m = sy/n ; x' = (y - m) / sqrt(syy - (m*m)*n); the
-        # numerator/denominator division stays in SQL, so a zero or NULL
-        # denominator yields NULL exactly as before)
-        ymat = materialize(y)
-        sy, syy = ymat.agg(
-            F.sum("y").alias("sy"), F.sum(F.col("y") * F.col("y")).alias("syy")
-        ).head()
-        m = None if sy is None else sy / n_d
-        denom = _py_sqrt(None if m is None else syy - (m * m) * n_d)
-        old = prev_mat
-        prev_mat = ymat
-        state = ymat.select(
-            "id",
-            "d",
-            (
-                (F.col("y") - F.lit(m).cast("double"))
-                / F.lit(denom).cast("double")
-            ).alias("x"),
-        )
-        old.unpersist()
 
-    head = state.orderBy(F.abs(F.col("x")).desc(), "id").select("x").head()
-    sign = 1.0 if head is None or head[0] >= 0.0 else -1.0
-    out = state.select("id", "d", (F.col("x") * F.lit(sign)).alias("fiedler"))
-    und.unpersist()
-    deg.unpersist()
-    return out
+        for _ in range(max_iter):
+            gather = und.join(
+                join_side(state.select(F.col("id").alias(SRC), F.col("x").alias("xs")), n),
+                SRC,
+            ).groupBy(F.col(DST).alias("id")).agg(F.sum("xs").alias("s"))
+            y = state.join(join_side(gather, n), "id", "left").select(
+                "id",
+                "d",
+                (
+                    (F.lit(c) - F.col("d")) * F.col("x")
+                    + F.coalesce(F.col("s"), F.lit(0.0))
+                ).alias("y"),
+            )
+            # one materialization per step; the normalization scalars are read
+            # back from the cached rows and re-entered as literals — same
+            # binary64 ops in the same order as the previous broadcast-stats
+            # plan (m = sy/n ; x' = (y - m) / sqrt(syy - (m*m)*n); the
+            # numerator/denominator division stays in SQL, so a zero or NULL
+            # denominator yields NULL exactly as before)
+            ymat = r.materialize(y)
+            sy, syy = ymat.agg(
+                F.sum("y").alias("sy"), F.sum(F.col("y") * F.col("y")).alias("syy")
+            ).head()
+            m = None if sy is None else sy / n_d
+            denom = _py_sqrt(None if m is None else syy - (m * m) * n_d)
+            state = ymat.select(
+                "id",
+                "d",
+                (
+                    (F.col("y") - F.lit(m).cast("double"))
+                    / F.lit(denom).cast("double")
+                ).alias("x"),
+            )
+
+        head = state.orderBy(F.abs(F.col("x")).desc(), "id").select("x").head()
+        sign = 1.0 if head is None or head[0] >= 0.0 else -1.0
+        return state.select("id", "d", (F.col("x") * F.lit(sign)).alias("fiedler"))
 
 
 def spectral_cut_summary(edges: DataFrame, max_iter: int = FIEDLER_ITERS) -> DataFrame:
@@ -217,108 +204,99 @@ def spectral_embedding2(
     downstream ML (cluster-id hashing, locality-aware relabeling)."""
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    und = symmetrize(edges).repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    deg = (
-        und.groupBy(F.col(SRC).alias("id"))
-        .agg(F.count("*").cast("double").alias("d"))
-        .repartition(p, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = deg.count()
-    if n == 0:
-        und.unpersist()
-        return deg.select(
-            "id", F.lit(0.0).alias("e1"), F.lit(0.0).alias("e2")
+    with rounds() as r:
+        und, _ = r.keep(symmetrize(edges).repartition(p, SRC))
+        deg, n = r.keep(
+            und.groupBy(F.col(SRC).alias("id"))
+            .agg(F.count("*").cast("double").alias("d"))
+            .repartition(p, "id")
         )
-    c = 1.0 + deg.agg(F.max("d")).head()[0]
-    n_d = float(n)
-
-    def h(const: int):
-        return (
-            ((F.col("id") * F.lit(const)) % F.lit(1048576)).cast("double")
-            / F.lit(1048576.0)
-            - F.lit(0.5)
-        )
-
-    state = materialize(
-        deg.select("id", "d", h(2654435761).alias("x1"), h(1566083941).alias("x2"))
-    )
-
-    for _ in range(max_iter):
-        gather = (
-            und.join(
-                state.select(
-                    F.col("id").alias(SRC),
-                    F.col("x1").alias("g1"),
-                    F.col("x2").alias("g2"),
-                ).hint("shuffle_hash"),
-                SRC,
+        if n == 0:
+            return deg.select(
+                "id", F.lit(0.0).alias("e1"), F.lit(0.0).alias("e2")
             )
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.sum("g1").alias("s1g"), F.sum("g2").alias("s2g"))
+        c = 1.0 + deg.agg(F.max("d")).head()[0]
+        n_d = float(n)
+
+        def h(const: int):
+            return (
+                ((F.col("id") * F.lit(const)) % F.lit(1048576)).cast("double")
+                / F.lit(1048576.0)
+                - F.lit(0.5)
+            )
+
+        state = r.start(
+            deg.select("id", "d", h(2654435761).alias("x1"), h(1566083941).alias("x2"))
         )
-        y = state.join(gather, "id", "left").select(
-            "id",
-            "d",
-            (
-                (F.lit(c) - F.col("d")) * F.col("x1")
-                + F.coalesce(F.col("s1g"), F.lit(0.0))
-            ).alias("y1"),
-            (
-                (F.lit(c) - F.col("d")) * F.col("x2")
-                + F.coalesce(F.col("s2g"), F.lit(0.0))
-            ).alias("y2"),
-        )
-        # NOTE: this loop keeps the broadcast-stats crossJoin structure (the
-        # fiedler variants collect the constants driver-side instead): with
-        # the shuffle_hash gather the iterate's partial-sum partition layout
-        # is AQE-dependent, and aggregating the checkpointed iterate was
-        # measured to regroup the float partials (last-bits drift vs the
-        # inline plan at sf0.1) — not worth it for a non-bench operator.
-        y = y.persist(StorageLevel.MEMORY_AND_DISK)
-        st = y.agg(
-            F.sum("y1").alias("s1"),
-            F.sum("y2").alias("s2"),
-            F.sum(F.col("y1") * F.col("y1")).alias("s11"),
-            F.sum(F.col("y2") * F.col("y2")).alias("s22"),
-            F.sum(F.col("y1") * F.col("y2")).alias("s12"),
-        )
-        m1 = F.col("s1") / F.lit(n_d)
-        m2 = F.col("s2") / F.lit(n_d)
-        u1n = F.sqrt(F.col("s11") - (m1 * m1) * F.lit(n_d))
-        beta = (
-            F.col("s12") - m1 * F.col("s2") - m2 * F.col("s1") + (m1 * m2) * F.lit(n_d)
-        ) / u1n
-        u2n = F.sqrt(F.col("s22") - (m2 * m2) * F.lit(n_d) - beta * beta)
-        prev = state
-        state = materialize(
-            y.crossJoin(F.broadcast(st)).select(
+
+        for _ in range(max_iter):
+            gather = (
+                und.join(
+                    state.select(
+                        F.col("id").alias(SRC),
+                        F.col("x1").alias("g1"),
+                        F.col("x2").alias("g2"),
+                    ).hint("shuffle_hash"),
+                    SRC,
+                )
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum("g1").alias("s1g"), F.sum("g2").alias("s2g"))
+            )
+            y = state.join(gather, "id", "left").select(
                 "id",
                 "d",
-                ((F.col("y1") - m1) / u1n).alias("x1"),
                 (
-                    (
-                        F.col("y2")
-                        - m2
-                        - (beta / u1n) * (F.col("y1") - m1)
-                    )
-                    / u2n
-                ).alias("x2"),
+                    (F.lit(c) - F.col("d")) * F.col("x1")
+                    + F.coalesce(F.col("s1g"), F.lit(0.0))
+                ).alias("y1"),
+                (
+                    (F.lit(c) - F.col("d")) * F.col("x2")
+                    + F.coalesce(F.col("s2g"), F.lit(0.0))
+                ).alias("y2"),
             )
-        )
-        prev.unpersist()
-        y.unpersist()
+            # NOTE: this loop keeps the broadcast-stats crossJoin structure (the
+            # fiedler variants collect the constants driver-side instead): with
+            # the shuffle_hash gather the iterate's partial-sum partition layout
+            # is AQE-dependent, and aggregating the checkpointed iterate was
+            # measured to regroup the float partials (last-bits drift vs the
+            # inline plan at sf0.1) — not worth it for a non-bench operator.
+            y = r.cache(y)
+            st = y.agg(
+                F.sum("y1").alias("s1"),
+                F.sum("y2").alias("s2"),
+                F.sum(F.col("y1") * F.col("y1")).alias("s11"),
+                F.sum(F.col("y2") * F.col("y2")).alias("s22"),
+                F.sum(F.col("y1") * F.col("y2")).alias("s12"),
+            )
+            m1 = F.col("s1") / F.lit(n_d)
+            m2 = F.col("s2") / F.lit(n_d)
+            u1n = F.sqrt(F.col("s11") - (m1 * m1) * F.lit(n_d))
+            beta = (
+                F.col("s12") - m1 * F.col("s2") - m2 * F.col("s1") + (m1 * m2) * F.lit(n_d)
+            ) / u1n
+            u2n = F.sqrt(F.col("s22") - (m2 * m2) * F.lit(n_d) - beta * beta)
+            state = r.materialize(
+                y.crossJoin(F.broadcast(st)).select(
+                    "id",
+                    "d",
+                    ((F.col("y1") - m1) / u1n).alias("x1"),
+                    (
+                        (
+                            F.col("y2")
+                            - m2
+                            - (beta / u1n) * (F.col("y1") - m1)
+                        )
+                        / u2n
+                    ).alias("x2"),
+                )
+            )
 
-    out_cols = []
-    for col in ("x1", "x2"):
-        head = state.orderBy(F.abs(F.col(col)).desc(), "id").select(col).head()
-        sgn = 1.0 if head is None or head[0] >= 0.0 else -1.0
-        out_cols.append((F.col(col) * F.lit(sgn)).alias("e" + col[-1]))
-    out = state.select("id", *out_cols)
-    und.unpersist()
-    deg.unpersist()
-    return out
+        out_cols = []
+        for col in ("x1", "x2"):
+            head = state.orderBy(F.abs(F.col(col)).desc(), "id").select(col).head()
+            sgn = 1.0 if head is None or head[0] >= 0.0 else -1.0
+            out_cols.append((F.col(col) * F.lit(sgn)).alias("e" + col[-1]))
+        return state.select("id", *out_cols)
 
 
 def fiedler_vector_normalized(
@@ -349,84 +327,75 @@ def fiedler_vector_normalized(
     d = degree) unchanged."""
     spark = edges.sparkSession
     p_ = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if weighted_adj is None:
-        und = symmetrize(edges).select(SRC, DST, F.lit(1.0).alias("w"))
-    else:
-        und = weighted_adj.select(SRC, DST, F.col("w").cast("double").alias("w"))
-    und = und.repartition(p_, SRC).persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    deg = (
-        und.groupBy(F.col(SRC).alias("id"))
-        .agg(F.sum("w").alias("d"))
-        .repartition(p_, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = deg.count()
-    if n == 0:
-        und.unpersist()
-        return deg.select("id", "d", F.lit(0.0).alias("nfiedler"))
-    s2 = float(deg.agg(F.sum("d")).head()[0])  # Σd = Σ(√d)², exact integer sum
-
-    state = materialize(
-        deg.select(
-            "id",
-            "d",
-            F.sqrt(F.col("d")).alias("sd"),
-            (
-                ((F.col("id") * F.lit(2654435761)) % F.lit(1048576)).cast("double")
-                / F.lit(1048576.0)
-                - F.lit(0.5)
-            ).alias("x"),
+    with rounds() as r:
+        if weighted_adj is None:
+            und = symmetrize(edges).select(SRC, DST, F.lit(1.0).alias("w"))
+        else:
+            und = weighted_adj.select(SRC, DST, F.col("w").cast("double").alias("w"))
+        und, _ = r.keep(und.repartition(p_, SRC))
+        deg, n = r.keep(
+            und.groupBy(F.col(SRC).alias("id"))
+            .agg(F.sum("w").alias("d"))
+            .repartition(p_, "id")
         )
-    )
+        if n == 0:
+            return deg.select("id", "d", F.lit(0.0).alias("nfiedler"))
+        s2 = float(deg.agg(F.sum("d")).head()[0])  # Σd = Σ(√d)², exact integer sum
 
-    prev_mat = state
-    for _ in range(max_iter):
-        gather = (
-            und.join(
-                join_side(state.select(
-                    F.col("id").alias(SRC), (F.col("x") / F.col("sd")).alias("xs")
-                ), n),
-                SRC,
+        state = r.start(
+            deg.select(
+                "id",
+                "d",
+                F.sqrt(F.col("d")).alias("sd"),
+                (
+                    ((F.col("id") * F.lit(2654435761)) % F.lit(1048576)).cast("double")
+                    / F.lit(1048576.0)
+                    - F.lit(0.5)
+                ).alias("x"),
             )
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.sum(F.col("w") * F.col("xs")).alias("g"))
         )
-        y = state.join(join_side(gather, n), "id", "left").select(
-            "id",
-            "d",
-            "sd",
-            (F.col("x") + F.coalesce(F.col("g"), F.lit(0.0)) / F.col("sd")).alias("y"),
-        )
-        # one materialization per step; deflation/normalization constants
-        # collected from the cached rows and re-entered as literals (same
-        # binary64 ops in the same order as the previous broadcast-stats
-        # plan; the per-row division stays in SQL so zero/NULL
-        # denominators yield NULL exactly as before)
-        ymat = materialize(y)
-        syd, syy = ymat.agg(
-            F.sum(F.col("y") * F.col("sd")).alias("syd"),
-            F.sum(F.col("y") * F.col("y")).alias("syy"),
-        ).head()
-        pr = None if syd is None else syd / s2
-        denom = _py_sqrt(
-            None if pr is None else syy - 2.0 * pr * syd + (pr * pr) * s2
-        )
-        prev_mat, old_mat = ymat, prev_mat
-        state = ymat.select(
-            "id",
-            "d",
-            "sd",
-            (
-                (F.col("y") - F.lit(pr).cast("double") * F.col("sd"))
-                / F.lit(denom).cast("double")
-            ).alias("x"),
-        )
-        old_mat.unpersist()
 
-    head = state.orderBy(F.abs(F.col("x")).desc(), "id").select("x").head()
-    sign = 1.0 if head is None or head[0] >= 0.0 else -1.0
-    out = state.select("id", "d", (F.col("x") * F.lit(sign)).alias("nfiedler"))
-    und.unpersist()
-    deg.unpersist()
-    return out
+        for _ in range(max_iter):
+            gather = (
+                und.join(
+                    join_side(state.select(
+                        F.col("id").alias(SRC), (F.col("x") / F.col("sd")).alias("xs")
+                    ), n),
+                    SRC,
+                )
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum(F.col("w") * F.col("xs")).alias("g"))
+            )
+            y = state.join(join_side(gather, n), "id", "left").select(
+                "id",
+                "d",
+                "sd",
+                (F.col("x") + F.coalesce(F.col("g"), F.lit(0.0)) / F.col("sd")).alias("y"),
+            )
+            # one materialization per step; deflation/normalization constants
+            # collected from the cached rows and re-entered as literals (same
+            # binary64 ops in the same order as the previous broadcast-stats
+            # plan; the per-row division stays in SQL so zero/NULL
+            # denominators yield NULL exactly as before)
+            ymat = r.materialize(y)
+            syd, syy = ymat.agg(
+                F.sum(F.col("y") * F.col("sd")).alias("syd"),
+                F.sum(F.col("y") * F.col("y")).alias("syy"),
+            ).head()
+            pr = None if syd is None else syd / s2
+            denom = _py_sqrt(
+                None if pr is None else syy - 2.0 * pr * syd + (pr * pr) * s2
+            )
+            state = ymat.select(
+                "id",
+                "d",
+                "sd",
+                (
+                    (F.col("y") - F.lit(pr).cast("double") * F.col("sd"))
+                    / F.lit(denom).cast("double")
+                ).alias("x"),
+            )
+
+        head = state.orderBy(F.abs(F.col("x")).desc(), "id").select("x").head()
+        sign = 1.0 if head is None or head[0] >= 0.0 else -1.0
+        return state.select("id", "d", (F.col("x") * F.lit(sign)).alias("nfiedler"))

@@ -123,10 +123,8 @@ def sybilrank(
     variant."""
     import math
 
-    from pyspark.storagelevel import StorageLevel
-
-    from ..graph import DST, SRC, join_side, materialize, nodes_of, symmetrize
-    from ..plans.fixpoint import iterate
+    from ..graph import DST, SRC, join_side, nodes_of, symmetrize
+    from ..plans.fixpoint import iterate, rounds
 
     if not seeds:
         raise ValueError("seeds must be non-empty")
@@ -134,55 +132,47 @@ def sybilrank(
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     und = symmetrize(edges)
-    nodes = nodes_of(edges).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        nodes.unpersist()
-        return nodes.select(
-            "id", F.lit(0.0).alias("trust_scaled"), F.lit(0.0).alias("rank")
-        )
-    k = max_iter if max_iter is not None else max(1, math.ceil(math.log2(n)))
-    deg = und.groupBy(F.col(SRC).alias("id")).agg(F.count("*").alias("deg"))
-    ew = (
-        und.join(deg.select(F.col("id").alias(SRC), "deg"), SRC)
-        .select(SRC, DST, (F.lit(1.0) / F.col("deg")).alias("inv"))
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ew.count()
-
-    init = nodes.select(
-        "id",
-        F.when(F.col("id").isin(seeds), F.lit(1.0 / len(seeds)))
-        .otherwise(F.lit(0.0))
-        .alias("t"),
-    )
-
-    def step(t: DataFrame, _i: int) -> DataFrame:
-        gathered = (
-            join_side(t, n).join(ew, t["id"] == ew[SRC])
-            .select(F.col(DST).alias("id"), (F.col("inv") * F.col("t")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-        )
-        return nodes.join(join_side(gathered, n), "id", "left").select(
-            "id", F.coalesce("s", F.lit(0.0)).alias("t")
+    with rounds() as r:
+        nodes, n = r.keep(nodes_of(edges).repartition(p, "id"))
+        if n == 0:
+            return nodes.select(
+                "id", F.lit(0.0).alias("trust_scaled"), F.lit(0.0).alias("rank")
+            )
+        k = max_iter if max_iter is not None else max(1, math.ceil(math.log2(n)))
+        deg = und.groupBy(F.col(SRC).alias("id")).agg(F.count("*").alias("deg"))
+        ew, _ = r.keep(
+            und.join(deg.select(F.col("id").alias(SRC), "deg"), SRC)
+            .select(SRC, DST, (F.lit(1.0) / F.col("deg")).alias("inv"))
+            .repartition(p, SRC)
         )
 
-    result = iterate(init, step, max_iter=k, name="sybilrank")
-    scaled = result.state.select(
-        "id", F.round(F.col("t") * F.lit(float(n)), 6).alias("trust_scaled")
-    )
-    out = materialize(
-        scaled.join(deg, "id").select(
+        init = nodes.select(
+            "id",
+            F.when(F.col("id").isin(seeds), F.lit(1.0 / len(seeds)))
+            .otherwise(F.lit(0.0))
+            .alias("t"),
+        )
+
+        def step(t: DataFrame, _i: int) -> DataFrame:
+            gathered = (
+                join_side(t, n).join(ew, t["id"] == ew[SRC])
+                .select(F.col(DST).alias("id"), (F.col("inv") * F.col("t")).alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("s"))
+            )
+            return nodes.join(join_side(gathered, n), "id", "left").select(
+                "id", F.coalesce("s", F.lit(0.0)).alias("t")
+            )
+
+        result = iterate(init, step, max_iter=k, name="sybilrank")
+        scaled = result.state.select(
+            "id", F.round(F.col("t") * F.lit(float(n)), 6).alias("trust_scaled")
+        )
+        return scaled.join(deg, "id").select(
             "id",
             "trust_scaled",
             F.round(F.col("trust_scaled") / F.col("deg"), 6).alias("rank"),
-        )
-    )
-    ew.unpersist()
-    nodes.unpersist()
-    return out
+        ).localCheckpoint(eager=True)
 
 
 def who_to_follow(

@@ -17,6 +17,14 @@ Scale notes (the two things that kill naive iterative Spark jobs):
   and per-iteration / per-partition metrics, so an interrupted run resumes
   bit-identically (north-rule resumability; LLAMA analog: snapshot levels,
   ll_mlcsr_sp.h:624-713).
+
+Cache lifetime: ``with rounds() as r:`` is the one owner of every frame
+an iterative kernel caches — setup tables for the whole call, scratch and
+state for one round — and of its per-round ``IterationMetrics``. It
+releases them on every exit path, so results come back with no live cache
+entry. ``iterate`` runs its loop inside one; kernels whose round does more
+than ``state ← step(state)`` (HITS' two half-steps, the spectral stats
+probes) write the loop themselves against the same scope.
 """
 
 from __future__ import annotations
@@ -24,11 +32,14 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
+
+from ..graph import materialize_counted
 
 MANIFEST = "manifest.json"
 
@@ -58,6 +69,90 @@ class FixpointResult:
     # node count the kernel already materialized (e.g. pagerank's 1/N) —
     # callers that need |V| read it here instead of paying a count() job
     n_nodes: int | None = None
+
+
+class Rounds:
+    """Owner of every frame one iterative call caches, and of its
+    per-round metrics. Open it with :func:`rounds`.
+
+    - ``keep(df)`` — a table every round reads (the node set, a cached
+      edge table): persisted and counted at once, held until the scope
+      exits.
+    - ``cache(df)`` — a frame one round reads more than once: persisted
+      lazily, part of that round.
+    - ``start(df)`` / ``materialize(df)`` — round state through
+      ``graph.materialize_counted`` (one job: lineage truncated, size
+      statistics reset). ``start`` is the initial state; ``materialize``
+      is this round's state and ends the round.
+    - ``end_round(**fields)`` — ends a round whose state the caller
+      materialized itself (``iterate`` keeps its own cadence).
+
+    Ending round k records one ``IterationMetrics`` (seconds since the
+    previous round ended) and releases round k-1's frames: the next
+    state exists, so nothing reads them again. Exit releases the rest on
+    every path — return, early return or raise. A state handed back stays
+    readable: its cache entry goes, its localCheckpoint blocks do not.
+    """
+
+    def __init__(self):
+        self.metrics: list[IterationMetrics] = []
+        self._setup: list[DataFrame] = []
+        self._prev: list[DataFrame] = []  # frames of the last finished round
+        self._cur: list[DataFrame] = []  # frames of the round in progress
+        self._t0 = time.time()
+
+    def keep(self, df: DataFrame) -> tuple[DataFrame, int]:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._setup.append(df)
+        return df, df.count()
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._cur.append(df)
+        return df
+
+    def start(self, df: DataFrame) -> DataFrame:
+        out, _ = materialize_counted(df)
+        self._prev.append(out)  # the state before round 0
+        self._t0 = time.time()
+        return out
+
+    def materialize(self, df: DataFrame) -> DataFrame:
+        out, rows = materialize_counted(df)
+        self._cur.append(out)
+        self.end_round(rows=rows)
+        return out
+
+    def end_round(self, **fields) -> IterationMetrics:
+        now = time.time()
+        fields.setdefault("iteration", len(self.metrics))
+        fields.setdefault("rows", -1)
+        m = IterationMetrics(seconds=now - self._t0, **fields)
+        self.metrics.append(m)
+        _release(self._prev)
+        self._prev, self._cur = self._cur, []
+        self._t0 = now
+        return m
+
+    def close(self) -> None:
+        for frames in (self._prev, self._cur, self._setup):
+            _release(frames)
+
+
+def _release(frames: list[DataFrame]) -> None:
+    for df in frames:
+        df.unpersist()
+    frames.clear()
+
+
+@contextmanager
+def rounds() -> Iterator[Rounds]:
+    """``with rounds() as r:`` — see :class:`Rounds`."""
+    r = Rounds()
+    try:
+        yield r
+    finally:
+        r.close()
 
 
 def _write_manifest(checkpoint_dir: str, entries: list[dict]) -> None:
@@ -136,84 +231,81 @@ def iterate(
     # — no extra persist layer, or every iteration double-stores the state
     # and the stale blocks pile up faster than the ContextCleaner drops them.
     state = state.localCheckpoint(eager=True)
-    metrics: list[IterationMetrics] = []
     converged = False
-    it = start_iter - 1
+    persisted = False
 
-    for it in range(start_iter, max_iter):
-        t0 = time.time()
-        new_state = step(state, it)
-        # Materialize this iteration's plan now — ONE job: either the eager
-        # localCheckpoint (truncation iterations) or a count() that builds
-        # the persisted cache. The convergence probe rides that same job
-        # via observe; row counts are taken opportunistically.
-        obs = None
-        if updated_metric is not None:
-            from pyspark.sql import Observation
+    with rounds() as r:
+        for it in range(start_iter, max_iter):
+            new_state = step(state, it)
+            # Materialize this iteration's plan now — ONE job: either the
+            # eager localCheckpoint (truncation iterations) or a count() that
+            # builds the persisted cache. The convergence probe rides that
+            # same job via observe; row counts are taken opportunistically.
+            obs = None
+            if updated_metric is not None:
+                from pyspark.sql import Observation
 
-            # process-unique suffix: two instances of the same kernel may
-            # run concurrently from driver threads (plans/overlap.py) and
-            # must not collide on observation names
-            obs = Observation(f"{name}_it{it}_{next(_OBS_SEQ)}")
-            new_state = new_state.observe(obs, updated_metric.alias("updated"))
-        if (it - start_iter) % truncate_every == truncate_every - 1:
-            new_state = new_state.localCheckpoint(eager=True)
-            state_is_persisted = False
-        else:
-            new_state = new_state.persist(StorageLevel.MEMORY_AND_DISK)
-            new_state.count()
-            state_is_persisted = True
-        rows = -1
+                # process-unique suffix: two instances of the same kernel may
+                # run concurrently from driver threads (plans/overlap.py) and
+                # must not collide on observation names
+                obs = Observation(f"{name}_it{it}_{next(_OBS_SEQ)}")
+                new_state = new_state.observe(obs, updated_metric.alias("updated"))
+            persisted = (it - start_iter) % truncate_every != truncate_every - 1
+            if persisted:
+                new_state = r.cache(new_state)
+                new_state.count()
+            else:
+                new_state = new_state.localCheckpoint(eager=True)
 
-        updated = None
-        if obs is not None:
-            # metrics fired during the materialization job — no extra job
-            updated = int(obs.get["updated"] or 0)
-        elif updated_count is not None:
-            updated = updated_count(state, new_state)
+            updated = None
+            if obs is not None:
+                # metrics fired during the materialization job — no extra job
+                updated = int(obs.get["updated"] or 0)
+            elif updated_count is not None:
+                updated = updated_count(state, new_state)
 
-        m = IterationMetrics(iteration=it, seconds=time.time() - t0, rows=rows, updated=updated)
+            rows, path, partition_rows = -1, None, None
+            due = it % checkpoint_every == checkpoint_every - 1 or it == max_iter - 1
+            if checkpoint_dir and due:
+                rows = new_state.count()
+                path = os.path.join(checkpoint_dir, f"iter_{it:05d}")
+                new_state.write.mode("overwrite").parquet(path)
+                # durable state replaces the in-memory one
+                new_state = spark.read.parquet(path)
+                persisted = False
+                from pyspark.sql import functions as F
 
-        if checkpoint_dir and (it % checkpoint_every == checkpoint_every - 1 or it == max_iter - 1):
-            rows = new_state.count()
-            path = os.path.join(checkpoint_dir, f"iter_{it:05d}")
-            new_state.write.mode("overwrite").parquet(path)
-            # durable state replaces the in-memory one (also frees executor mem)
-            new_state.unpersist()
-            new_state = spark.read.parquet(path)
-            state_is_persisted = False
-            m.rows = rows
-            m.checkpoint_path = path
-            from pyspark.sql import functions as F
+                partition_rows = [
+                    row["count"]
+                    for row in new_state.groupBy(F.spark_partition_id().alias("pid"))
+                    .count()
+                    .orderBy("pid")
+                    .collect()
+                ]
 
-            m.partition_rows = [
-                r["count"]
-                for r in new_state.groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .orderBy("pid")
-                .collect()
-            ]
+            state = new_state
+            m = r.end_round(
+                iteration=it, rows=rows, updated=updated,
+                checkpoint_path=path, partition_rows=partition_rows,
+            )
+            entries.append({k: v for k, v in asdict(m).items() if v is not None} | {"name": name})
+            if checkpoint_dir:
+                _write_manifest(checkpoint_dir, entries)
 
-        state.unpersist()  # drop the previous iteration's blocks
-        state = new_state
-        metrics.append(m)
-        entries.append({k: v for k, v in asdict(m).items() if v is not None} | {"name": name})
-        if checkpoint_dir:
-            _write_manifest(checkpoint_dir, entries)
+            if updated is not None and updated == 0:
+                converged = True
+                break
 
-        if updated is not None and updated == 0:
-            converged = True
-            break
-
-    # Hand back a checkpointed frame, never a live CacheManager entry: a
-    # persisted final state would outlive the call (callers can't know to
-    # unpersist it) — one extra copy job at the END of the loop, not per
-    # iteration.
-    if metrics and state_is_persisted:
-        final = state.localCheckpoint(eager=True)
-        state.unpersist()
-        state = final
+        # Hand back a checkpointed frame, never a live CacheManager entry: a
+        # persisted final state would outlive the call (callers can't know to
+        # unpersist it) — one extra copy job at the END of the loop, not per
+        # iteration.
+        if persisted:
+            state = state.localCheckpoint(eager=True)
 
     return FixpointResult(
-        state=state, iterations=it + 1 - 0, converged=converged, metrics=metrics
+        state=state,
+        iterations=start_iter + len(r.metrics),
+        converged=converged,
+        metrics=r.metrics,
     )

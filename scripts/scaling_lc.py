@@ -12,8 +12,8 @@ sandbox expression of "N executors vs 4N executors" in the north rule.
 Usage: python scripts/scaling_lc.py [scale] [iters] [n_lo] [cores_per_exec]
 Runs local-cluster[n_lo,C,...] then local-cluster[4*n_lo,C,...] on the
 same deterministic R-MAT input, prints one JSON line per leg plus the
-efficiency summary. Pair with a loadavg gate (scripts/
-quiet_floor_and_scaling.sh pattern) on this noisy box.
+efficiency summary. Run it on an otherwise idle machine: other load
+skews the two legs differently.
 """
 
 from __future__ import annotations
