@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, join_side, materialize, nodes_of
+from ..graph import DST, SRC, join_side, nodes_of
 from ..plans.fixpoint import FixpointResult, iterate, rounds
 
 
@@ -89,7 +89,7 @@ def eigenvector_centrality(
             )
         e, _ = r.keep(_distinct_edges(edges, p))
 
-        state = r.start(nodes.select("id", F.lit(1.0 / n).alias("score")))
+        state, _ = r.start(nodes.select("id", F.lit(1.0 / n).alias("score")))
         for _ in range(max_iter):
             raw = r.cache(
                 e.join(join_side(state.select(F.col("id").alias(SRC), "score"), n), SRC)
@@ -97,7 +97,7 @@ def eigenvector_centrality(
                 .agg(F.sum("score").alias("s"))
             )
             tot = raw.agg(F.sum("s").alias("t"))
-            state = r.materialize(
+            state, _ = r.materialize(
                 nodes.join(raw, "id", "left")
                 .crossJoin(F.broadcast(tot))
                 .select(
@@ -246,11 +246,9 @@ def collective_influence(
     acc = ball.groupBy(F.col("v").alias("id")).agg(
         F.sum(F.col("_dw") - F.lit(1)).alias("_s")
     )
-    out = materialize(
-        deg.join(acc, "id", "left").select(
-            "id",
-            ((F.col("deg") - F.lit(1)) * F.coalesce("_s", F.lit(0))).alias("ci"),
-        )
-    )
+    out = deg.join(acc, "id", "left").select(
+        "id",
+        ((F.col("deg") - F.lit(1)) * F.coalesce("_s", F.lit(0))).alias("ci"),
+    ).localCheckpoint(eager=True)
     und.unpersist()
     return out

@@ -17,26 +17,21 @@ color-range scan.
 Scale shape per round (all the usual policies): live edges = the cached
 undirected table semi-filtered by the shrinking active set; one
 neighbor-min aggregate; ready nodes' used-color join; a bounded
-sequence-explode + anti-join for the mex. Active and colored state go
-through ``graph.materialize`` — active feeds both sides of the
-neighbor-min (the size-estimate-squaring hazard).
+sequence-explode + anti-join for the mex. The round scope
+(plans/fixpoint.rounds) owns every cached frame: the undirected table
+and degrees for the call, ready and used for one round, the active set
+(round state through ``materialize`` — it feeds both sides of the
+neighbor-min, the size-estimate-squaring hazard) until the next, and
+each round's mex frame as a result part until exit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..graph import (
-    DST,
-    SRC,
-    drop_self_loops,
-    materialize,
-    materialize_counted,
-    nodes_of,
-    undirected_double,
-)
+from ..graph import DST, SRC, drop_self_loops, nodes_of, undirected_double
+from ..plans.fixpoint import rounds
 from .mis import _key
 
 
@@ -54,96 +49,58 @@ def greedy_coloring(edges: DataFrame, max_rounds: int = 512) -> DataFrame:
     hub-decontracted graph.
     """
     spark = edges.sparkSession
-    und = (
-        drop_self_loops(undirected_double(edges.select(SRC, DST)))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    und.count()
-    # undirected degree, computed once: the mex candidate bound (mex ≤
-    # #used-colors ≤ degree, so sequence(0, deg) always contains the
-    # answer — any bound ≥ mex yields the identical minimum, which is why
-    # the SQL oracle may use the tighter used-count bound instead)
-    deg = (
-        und.groupBy(F.col(SRC).alias("id"))
-        .agg(F.count("*").alias("_deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    deg.count()
-    active = materialize(nodes_of(und))
-    # colored state = list of per-round materialized mex frames (the MIS
-    # selected_parts pattern) — the union is never re-materialized
-    # wholesale, each future round's used-color join reads the cached
-    # leaves directly
-    parts: list[DataFrame] = []
+    with rounds() as r:
+        und, _ = r.keep(drop_self_loops(undirected_double(edges.select(SRC, DST))).distinct())
+        # undirected degree, computed once: the mex candidate bound (mex ≤
+        # #used-colors ≤ degree, so sequence(0, deg) always contains the
+        # answer — any bound ≥ mex yields the identical minimum, which is why
+        # the SQL oracle may use the tighter used-count bound instead)
+        deg, _ = r.keep(und.groupBy(F.col(SRC).alias("id")).agg(F.count("*").alias("_deg")))
+        active, _ = r.start(nodes_of(und))
 
-    for r in range(max_rounds):
-        live = und.join(
-            active.withColumnRenamed("id", DST), DST, "left_semi"
-        )
-        nbr_min = (
-            live.join(active.withColumnRenamed("id", SRC), SRC, "left_semi")
-            .groupBy(F.col(SRC).alias("id"))
-            .agg(F.min(_key(F.col(DST), 0)).alias("b"))
-        )
-        # ready is referenced three times below (used, mex base, active
-        # anti-join) — persist it or each reference re-walks the live-edge
-        # aggregate
-        ready = (
-            active.join(nbr_min, "id", "left")
-            .filter(F.col("b").isNull() | (_key(F.col("id"), 0) < F.col("b")))
-            .select("id")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if parts:
-            colored_view = parts[0]
-            for p in parts[1:]:
-                colored_view = colored_view.unionByName(p)
-            used = (
-                und.join(ready.withColumnRenamed("id", SRC), SRC, "left_semi")
-                .join(
-                    colored_view.select(F.col("id").alias(DST), "color"), DST
+        for _round in range(max_rounds):
+            live = und.join(active.withColumnRenamed("id", DST), DST, "left_semi")
+            nbr_min = (
+                live.join(active.withColumnRenamed("id", SRC), SRC, "left_semi")
+                .groupBy(F.col(SRC).alias("id"))
+                .agg(F.min(_key(F.col(DST), 0)).alias("b"))
+            )
+            # ready is referenced three times below (used, mex base, active
+            # anti-join) — cache it or each reference re-walks the live-edge
+            # aggregate
+            ready = r.cache(
+                active.join(nbr_min, "id", "left")
+                .filter(F.col("b").isNull() | (_key(F.col("id"), 0) < F.col("b")))
+                .select("id")
+            )
+            # colored state = the earlier rounds' mex parts: their union is
+            # never re-materialized wholesale, each round's used-color join
+            # reads the cached leaves directly
+            colored = r.parts()
+            if colored is not None:
+                used = r.cache(
+                    und.join(ready.withColumnRenamed("id", SRC), SRC, "left_semi")
+                    .join(colored.select(F.col("id").alias(DST), "color"), DST)
+                    .select(F.col(SRC).alias("id"), "color")
                 )
-                .select(F.col(SRC).alias("id"), "color")
-                .persist(StorageLevel.MEMORY_AND_DISK)
+            else:
+                used = spark.createDataFrame([], "id long, color long")
+            r.part(
+                ready.join(deg, "id")
+                .select(
+                    "id",
+                    F.explode(F.sequence(F.lit(0), F.col("_deg"))).alias("color"),
+                )
+                .join(used, ["id", "color"], "left_anti")
+                .groupBy("id")
+                .agg(F.min("color").cast("long").alias("color"))
             )
+            active, n_active = r.materialize(active.join(ready, "id", "left_anti"))
+            if n_active == 0:
+                break
         else:
-            used = spark.createDataFrame([], "id long, color long")
-        mex = materialize(
-            ready.join(deg, "id")
-            .select(
-                "id",
-                F.explode(
-                    F.sequence(F.lit(0), F.col("_deg"))
-                ).alias("color"),
+            raise RuntimeError(
+                f"greedy_coloring did not finish in max_rounds={max_rounds}"
             )
-            .join(used, ["id", "color"], "left_anti")
-            .groupBy("id")
-            .agg(F.min("color").cast("long").alias("color"))
-        )
-        parts.append(mex)
-        prev_active = active
-        # count rides the single materialization job (materialize_counted)
-        active, n_active = materialize_counted(
-            active.join(ready, "id", "left_anti")
-        )
-        prev_active.unpersist()
-        ready.unpersist()
-        used.unpersist()  # no-op on the round-0 empty frame
-        if n_active == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"greedy_coloring did not finish in max_rounds={max_rounds}"
-        )
-
-    und.unpersist()
-    deg.unpersist()
-    active.unpersist()
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.localCheckpoint(eager=True)
-    for p in parts:
-        p.unpersist()
-    return out
+        colored = r.parts()
+    return colored.localCheckpoint(eager=True)

@@ -67,7 +67,7 @@ def heat_kernel_pagerank(
                 .groupBy(F.col(DST).alias("id"))
                 .agg(F.sum(F.col("x") * F.col("share")).alias("nx"))
             )
-            state = r.materialize(
+            state, _ = r.materialize(
                 state.join(contrib, "id", "left").select(
                     "id",
                     F.coalesce(F.col("nx"), F.lit(0.0)).alias("x"),

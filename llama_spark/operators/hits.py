@@ -62,7 +62,7 @@ def hits_result(
         e_src, _ = r.keep(e.repartition(p, SRC))
         e_dst, _ = r.keep(e.repartition(p, DST))
 
-        state = r.start(
+        state, _ = r.start(
             nodes.select(
                 "id", F.lit(1.0 / n).alias("auth"), F.lit(1.0 / n).alias("hub")
             )
@@ -105,7 +105,7 @@ def hits_result(
                 .agg(F.sum("auth").alias("hr"))
             )
             h_tot = h_raw.agg(F.sum("hr").alias("ht"))
-            state = r.materialize(
+            state, _ = r.materialize(
                 auth.join(h_raw, "id", "left")
                 .crossJoin(F.broadcast(h_tot))
                 .select(
@@ -170,7 +170,7 @@ def salsa_result(
         e_dst, _ = r.keep(e.join(idg, DST).repartition(p, DST))
         n_src = od.count()
 
-        state = r.start(
+        state, _ = r.start(
             nodes.join(od.select(F.col(SRC).alias("id")), "id", "left_semi")
             .select("id", F.lit(1.0 / n_src).alias("hub"))
         )
@@ -188,7 +188,7 @@ def salsa_result(
                 .groupBy(F.col(SRC).alias("id"))
                 .agg(F.sum(F.col("ar") / F.col("idg")).alias("hr"))
             )
-            state = r.materialize(
+            state, _ = r.materialize(
                 state.select("id").join(h_raw, "id", "left").select(
                     "id", F.coalesce("hr", F.lit(0.0)).alias("hub")
                 )

@@ -23,29 +23,100 @@ collision between adjacent edges would select two edges sharing a
 vertex — the post-round disjointness guard raises instead of returning
 an invalid matching (never observed).
 
-Spark plan per round over the persisted shrinking canonical edge set:
-one per-endpoint min-key aggregate (union of both endpoint projections,
-map-side combined), one self-join of edges against their endpoints'
-minima, one anti-join to drop matched vertices. All JVM expressions;
-``materialize`` caps lineage per round like every fixpoint kernel here.
+Spark plan per round over the shrinking canonical edge set (one round
+loop, ``_match_rounds``, serves both the unweighted and the weighted
+kernel; only the key and the carried columns differ): one per-endpoint
+min-key aggregate (union of both endpoint projections, map-side
+combined), one self-join of edges against their endpoints' minima, one
+anti-join to drop matched vertices. All JVM expressions; the round scope
+(plans/fixpoint.rounds) materializes the live edge set once per round
+and holds each round's matched edges as a result part until exit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, drop_self_loops, materialize, materialize_counted
+from ..graph import DST, SRC, drop_self_loops
+from ..plans.fixpoint import Rounds, rounds
+from .mis import _prio
 
-_P1, _P2, _P3, _MOD = 1_000_003, 2_654_435_761, 1_315_423_911, 2_147_483_647
 _B32 = 4_294_967_296
 
 
-def _edge_key(a, b, rnd: int):
-    eid = a * F.lit(_B32) + b
-    prio = ((eid % _P1) * F.lit(_P2) + F.lit(rnd * _P3) + (eid % _MOD)) % F.lit(_MOD)
-    return prio * F.lit(_B32) + (a * F.lit(65599) + b) % F.lit(_B32)
+def _edge_key(rnd: int):
+    a, b = F.col(SRC), F.col(DST)
+    return _prio(a * F.lit(_B32) + b, rnd) * F.lit(_B32) + (a * F.lit(65599) + b) % F.lit(_B32)
+
+
+def _weighted_key(rnd: int):
+    a, b = F.col(SRC), F.col(DST)
+    return ((F.lit(100000) - F.col("wq")) * F.lit(2_147_483_648) + _prio(
+        a * F.lit(_B32) + b, rnd
+    )) * F.lit(4096) + (a * F.lit(65599) + b) % F.lit(4096)
+
+
+def _match_rounds(
+    r: Rounds,
+    live: DataFrame,
+    n_live: int,
+    key: Callable[[int], Column],
+    name: str,
+    max_rounds: int,
+) -> DataFrame:
+    """Locally-minimal-edge rounds over the materialized canonical edge set
+    ``live`` (src < dst, plus any carried columns): each round matches
+    every edge whose ``key(round)`` is the minimum at both its endpoints
+    and drops all edges touching a matched vertex. Returns the matched
+    edges with ``live``'s columns."""
+    cols = live.columns
+    for rnd in range(1, max_rounds + 1):
+        if n_live == 0:
+            break
+        keyed = live.select(*cols, key(rnd).alias("k"))
+        ends = keyed.select(F.col(SRC).alias("id"), "k").unionByName(
+            keyed.select(F.col(DST).alias("id"), "k")
+        )
+        best = ends.groupBy("id").agg(F.min("k").alias("b"))
+        sel, n_sel = r.part(
+            keyed.join(
+                best.withColumnRenamed("id", SRC).withColumnRenamed("b", "bs"), SRC
+            )
+            .join(best.withColumnRenamed("id", DST).withColumnRenamed("b", "bd"), DST)
+            .filter((F.col("k") == F.col("bs")) & (F.col("k") == F.col("bd")))
+            .select(*cols)
+        )
+        m_ids = (
+            sel.select(F.col(SRC).alias("id"))
+            .unionByName(sel.select(F.col(DST).alias("id")))
+            .distinct()
+        )
+        if n_sel > 0:
+            # disjointness guard: a full-key collision between adjacent
+            # minimal edges would match a vertex twice — raise, don't return
+            n_ends = m_ids.count()
+            if n_ends != 2 * n_sel:
+                raise RuntimeError(
+                    f"{name} round {rnd}: selected edges share a vertex "
+                    f"({n_sel} edges, {n_ends} distinct endpoints) — "
+                    "adjacent full-key collision"
+                )
+        live, n_live = r.materialize(
+            live.join(m_ids.withColumnRenamed("id", SRC), SRC, "left_anti").join(
+                m_ids.withColumnRenamed("id", DST), DST, "left_anti"
+            )
+        )
+    else:
+        if n_live > 0:
+            raise RuntimeError(
+                f"{name} did not stabilize in max_rounds={max_rounds} "
+                f"({n_live} edges still live); raise max_rounds"
+            )
+    out = r.parts()
+    return live if out is None else out  # no part: live was empty
 
 
 def maximal_matching(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
@@ -53,72 +124,13 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     undirected simple graph: endpoint-disjoint edges such that every
     remaining edge touches a matched vertex. Deterministic (pure function
     of the edge set); raises if edges remain after ``max_rounds``."""
-    live, n_live = materialize_counted(
-        drop_self_loops(edges.select(SRC, DST))
-        .select(F.least(SRC, DST).alias(SRC), F.greatest(SRC, DST).alias(DST))
-        .distinct()
-    )
-    matched_parts: list[DataFrame] = []
-
-    for r in range(1, max_rounds + 1):
-        if n_live == 0:
-            break
-        keyed = live.select(
-            SRC, DST, _edge_key(F.col(SRC), F.col(DST), r).alias("k")
-        )
-        ends = keyed.select(F.col(SRC).alias("id"), "k").unionByName(
-            keyed.select(F.col(DST).alias("id"), "k")
-        )
-        best = ends.groupBy("id").agg(F.min("k").alias("b"))
-        sel, n_sel = materialize_counted(
-            keyed.join(
-                best.withColumnRenamed("id", SRC).withColumnRenamed("b", "bs"), SRC
-            )
-            .join(best.withColumnRenamed("id", DST).withColumnRenamed("b", "bd"), DST)
-            .filter((F.col("k") == F.col("bs")) & (F.col("k") == F.col("bd")))
-            .select(SRC, DST)
-        )
-        if n_sel > 0:
-            # disjointness guard: a full-key collision between adjacent
-            # minimal edges would match a vertex twice — raise, don't return
-            n_ends = (
-                sel.select(F.col(SRC).alias("id"))
-                .unionByName(sel.select(F.col(DST).alias("id")))
-                .distinct()
-                .count()
-            )
-            if n_ends != 2 * n_sel:
-                raise RuntimeError(
-                    f"matching round {r}: selected edges share a vertex "
-                    f"({n_sel} edges, {n_ends} distinct endpoints) — "
-                    "adjacent full-key collision"
-                )
-            matched_parts.append(sel)
-        m_ids = (
-            sel.select(F.col(SRC).alias("id"))
-            .unionByName(sel.select(F.col(DST).alias("id")))
+    with rounds() as r:
+        live, n_live = r.start(
+            drop_self_loops(edges.select(SRC, DST))
+            .select(F.least(SRC, DST).alias(SRC), F.greatest(SRC, DST).alias(DST))
             .distinct()
         )
-        prev = live
-        live, n_live = materialize_counted(
-            live.join(m_ids.withColumnRenamed("id", SRC), SRC, "left_anti").join(
-                m_ids.withColumnRenamed("id", DST), DST, "left_anti"
-            )
-        )
-        prev.unpersist()
-    else:
-        if n_live > 0:
-            raise RuntimeError(
-                f"matching did not stabilize in max_rounds={max_rounds} "
-                f"({n_live} edges still live); raise max_rounds"
-            )
-
-    if not matched_parts:
-        return edges.sparkSession.createDataFrame([], f"{SRC} long, {DST} long")
-    out = matched_parts[0]
-    for p in matched_parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return _match_rounds(r, live, n_live, _edge_key, "matching", max_rounds)
 
 
 def maximal_weight_matching(
@@ -144,8 +156,8 @@ def maximal_weight_matching(
                     + (a·65599 + b) mod 4096
 
     MIN-key selection ⇒ max weight wins, ties broken by the MIS hash
-    family. Same round structure, disjointness guard and lineage capping
-    as :func:`maximal_matching`."""
+    family. Same round loop and disjointness guard as
+    :func:`maximal_matching`."""
     und = drop_self_loops(
         edges.select(SRC, DST, F.col(weight_col).alias("_w"))
     ).select(
@@ -153,83 +165,18 @@ def maximal_weight_matching(
         F.greatest(SRC, DST).alias(DST),
         F.round(F.col("_w") * F.lit(float(resolution))).cast("long").alias("wq"),
     )
-    live, n_live = materialize_counted(
-        und.groupBy(SRC, DST).agg(F.max("wq").alias("wq"))
-    )
-    if n_live > 0:
-        wq_max = live.agg(F.max("wq").alias("m")).collect()[0]["m"]
-        if wq_max >= 100_000 or wq_max < 0:
-            raise ValueError(
-                f"quantized weight {wq_max} outside [0, 100000) — the packed "
-                "key would reorder; lower `resolution` or rescale weights"
-            )
-    matched_parts: list[DataFrame] = []
-
-    def _wkey(a, b, wq, rnd: int):
-        eid = a * F.lit(_B32) + b
-        prio = (
-            (eid % _P1) * F.lit(_P2) + F.lit(rnd * _P3) + (eid % _MOD)
-        ) % F.lit(_MOD)
-        return ((F.lit(100000) - wq) * F.lit(2_147_483_648) + prio) * F.lit(
-            4096
-        ) + (a * F.lit(65599) + b) % F.lit(4096)
-
-    for r in range(1, max_rounds + 1):
-        if n_live == 0:
-            break
-        keyed = live.select(
-            SRC, DST, "wq", _wkey(F.col(SRC), F.col(DST), F.col("wq"), r).alias("k")
-        )
-        ends = keyed.select(F.col(SRC).alias("id"), "k").unionByName(
-            keyed.select(F.col(DST).alias("id"), "k")
-        )
-        best = ends.groupBy("id").agg(F.min("k").alias("b"))
-        sel, n_sel = materialize_counted(
-            keyed.join(
-                best.withColumnRenamed("id", SRC).withColumnRenamed("b", "bs"), SRC
-            )
-            .join(best.withColumnRenamed("id", DST).withColumnRenamed("b", "bd"), DST)
-            .filter((F.col("k") == F.col("bs")) & (F.col("k") == F.col("bd")))
-            .select(SRC, DST, "wq")
-        )
-        if n_sel > 0:
-            n_ends = (
-                sel.select(F.col(SRC).alias("id"))
-                .unionByName(sel.select(F.col(DST).alias("id")))
-                .distinct()
-                .count()
-            )
-            if n_ends != 2 * n_sel:
-                raise RuntimeError(
-                    f"weighted matching round {r}: adjacent full-key collision"
-                )
-            matched_parts.append(sel)
-        m_ids = (
-            sel.select(F.col(SRC).alias("id"))
-            .unionByName(sel.select(F.col(DST).alias("id")))
-            .distinct()
-        )
-        prev = live
-        live, n_live = materialize_counted(
-            live.join(m_ids.withColumnRenamed("id", SRC), SRC, "left_anti").join(
-                m_ids.withColumnRenamed("id", DST), DST, "left_anti"
-            )
-        )
-        prev.unpersist()
-    else:
+    with rounds() as r:
+        live, n_live = r.start(und.groupBy(SRC, DST).agg(F.max("wq").alias("wq")))
         if n_live > 0:
-            raise RuntimeError(
-                f"weighted matching did not stabilize in max_rounds={max_rounds}"
-            )
-
-    if not matched_parts:
-        return edges.sparkSession.createDataFrame(
-            [], f"{SRC} long, {DST} long, wq long"
+            wq_max = live.agg(F.max("wq").alias("m")).collect()[0]["m"]
+            if wq_max >= 100_000 or wq_max < 0:
+                raise ValueError(
+                    f"quantized weight {wq_max} outside [0, 100000) — the packed "
+                    "key would reorder; lower `resolution` or rescale weights"
+                )
+        return _match_rounds(
+            r, live, n_live, _weighted_key, "weighted matching", max_rounds
         )
-    out = matched_parts[0]
-    for p in matched_parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def vertex_cover(edges: DataFrame, max_rounds: int = 64) -> DataFrame:

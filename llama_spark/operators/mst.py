@@ -28,15 +28,20 @@ Skew: the per-component min is a single map-side-combinable
 min(struct) aggregate — a hub component with millions of incident edges
 partially aggregates on every partition; nothing ever materializes a
 component's full incident-edge list in one task.
+
+Cache lifetime: the round scope (plans/fixpoint.rounds) owns the
+canonical edge table for the call, the component table for one round
+and each round's chosen edges as a result part until exit; the pointer
+doubling is a fixpoint on ``plans/fixpoint.iterate``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, is_small, materialize, materialize_counted
+from ..graph import DST, SRC, is_small
+from ..plans.fixpoint import iterate, rounds
 
 
 def _canonical_und(edges: DataFrame, weight_col: str) -> DataFrame:
@@ -53,6 +58,29 @@ def _canonical_und(edges: DataFrame, weight_col: str) -> DataFrame:
     )
 
 
+def _compose(block: int):
+    """One pointer-doubling step of ``iterate``: ``block`` lazy
+    compositions with the state's pointers (comp, p), the pre-step
+    pointer kept as ``p_old`` for the moved-count probe."""
+
+    def step(pp: DataFrame, _it: int) -> DataFrame:
+        base = pp.select("comp", "p")
+        cur = base.select("comp", F.col("p").alias("p_old"), "p")
+        for _d in range(block):
+            cur = (
+                cur.alias("x")
+                .join(base.alias("y"), F.col("x.p") == F.col("y.comp"), "left")
+                .select(
+                    F.col("x.comp").alias("comp"),
+                    F.col("x.p_old").alias("p_old"),
+                    F.coalesce(F.col("y.p"), F.col("x.p")).alias("p"),
+                )
+            )
+        return cur
+
+    return step
+
+
 def minimum_spanning_forest(
     edges: DataFrame, weight_col: str = "weight", max_rounds: int = 50
 ) -> DataFrame:
@@ -60,125 +88,86 @@ def minimum_spanning_forest(
     per forest edge with src < dst. Exact, deterministic (unique total
     edge order (weight, src, dst)).
     """
-    spark = edges.sparkSession
-    e = _canonical_und(edges, weight_col).persist(StorageLevel.MEMORY_AND_DISK)
-    # comp: node id -> component label (values only group; any consistent
-    # labeling yields the same partition, hence the same chosen edges).
-    # Every round-state frame goes through ``materialize`` (NOT bare
-    # localCheckpoint): comp and pp feed self-referential joins, and
-    # carried size estimates square per round — see graph.materialize.
-    comp = materialize(
-        e.select(F.col("a").alias("id"))
-        .unionByName(e.select(F.col("b").alias("id")))
-        .distinct()
-        .select("id", F.col("id").alias("comp"))
-    )
-    forest_parts: list[DataFrame] = []
+    with rounds() as r:
+        e = r.hold(_canonical_und(edges, weight_col))
+        # comp: node id -> component label (values only group; any consistent
+        # labeling yields the same partition, hence the same chosen edges).
+        # comp goes through ``materialize`` (NOT bare localCheckpoint): it
+        # feeds self-referential joins, and carried size estimates square
+        # per round — see graph.materialize.
+        comp, _ = r.start(
+            e.select(F.col("a").alias("id"))
+            .unionByName(e.select(F.col("b").alias("id")))
+            .distinct()
+            .select("id", F.col("id").alias("comp"))
+        )
 
-    for _round in range(max_rounds):
-        ca = comp.select(F.col("id").alias("a"), F.col("comp").alias("comp_a"))
-        cb = comp.select(F.col("id").alias("b"), F.col("comp").alias("comp_b"))
-        labeled = (
-            e.join(ca, "a")
-            .join(cb, "b")
-            .filter(F.col("comp_a") != F.col("comp_b"))
-        )
-        # min outgoing edge per component: each inter-component edge is a
-        # candidate for both endpoints' components
-        cand = labeled.select(
-            F.col("comp_a").alias("comp"),
-            F.struct("w", "a", "b", F.col("comp_b").alias("other")).alias("e"),
-        ).unionByName(
-            labeled.select(
-                F.col("comp_b").alias("comp"),
-                F.struct("w", "a", "b", F.col("comp_a").alias("other")).alias("e"),
+        for _round in range(max_rounds):
+            ca = comp.select(F.col("id").alias("a"), F.col("comp").alias("comp_a"))
+            cb = comp.select(F.col("id").alias("b"), F.col("comp").alias("comp_b"))
+            labeled = (
+                e.join(ca, "a")
+                .join(cb, "b")
+                .filter(F.col("comp_a") != F.col("comp_b"))
             )
-        )
-        # the chosen-edge count comes back from the single materialization
-        # job (materialize_counted) — one job instead of the observed
-        # eager-checkpoint + count pair
-        chosen, n_chosen = materialize_counted(
-            cand.groupBy("comp")
-            .agg(F.min("e").alias("e"))
-            .select("comp", F.col("e.w").alias("w"), F.col("e.a").alias("a"),
-                    F.col("e.b").alias("b"), F.col("e.other").alias("other"))
-        )
-        if n_chosen == 0:
-            break  # no inter-component edge anywhere: forest complete
-        forest_parts.append(chosen.select("a", "b", "w").distinct())
-
-        # merge: pointer p(comp) = other endpoint's component; break the
-        # mutual two-cycles toward the smaller id, then pointer-double.
-        p = chosen.select("comp", F.col("other").alias("p"))
-        pp0 = (
-            p.alias("x")
-            .join(p.alias("y"), F.col("x.p") == F.col("y.comp"))
-            .select(
-                F.col("x.comp").alias("comp"),
-                F.when(
-                    (F.col("y.p") == F.col("x.comp")) & (F.col("x.comp") < F.col("x.p")),
-                    F.col("x.comp"),
-                ).otherwise(F.col("x.p")).alias("p"),
-            )
-        )
-        # pointer resolution: chain up to 4 composition steps LAZILY per
-        # materialized job while the component table is broadcast-small —
-        # compositions past the fixpoint are idempotent (p∘p = p), so the
-        # result is identical to step-at-a-time execution, and the
-        # two-cycle-broken pp0 rides the FIRST block's job instead of
-        # materializing on its own (the chosen table it derives from is
-        # already cached, so the k+1 lazy references stay cheap). Past
-        # the bound every step materializes on its own — a V-row
-        # first-round table must not be re-referenced k+1 times lazily.
-        block = 4 if is_small(n_chosen) else 1
-        pp = None
-        while True:
-            obs2 = Observation()
-            base = pp0 if pp is None else pp
-            cur = base.select("comp", F.col("p").alias("p_old"), "p")
-            for _d in range(block):
-                cur = (
-                    cur.alias("x")
-                    .join(base.alias("y"), F.col("x.p") == F.col("y.comp"), "left")
-                    .select(
-                        F.col("x.comp").alias("comp"),
-                        F.col("x.p_old").alias("p_old"),
-                        F.coalesce(F.col("y.p"), F.col("x.p")).alias("p"),
-                    )
+            # min outgoing edge per component: each inter-component edge is a
+            # candidate for both endpoints' components
+            cand = labeled.select(
+                F.col("comp_a").alias("comp"),
+                F.struct("w", "a", "b", F.col("comp_b").alias("other")).alias("e"),
+            ).unionByName(
+                labeled.select(
+                    F.col("comp_b").alias("comp"),
+                    F.struct("w", "a", "b", F.col("comp_a").alias("other")).alias("e"),
                 )
-            nxt = materialize(
-                cur.observe(
-                    obs2,
-                    F.sum(
-                        F.when(F.col("p_old") != F.col("p"), F.lit(1)).otherwise(F.lit(0))
-                    ).alias("moved"),
-                )
-                .select("comp", "p"),
-                observed=True,
             )
-            if pp is not None:
-                pp.unpersist()
-            pp = nxt
-            if int(obs2.get["moved"] or 0) == 0:
-                break
-        prev_comp = comp
-        comp = materialize(
-            comp.join(
-                pp.withColumnRenamed("comp", "c_old"), comp["comp"] == F.col("c_old"), "left"
-            ).select("id", F.coalesce("p", "comp").alias("comp"))
-        )
-        prev_comp.unpersist()
-        pp.unpersist()
-    else:
-        raise RuntimeError(f"Borůvka did not converge in max_rounds={max_rounds}")
+            chosen, n_chosen = r.part(
+                cand.groupBy("comp")
+                .agg(F.min("e").alias("e"))
+                .select("comp", F.col("e.w").alias("w"), F.col("e.a").alias("a"),
+                        F.col("e.b").alias("b"), F.col("e.other").alias("other"))
+            )
+            if n_chosen == 0:
+                break  # no inter-component edge anywhere: forest complete
 
-    e.unpersist()
-    comp.unpersist()
-    if not forest_parts:
-        return spark.createDataFrame([], "src long, dst long, weight double")
-    out = forest_parts[0]
-    for part in forest_parts[1:]:
-        out = out.unionByName(part)
-    return out.select(
+            # merge: pointer p(comp) = other endpoint's component; break the
+            # mutual two-cycles toward the smaller id, then pointer-double.
+            p = chosen.select("comp", F.col("other").alias("p"))
+            pp0 = (
+                p.alias("x")
+                .join(p.alias("y"), F.col("x.p") == F.col("y.comp"))
+                .select(
+                    F.col("x.comp").alias("comp"),
+                    F.when(
+                        (F.col("y.p") == F.col("x.comp")) & (F.col("x.comp") < F.col("x.p")),
+                        F.col("x.comp"),
+                    ).otherwise(F.col("x.p")).alias("p"),
+                )
+            )
+            # pointer resolution: chain up to 4 composition steps LAZILY per
+            # materialized job while the component table is broadcast-small —
+            # compositions past the fixpoint are idempotent (p∘p = p), so the
+            # result is identical to step-at-a-time execution. Past the bound
+            # every step materializes on its own — a V-row first-round table
+            # must not be re-referenced k+1 times lazily.
+            pp = iterate(
+                pp0,
+                _compose(4 if is_small(n_chosen) else 1),
+                max_iter=64,  # each step at least doubles every pointer's reach
+                updated_metric=F.sum(
+                    F.when(F.col("p_old") != F.col("p"), F.lit(1)).otherwise(F.lit(0))
+                ),
+                name="msf_pointers",
+            ).state
+            comp, _ = r.materialize(
+                comp.join(
+                    pp.withColumnRenamed("comp", "c_old"), comp["comp"] == F.col("c_old"), "left"
+                ).select("id", F.coalesce("p", "comp").alias("comp"))
+            )
+        else:
+            raise RuntimeError(f"Borůvka did not converge in max_rounds={max_rounds}")
+
+        forest = r.parts()
+    return forest.select(
         F.col("a").alias(SRC), F.col("b").alias(DST), F.round(F.col("w"), 6).alias("weight")
     ).distinct()

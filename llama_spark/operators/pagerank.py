@@ -428,7 +428,7 @@ def topic_sensitive_pagerank(
             .alias(f"e{t}")
             for t in ks
         ]
-        state = r.start(
+        state, _ = r.start(
             tagged.select(
                 "id",
                 *e_cols,
@@ -462,7 +462,7 @@ def topic_sensitive_pagerank(
                     ]
                 )
             )
-            state = r.materialize(
+            state, _ = r.materialize(
                 state.join(join_side(contribs, n), "id", "left").select(
                     "id",
                     *[F.col(f"e{t}") for t in ks],

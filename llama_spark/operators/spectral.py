@@ -92,7 +92,7 @@ def fiedler_vector(
         n_d = float(n)
 
         # deterministic non-constant start vector, exact-integer both engines
-        state = r.start(
+        state, _ = r.start(
             deg.select(
                 "id",
                 "d",
@@ -123,7 +123,7 @@ def fiedler_vector(
             # plan (m = sy/n ; x' = (y - m) / sqrt(syy - (m*m)*n); the
             # numerator/denominator division stays in SQL, so a zero or NULL
             # denominator yields NULL exactly as before)
-            ymat = r.materialize(y)
+            ymat, _ = r.materialize(y)
             sy, syy = ymat.agg(
                 F.sum("y").alias("sy"), F.sum(F.col("y") * F.col("y")).alias("syy")
             ).head()
@@ -225,7 +225,7 @@ def spectral_embedding2(
                 - F.lit(0.5)
             )
 
-        state = r.start(
+        state, _ = r.start(
             deg.select("id", "d", h(2654435761).alias("x1"), h(1566083941).alias("x2"))
         )
 
@@ -275,7 +275,7 @@ def spectral_embedding2(
                 F.col("s12") - m1 * F.col("s2") - m2 * F.col("s1") + (m1 * m2) * F.lit(n_d)
             ) / u1n
             u2n = F.sqrt(F.col("s22") - (m2 * m2) * F.lit(n_d) - beta * beta)
-            state = r.materialize(
+            state, _ = r.materialize(
                 y.crossJoin(F.broadcast(st)).select(
                     "id",
                     "d",
@@ -342,7 +342,7 @@ def fiedler_vector_normalized(
             return deg.select("id", "d", F.lit(0.0).alias("nfiedler"))
         s2 = float(deg.agg(F.sum("d")).head()[0])  # Σd = Σ(√d)², exact integer sum
 
-        state = r.start(
+        state, _ = r.start(
             deg.select(
                 "id",
                 "d",
@@ -377,7 +377,7 @@ def fiedler_vector_normalized(
             # binary64 ops in the same order as the previous broadcast-stats
             # plan; the per-row division stays in SQL so zero/NULL
             # denominators yield NULL exactly as before)
-            ymat = r.materialize(y)
+            ymat, _ = r.materialize(y)
             syd, syy = ymat.agg(
                 F.sum(F.col("y") * F.col("sd")).alias("syd"),
                 F.sum(F.col("y") * F.col("y")).alias("syy"),

@@ -24,7 +24,8 @@ state for one round — and of its per-round ``IterationMetrics``. It
 releases them on every exit path, so results come back with no live cache
 entry. ``iterate`` runs its loop inside one; kernels whose round does more
 than ``state ← step(state)`` (HITS' two half-steps, the spectral stats
-probes) write the loop themselves against the same scope.
+probes, the peeling kernels that add each round's selected set to the
+result) write the loop themselves against the same scope.
 """
 
 from __future__ import annotations
@@ -75,53 +76,68 @@ class Rounds:
     """Owner of every frame one iterative call caches, and of its
     per-round metrics. Open it with :func:`rounds`.
 
-    - ``keep(df)`` — a table every round reads (the node set, a cached
-      edge table): persisted and counted at once, held until the scope
-      exits.
+    - ``keep(df)`` / ``hold(df)`` — a table every round reads (the node
+      set, a cached edge table), held until the scope exits. ``keep``
+      counts it at once; ``hold`` leaves it to be cached by the first job
+      that reads it.
     - ``cache(df)`` — a frame one round reads more than once: persisted
       lazily, part of that round.
     - ``start(df)`` / ``materialize(df)`` — round state through
       ``graph.materialize_counted`` (one job: lineage truncated, size
-      statistics reset). ``start`` is the initial state; ``materialize``
-      is this round's state and ends the round.
+      statistics reset), returned with its row count. ``start`` is the
+      initial state; ``materialize`` is this round's state and ends the
+      round.
     - ``end_round(**fields)`` — ends a round whose state the caller
-      materialized itself (``iterate`` keeps its own cadence).
+      materialized itself (``iterate`` and the SCC edge table keep their
+      own cadence).
+    - ``part(df)`` — a piece of the result (the peeling kernels' selected
+      sets): materialized and counted like ``materialize``, held until
+      the scope exits; ``parts()`` is their union in order.
 
     Ending round k records one ``IterationMetrics`` (seconds since the
     previous round ended) and releases round k-1's frames: the next
-    state exists, so nothing reads them again. Exit releases the rest on
-    every path — return, early return or raise. A state handed back stays
+    state exists, so nothing reads them again. ``materialize`` also
+    releases its own round's ``cache`` frames at once, since the state
+    it just built was their only reader. Exit releases the rest on every
+    path — return, early return or raise. A state handed back stays
     readable: its cache entry goes, its localCheckpoint blocks do not.
+
+    The scope releases only entries it created. The CacheManager keeps
+    one entry per plan, so a frame whose plan the caller (or another
+    scope) already cached is read through that entry and left to its
+    owner.
     """
 
     def __init__(self):
         self.metrics: list[IterationMetrics] = []
         self._setup: list[DataFrame] = []
+        self._parts: list[DataFrame] = []
         self._prev: list[DataFrame] = []  # frames of the last finished round
         self._cur: list[DataFrame] = []  # frames of the round in progress
         self._t0 = time.time()
 
+    def hold(self, df: DataFrame) -> DataFrame:
+        return _persist(df, self._setup)
+
     def keep(self, df: DataFrame) -> tuple[DataFrame, int]:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._setup.append(df)
+        df = self.hold(df)
         return df, df.count()
 
     def cache(self, df: DataFrame) -> DataFrame:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._cur.append(df)
-        return df
+        return _persist(df, self._cur)
 
-    def start(self, df: DataFrame) -> DataFrame:
-        out, _ = materialize_counted(df)
+    def start(self, df: DataFrame) -> tuple[DataFrame, int]:
+        out, rows = materialize_counted(df)
         self._prev.append(out)  # the state before round 0
         self._t0 = time.time()
-        return out
+        return out, rows
 
-    def materialize(self, df: DataFrame) -> DataFrame:
+    def materialize(self, df: DataFrame) -> tuple[DataFrame, int]:
         out, rows = materialize_counted(df)
+        _release(self._cur)
         self._cur.append(out)
         self.end_round(rows=rows)
-        return out
+        return out, rows
 
     def end_round(self, **fields) -> IterationMetrics:
         now = time.time()
@@ -134,9 +150,31 @@ class Rounds:
         self._t0 = now
         return m
 
+    def part(self, df: DataFrame) -> tuple[DataFrame, int]:
+        out, rows = materialize_counted(df)
+        self._parts.append(out)
+        return out, rows
+
+    def parts(self) -> DataFrame | None:
+        if not self._parts:
+            return None
+        out = self._parts[0]
+        for p in self._parts[1:]:
+            out = out.unionByName(p)
+        return out
+
     def close(self) -> None:
-        for frames in (self._prev, self._cur, self._setup):
+        for frames in (self._prev, self._cur, self._parts, self._setup):
             _release(frames)
+
+
+def _persist(df: DataFrame, frames: list[DataFrame]) -> DataFrame:
+    # an already-cached plan is someone else's entry: read it, never own it
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    frames.append(df)
+    return df
 
 
 def _release(frames: list[DataFrame]) -> None:

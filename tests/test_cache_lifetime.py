@@ -3,18 +3,21 @@
 Each case records the session CacheManager's entry count, runs one entry
 point on a seeded R-MAT scale-8 graph, consumes the result and checks the
 count is back where it started. ``unpersist`` drops the entry at once, so
-no GC is needed. Covered: the power-iteration family that runs on
-``plans/fixpoint.rounds`` (including its empty-graph and raise paths), the
-three benchmarked kernels, a durable-checkpoint PageRank run, and the
-percolation census, whose callers own the edge table they persist.
+no GC is needed. Covered: the power-iteration and peeling families that
+run on ``plans/fixpoint.rounds`` (including their empty-graph, self-loop
+and raise paths), the three benchmarked kernels, a durable-checkpoint
+PageRank run, the percolation census, whose callers own the edge table
+they persist, collective influence, and a caller's own entry for a plan
+a scope also caches, which the scope must leave in place.
 """
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from tests.conftest import edges_df, rmat_edges
+from tests.conftest import CHAIN10, K3, edges_df, rmat_edges
 
 
 @pytest.fixture(scope="module")
@@ -36,14 +39,21 @@ def _topic():
 
 
 def _call(name, edges, tmp_path):
+    from llama_spark.graph import with_synthetic_weights
     from llama_spark.operators import (
+        bowtie,
         centrality,
+        coloring,
         components,
         csr,
         diffusion,
         hits,
+        matching,
+        mis,
+        mst,
         pagerank,
         percolation,
+        scc,
         spectral,
         trust,
     )
@@ -82,6 +92,25 @@ def _call(name, edges, tmp_path):
         "attack_percolation": lambda: percolation.attack_percolation(edges, 0.05),
         "random_percolation": lambda: percolation.random_percolation(edges, 0.05),
         "bond_percolation": lambda: percolation.bond_percolation(edges),
+        "collective_influence": lambda: centrality.collective_influence(edges),
+        "maximal_independent_set": lambda: mis.maximal_independent_set(edges),
+        "maximal_matching": lambda: matching.maximal_matching(edges),
+        "maximal_weight_matching": lambda: matching.maximal_weight_matching(
+            with_synthetic_weights(edges)
+        ),
+        "vertex_cover": lambda: matching.vertex_cover(edges),
+        # scale 8 takes ~430 jobs to color; a hand graph covers the same path
+        "greedy_coloring": lambda: coloring.greedy_coloring(
+            edges_df(edges.sparkSession, K3 + [(s + 3, d + 3) for s, d in CHAIN10])
+        ),
+        "minimum_spanning_forest": lambda: mst.minimum_spanning_forest(
+            with_synthetic_weights(edges)
+        ),
+        "strongly_connected_components": lambda: scc.strongly_connected_components(
+            edges
+        ),
+        "condensation_levels": lambda: scc.condensation_levels(edges),
+        "bowtie_decomposition": lambda: bowtie.bowtie_decomposition(edges),
     }
     return calls[name]()
 
@@ -106,6 +135,16 @@ CASES = [
     "attack_percolation",
     "random_percolation",
     "bond_percolation",
+    "collective_influence",
+    "maximal_independent_set",
+    "maximal_matching",
+    "maximal_weight_matching",
+    "vertex_cover",
+    "greedy_coloring",
+    "minimum_spanning_forest",
+    "strongly_connected_components",
+    "condensation_levels",
+    "bowtie_decomposition",
 ]
 
 
@@ -135,3 +174,54 @@ def test_raise_leaves_no_cache_entry(spark, rmat):
     with pytest.raises(ValueError, match="topic 2 has no seed nodes"):
         topic_sensitive_pagerank(rmat, _topic(), 3, max_iter=2)
     assert _entries(spark) == before
+
+
+@pytest.mark.parametrize("name", ["maximal_independent_set", "maximal_matching"])
+def test_self_loop_graph_leaves_no_cache_entry(spark, tmp_path, name):
+    loops = edges_df(spark, [(0, 0), (1, 1), (2, 2)])
+    before = _entries(spark)
+    assert _call(name, loops, tmp_path).collect() == []
+    assert _entries(spark) == before
+
+
+@pytest.mark.parametrize(
+    "name, match",
+    [
+        ("maximal_independent_set", "MIS did not stabilize"),
+        ("strongly_connected_components", "forward coloring did not converge"),
+        ("greedy_coloring", "greedy_coloring did not finish"),
+    ],
+)
+def test_peeling_raise_leaves_no_cache_entry(spark, rmat, name, match):
+    from llama_spark.operators.coloring import greedy_coloring
+    from llama_spark.operators.mis import maximal_independent_set
+    from llama_spark.operators.scc import strongly_connected_components
+
+    calls = {
+        "maximal_independent_set": lambda: maximal_independent_set(rmat, max_rounds=1),
+        "strongly_connected_components": lambda: strongly_connected_components(
+            rmat, max_prop_iters=1
+        ),
+        "greedy_coloring": lambda: greedy_coloring(rmat, max_rounds=1),
+    }
+    before = _entries(spark)
+    with pytest.raises(RuntimeError, match=match):
+        calls[name]()
+    assert _entries(spark) == before
+
+
+def test_scope_leaves_callers_entry_for_the_same_plan(spark, rmat):
+    """The CacheManager keeps one entry per plan: the caller's cached node
+    table is the very entry ``pagerank_result``'s scope would cache, so
+    the scope must read it and leave it to the caller."""
+    from llama_spark.graph import nodes_of
+    from llama_spark.operators.pagerank import pagerank_result
+
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    mine = nodes_of(rmat).repartition(p, "id").persist()
+    mine.count()
+    before = _entries(spark)
+    assert pagerank_result(rmat, max_iter=2).state.collect()
+    assert _entries(spark) == before
+    assert mine.storageLevel != StorageLevel.NONE
+    mine.unpersist()
