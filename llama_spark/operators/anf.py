@@ -31,12 +31,12 @@ diameter double-sweep (ll_bfs_template.h); ANF generalizes both.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import token_hash
 from ..graph import DST, SRC, join_side, nodes_of
+from ..plans.fixpoint import Rounds, rounds
 
 FM_PHI = 0.77351  # Flajolet–Martin bias correction
 
@@ -48,6 +48,51 @@ def _fm_bit(id_col, r: int):
     return forced.bitwiseAND(-forced)
 
 
+def _lowest_unset_bits(masks: list[str]) -> Column:
+    """Σ_r b_r, b_r = position of the lowest unset bit of mask r:
+    ``bit_count(((~m) & -(~m)) - 1)`` — exact integer."""
+    bsum = None
+    for m in masks:
+        b = F.bit_count(F.expr(f"((~{m}) & -(~{m})) - 1").cast("long")).cast("long")
+        bsum = b if bsum is None else bsum + b
+    return bsum
+
+
+def _ball_setup(
+    r: Rounds, edges: DataFrame, masks: list[str], p: int
+) -> tuple[DataFrame, DataFrame, int]:
+    """(initial masks [id, *masks], dst-partitioned edge table held by
+    ``r``, node count)."""
+    e = r.hold(edges.select(SRC, DST).distinct().repartition(p, DST))
+    nodes = nodes_of(edges)
+    n_nodes = nodes.count()
+    init = nodes.select(
+        "id", *[_fm_bit(F.col("id"), i).alias(m) for i, m in enumerate(masks)]
+    )
+    return init, e, n_nodes
+
+
+def _ball_step(
+    e: DataFrame, state: DataFrame, masks: list[str], n_nodes: int, carry=()
+) -> DataFrame:
+    """One synchronous HyperBall round: every node ORs its out-neighbours'
+    masks into its own — one BIT_OR aggregate over the edge table, merged
+    by ``bitwiseOR``; ``carry`` columns pass through unchanged."""
+    nbr = (
+        e.join(join_side(state.select(F.col("id").alias(DST), *masks), n_nodes), DST)
+        .groupBy(F.col(SRC).alias("id"))
+        .agg(*[F.expr(f"bit_or({m})").alias(f"o{m}") for m in masks])
+    )
+    return state.join(nbr, "id", "left").select(
+        "id",
+        *carry,
+        *[
+            F.col(m).bitwiseOR(F.coalesce(F.col(f"o{m}"), F.lit(0))).alias(m)
+            for m in masks
+        ],
+    )
+
+
 def neighborhood_function(
     edges: DataFrame,
     max_t: int = 6,
@@ -57,75 +102,37 @@ def neighborhood_function(
     """DataFrame[t, avg_reach] for t = 0..max_t: the estimated average
     number of nodes within t hops (directed, out-edges), t=0 ≈ 1.
 
-    Lazy result: each row is a 1-row aggregate over that round's persisted
-    state, unioned — collecting runs max_t+1 tiny jobs, nothing else.
+    Lazy result: each row is a 1-row aggregate over that round's
+    checkpointed state (t=0 recomputes the initial masks), unioned —
+    collecting runs max_t+1 tiny jobs, nothing else. The round scope
+    releases each state's cache entry once the next state exists, and
+    the last one on return.
     """
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    nodes = nodes_of(edges)
-    e = (
-        edges.select(SRC, DST)
-        .distinct()
-        .repartition(p, DST)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return spark.createDataFrame([], "t int, avg_reach double")
-
     masks = [f"m{r}" for r in range(registers)]
-    state = nodes.select(
-        "id", *[_fm_bit(F.col("id"), r).alias(m) for r, m in enumerate(masks)]
-    ).repartition(p, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    state.count()
 
     def estimate(st: DataFrame, t: int) -> DataFrame:
         # b_r = bit_count(((~m) & -(~m)) - 1); est = 2^(Σb/R)/φ, averaged
-        bsum = None
-        for m in masks:
-            b = F.bit_count(
-                F.expr(f"((~{m}) & -(~{m})) - 1").cast("long")
-            ).cast("long")
-            bsum = b if bsum is None else bsum + b
-        est = F.pow(F.lit(2.0), bsum.cast("double") / F.lit(float(registers)))
+        est = F.pow(
+            F.lit(2.0), _lowest_unset_bits(masks).cast("double") / F.lit(float(registers))
+        )
         return st.agg(
             F.round(
                 F.sum(est) / F.lit(FM_PHI) / F.lit(float(n_nodes)), 6
             ).alias("avg_reach")
         ).select(F.lit(t).alias("t"), "avg_reach")
 
-    out = estimate(state, 0)
-    for t in range(1, max_t + 1):
-        nbr = (
-            e.join(
-                join_side(
-                    state.select(F.col("id").alias(DST), *masks), n_nodes
-                ),
-                DST,
-            )
-            .groupBy(F.col(SRC).alias("id"))
-            .agg(*[F.expr(f"bit_or({m})").alias(f"o{m}") for m in masks])
-        )
-        prev = state
-        state = (
-            prev.join(nbr, "id", "left")
-            .select(
-                "id",
-                *[
-                    F.col(m)
-                    .bitwiseOR(F.coalesce(F.col(f"o{m}"), F.lit(0)))
-                    .alias(m)
-                    for m in masks
-                ],
-            )
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+    with rounds() as r:
+        init, e, n_nodes = _ball_setup(r, edges, masks, p)
+        if n_nodes == 0:
+            return spark.createDataFrame([], "t int, avg_reach double")
+        state = r.cache(init.repartition(p, "id"))
         state.count()
-        prev.unpersist()
-        out = out.unionByName(estimate(state, t))
-    e.unpersist()
+        out = estimate(state, 0)
+        for t in range(1, max_t + 1):
+            state, _ = r.materialize(_ball_step(e, state, masks, n_nodes))
+            out = out.unionByName(estimate(state, t))
     return out
 
 
@@ -143,7 +150,7 @@ def effective_diameter(
     6-dp-rounded estimates, so the argmin is stable.
     """
     # the nf frame is max_t+1 rows but each row is an aggregate job over a
-    # persisted round state, and it is referenced twice below (max + argmin)
+    # checkpointed round state, and it is referenced twice below (max + argmin)
     # — checkpoint the tiny result so the aggregates run once
     nf = neighborhood_function(
         edges, max_t=max_t, registers=registers, num_partitions=num_partitions
@@ -184,97 +191,57 @@ def _hyperball_centralities(
     """
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    nodes = nodes_of(edges)
-    e = (
-        edges.select(SRC, DST)
-        .distinct()
-        .repartition(p, DST)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return spark.createDataFrame([], "id long, harmonic double, closeness double, eccentricity int")
-
     masks = [f"m{r}" for r in range(registers)]
 
-    def est() -> "F.Column":
-        bsum = None
-        for m in masks:
-            b = F.bit_count(
-                F.expr(f"((~{m}) & -(~{m})) - 1").cast("long")
-            ).cast("long")
-            bsum = b if bsum is None else bsum + b
+    def est() -> Column:
         return F.pow(
-            F.lit(2.0), bsum.cast("double") / F.lit(float(registers))
+            F.lit(2.0), _lowest_unset_bits(masks).cast("double") / F.lit(float(registers))
         ) / F.lit(FM_PHI)
 
-    state = (
-        nodes.select(
-            "id", *[_fm_bit(F.col("id"), r).alias(m) for r, m in enumerate(masks)]
-        )
-        .withColumn("pe", est())
-        .withColumn("h", F.lit(0.0))
-        .withColumn("s", F.lit(0.0))
-        .withColumn("ecc", F.lit(0).cast("int"))
-        .repartition(p, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    state.count()
-
-    for t in range(1, max_t + 1):
-        nbr = (
-            e.join(join_side(state.select(F.col("id").alias(DST), *masks), n_nodes), DST)
-            .groupBy(F.col(SRC).alias("id"))
-            .agg(*[F.expr(f"bit_or({m})").alias(f"o{m}") for m in masks])
-        )
-        prev = state
-        merged = prev.join(nbr, "id", "left").select(
-            "id",
-            "pe",
-            "h",
-            "s",
-            "ecc",
-            *[
-                F.col(m).bitwiseOR(F.coalesce(F.col(f"o{m}"), F.lit(0))).alias(m)
-                for m in masks
-            ],
-        )
-        state = (
-            merged.withColumn("ne", est())
-            .select(
-                "id",
-                *masks,
-                F.col("ne").alias("pe"),
-                (F.col("h") + (F.col("ne") - F.col("pe")) / F.lit(float(t))).alias(
-                    "h"
-                ),
-                (F.col("s") + (F.col("ne") - F.col("pe")) * F.lit(float(t))).alias(
-                    "s"
-                ),
-                F.when(F.col("ne") > F.col("pe"), F.lit(t).cast("int"))
-                .otherwise(F.col("ecc"))
-                .alias("ecc"),
+    with rounds() as r:
+        init, e, n_nodes = _ball_setup(r, edges, masks, p)
+        if n_nodes == 0:
+            return spark.createDataFrame(
+                [], "id long, harmonic double, closeness double, eccentricity int"
             )
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        state = r.cache(
+            init.withColumn("pe", est())
+            .withColumn("h", F.lit(0.0))
+            .withColumn("s", F.lit(0.0))
+            .withColumn("ecc", F.lit(0).cast("int"))
+            .repartition(p, "id")
         )
         state.count()
-        prev.unpersist()
-    out = state.select(
-        "id",
-        F.round("h", 6).alias("harmonic"),
-        F.when(
-            F.col("s") > 0.0,
-            F.round((F.col("pe") - F.lit(1.0)) / F.col("s"), 6),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("closeness"),
-        F.col("ecc").alias("eccentricity"),
-    ).localCheckpoint(eager=True)
-    state.unpersist()
-    e.unpersist()
-    return out
+
+        for t in range(1, max_t + 1):
+            merged = _ball_step(e, state, masks, n_nodes, carry=("pe", "h", "s", "ecc"))
+            state, _ = r.materialize(
+                merged.withColumn("ne", est()).select(
+                    "id",
+                    *masks,
+                    F.col("ne").alias("pe"),
+                    (F.col("h") + (F.col("ne") - F.col("pe")) / F.lit(float(t))).alias(
+                        "h"
+                    ),
+                    (F.col("s") + (F.col("ne") - F.col("pe")) * F.lit(float(t))).alias(
+                        "s"
+                    ),
+                    F.when(F.col("ne") > F.col("pe"), F.lit(t).cast("int"))
+                    .otherwise(F.col("ecc"))
+                    .alias("ecc"),
+                )
+            )
+        return state.select(
+            "id",
+            F.round("h", 6).alias("harmonic"),
+            F.when(
+                F.col("s") > 0.0,
+                F.round((F.col("pe") - F.lit(1.0)) / F.col("s"), 6),
+            )
+            .otherwise(F.lit(0.0))
+            .alias("closeness"),
+            F.col("ecc").alias("eccentricity"),
+        ).localCheckpoint(eager=True)
 
 
 def hyperball_harmonic(

@@ -14,7 +14,7 @@ Forward phase (σ = shortest-path counts, level-synchronous BFS):
     → groupBy(root, dst): σ' = Σ σ     (bc_adj.h:73-90 σ-push)
 Backward phase (δ accumulation over the BFS DAG's "down edges", which the
 reference saves during the forward pass, ll_bfs_template.h:337-351; we do
-the same — each forward expansion persists its (root, v@d, w@d+1) rows, so
+the same — each forward expansion caches its (root, v@d, w@d+1) rows, so
 the backward sweep streams them from cache instead of re-joining the full
 edge table per depth):
     δ(v) = σ_v · Σ_{w ∈ succ(v)} (1 + δ(w)) / σ_w   (bc_adj.h:92-111)
@@ -26,22 +26,33 @@ Scale design (the three round-1 scale-killers, fixed):
   while the state side is small (``graph.BROADCAST_MAX_ROWS``), else a
   shuffle-hash hint so the cached, src-partitioned edge table STREAMS and
   only the small state side shuffles.
-- **Forward levels accumulate in a Python list** of checkpointed per-level
-  DataFrames; ``visited`` is a lazy union over them (each piece already
-  materialized), so nothing is rewritten per depth — O(K·V) total writes,
-  not O(depth · K·V).
+- **One forward pass** (``_brandes_forward``) serves the node and edge
+  kernels: each depth is checkpointed once and ``visited`` is a lazy union
+  over the checkpointed levels, so nothing is rewritten per depth —
+  O(K·V) total writes, not O(depth · K·V).
 - **The backward sweep is per-level**: δ at depth d is computed from depth
   d+1's rows alone (exactly bc_adj.h:92-111's level descent), and the
   per-level δ tables are unioned once at the end — again O(K·V) writes.
+
+Cache lifetime: round scopes (plans/fixpoint.rounds) own every cached
+frame. The call's scope holds the edge table (and the node set, the edge
+kernel's per-level joins, the weighted kernel's distances, DAG and
+factor tables) until the result is checkpointed; each depth's down edges
+sit in a scope of their own that the descent closes as soon as it has
+stepped past that depth (ll_bfs_template's per-level state, dropped
+level by level).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from contextlib import ExitStack, contextmanager
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..graph import DST, SRC, join_side, nodes_of
+from ..plans.fixpoint import Rounds, checkpoint_counted, rounds
+from .traversal import _union
 
 
 def pick_roots(edges: DataFrame, k: int, seed: int = 42) -> list[int]:
@@ -54,6 +65,80 @@ def pick_roots(edges: DataFrame, k: int, seed: int = 42) -> list[int]:
         .limit(k)
         .collect()
     ]
+
+
+@contextmanager
+def _brandes_forward(e: DataFrame, roots: list[int], max_depth: int):
+    """Level-synchronous K-root BFS with σ counting — the forward pass
+    both Brandes kernels share. Yields ``(levels, counts, descend)``:
+
+    - ``levels[d]`` — the checkpointed (root, id, depth, sigma) rows of
+      depth d; ``counts[d]`` its size (drives each join's side);
+    - ``descend()`` — d = max_d−1 … 0, each with the BFS DAG's down edges
+      INTO depth d+1, (root, vid@d, id@d+1, sigma), cached during the
+      expansion exactly like the reference saves them
+      (ll_bfs_template.h:337-351), so the backward sweep never re-joins
+      the full edge table.
+
+    Each depth is ONE job: the level checkpoint builds the down-edge
+    cache en route, and the level row count rides it. Every depth's down
+    edges live in a round scope of their own, released as soon as the
+    descent steps past that depth (the empty last expansion's at once),
+    and all of them on exit."""
+    level0 = (
+        e.sparkSession.createDataFrame([(x,) for x in roots], "root long")
+        .select(
+            "root",
+            F.col("root").alias("id"),
+            F.lit(0).alias("depth"),
+            F.lit(1.0).alias("sigma"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    levels: list[DataFrame] = [level0]
+    counts: list[int] = [len(roots)]
+    downs: list[tuple[Rounds, DataFrame] | None] = [None]
+    with ExitStack() as stack:
+        frontier = level0
+        for depth in range(max_depth):
+            # lazy union of already-checkpointed levels — no rewrite per depth
+            visited = _union(levels)
+            fr = frontier.select("root", F.col("id").alias("vid"), "sigma")
+            cand = (
+                join_side(fr, counts[-1])
+                .join(e, fr["vid"] == e[SRC])
+                .select("root", "vid", F.col(DST).alias("id"), "sigma")
+            )
+            scope = stack.enter_context(rounds())
+            stepped = scope.cache(
+                cand.join(
+                    join_side(visited.select("root", "id"), sum(counts)),
+                    ["root", "id"],
+                    "left_anti",
+                )
+            )
+            nxt, m = checkpoint_counted(
+                stepped.groupBy("root", "id")
+                .agg(F.sum("sigma").alias("sigma"))
+                .withColumn("depth", F.lit(depth + 1))
+                .select("root", "id", "depth", "sigma"),
+                "brandes",
+            )
+            if m["n"] == 0:
+                scope.close()
+                break
+            levels.append(nxt)
+            counts.append(m["n"])
+            downs.append((scope, stepped))
+            frontier = nxt
+
+        def descend():
+            for d in range(len(levels) - 2, -1, -1):
+                scope, down = downs[d + 1]
+                yield d, down
+                scope.close()
+
+        yield levels, counts, descend()
 
 
 def betweenness_centrality(
@@ -76,150 +161,78 @@ def betweenness_centrality(
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if roots is None:
         roots = pick_roots(edges, k, seed)
+    if root_weights is not None and len(root_weights) != len(roots):
+        raise ValueError("root_weights must be parallel to roots")
 
-    e = edges.select(SRC, DST).distinct().repartition(p, SRC).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    e.count()
-    nodes = nodes_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count()
+    with rounds() as r:
+        e, _ = r.keep(edges.select(SRC, DST).distinct().repartition(p, SRC))
+        nodes, _ = r.keep(nodes_of(edges))
+        with _brandes_forward(e, roots, max_depth) as (levels, counts, descend):
+            # ---- backward: per-level δ sweep from the deepest level up
+            # (bc_adj.h:92-111). δ at depth d depends ONLY on depth d+1's
+            # δ/σ, so each round touches K×|level d| rows; results union once
+            # at the end.
+            max_d = len(levels) - 1
+            deltas: list[DataFrame | None] = [None] * (max_d + 1)
+            deltas[max_d] = (
+                levels[max_d]
+                .select("root", "id", F.lit(0.0).alias("delta"))
+                .localCheckpoint(eager=True)
+            )
+            for d, down in descend:
+                v = levels[d].select("root", "id", "sigma")
+                w = (
+                    levels[d + 1]
+                    .select("root", F.col("id").alias("wid"), F.col("sigma").alias("wsigma"))
+                    .join(
+                        deltas[d + 1]
+                        .withColumnRenamed("id", "wid")
+                        .withColumnRenamed("delta", "wdelta"),
+                        ["root", "wid"],
+                    )
+                )
+                # saved down edges INTO depth d+1: (root, vid@d, wid@d+1) —
+                # streams from the forward pass's cache
+                acc = (
+                    down.select("root", "vid", F.col("id").alias("wid"))
+                    .withColumnRenamed("vid", "id")
+                    .join(join_side(w, counts[d + 1]), ["root", "wid"])
+                    .groupBy("root", "id")
+                    .agg(F.sum((F.lit(1.0) + F.col("wdelta")) / F.col("wsigma")).alias("acc"))
+                )
+                deltas[d] = (
+                    v.join(acc, ["root", "id"], "left")
+                    .select(
+                        "root",
+                        "id",
+                        (F.col("sigma") * F.coalesce("acc", F.lit(0.0))).alias("delta"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
 
-    roots_df = spark.createDataFrame([(r,) for r in roots], "root long")
-    level0 = (
-        roots_df.select(
-            "root",
-            F.col("root").alias("id"),
-            F.lit(0).alias("depth"),
-            F.lit(1.0).alias("sigma"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    # ---- forward: level-synchronous multi-source BFS with σ counting ----
-    # levels[d] holds the checkpointed (root, id, depth, sigma) rows of depth
-    # d; counts[d] its size (drives the per-join broadcast/shuffle choice).
-    # downs[d] holds the BFS DAG's down edges INTO depth d — (root, vid@d-1,
-    # id@d) — persisted during the forward expansion exactly like the
-    # reference saves them (ll_bfs_template.h:337-351), so the backward
-    # sweep never re-joins the full edge table. Each depth is still ONE
-    # job: the level checkpoint materializes the down-edge cache en route.
-    levels: list[DataFrame] = [level0]
-    counts: list[int] = [len(roots)]
-    downs: list[DataFrame | None] = [None]
-    frontier = level0
-    depth = 0
-    while depth < max_depth:
-        # lazy union of already-checkpointed levels — no rewrite per depth
-        visited = levels[0]
-        for lv in levels[1:]:
-            visited = visited.unionByName(lv)
-        fr = frontier.select("root", F.col("id").alias("vid"), "sigma")
-        cand = (
-            join_side(fr, counts[-1])
-            .join(e, fr["vid"] == e[SRC])
-            .select("root", "vid", F.col(DST).alias("id"), "sigma")
-        )
-        stepped = cand.join(
-            join_side(visited.select("root", "id"), sum(counts)),
-            ["root", "id"],
-            "left_anti",
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # the level row count rides the eager checkpoint as an observed
-        # metric (integer count — order-independent), one job per depth
-        # instead of checkpoint + count
-        obs = Observation()
-        nxt = (
-            stepped.groupBy("root", "id")
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("depth", F.lit(depth + 1))
-            .select("root", "id", "depth", "sigma")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
+        all_delta = _union(deltas)
+        if root_weights is not None:
+            w_df = spark.createDataFrame(
+                list(zip(roots, root_weights)), "root long, w double"
+            )
+            bc = (
+                all_delta.filter(F.col("id") != F.col("root"))
+                .join(F.broadcast(w_df), "root")
+                .groupBy("id")
+                .agg(F.sum(F.col("delta") * F.col("w")).alias("bc"))
+            )
+        else:
+            bc = (
+                all_delta.filter(F.col("id") != F.col("root"))
+                .groupBy("id")
+                .agg(F.sum("delta").alias("bc"))
+            )
+        # materialize before the scope drops the cached inputs
+        return (
+            nodes.join(bc, "id", "left")
+            .select("id", F.coalesce("bc", F.lit(0.0)).alias("bc"))
             .localCheckpoint(eager=True)
         )
-        n_nxt = int(obs.get["n"])
-        if n_nxt == 0:
-            stepped.unpersist()
-            break
-        levels.append(nxt)
-        counts.append(n_nxt)
-        downs.append(stepped)  # (root, vid@d, id@d+1, sigma) — cached
-        frontier = nxt
-        depth += 1
-
-    max_d = len(levels) - 1
-
-    # ---- backward: per-level δ sweep from the deepest level up
-    # (bc_adj.h:92-111). δ at depth d depends ONLY on depth d+1's δ/σ, so
-    # each round touches K×|level d| rows; results union once at the end.
-    deltas: list[DataFrame | None] = [None] * (max_d + 1)
-    deltas[max_d] = (
-        levels[max_d]
-        .select("root", "id", F.lit(0.0).alias("delta"))
-        .localCheckpoint(eager=True)
-    )
-    for d in range(max_d - 1, -1, -1):
-        v = levels[d].select("root", "id", "sigma")
-        w = (
-            levels[d + 1]
-            .select("root", F.col("id").alias("wid"), F.col("sigma").alias("wsigma"))
-            .join(
-                deltas[d + 1]
-                .withColumnRenamed("id", "wid")
-                .withColumnRenamed("delta", "wdelta"),
-                ["root", "wid"],
-            )
-        )
-        # saved down edges INTO depth d+1: (root, vid@d, wid@d+1) — streams
-        # from the forward pass's cache; no edge-table re-join per depth
-        acc = (
-            downs[d + 1]
-            .select("root", "vid", F.col("id").alias("wid"))
-            .withColumnRenamed("vid", "id")
-            .join(join_side(w, counts[d + 1]), ["root", "wid"])
-            .groupBy("root", "id")
-            .agg(F.sum((F.lit(1.0) + F.col("wdelta")) / F.col("wsigma")).alias("acc"))
-        )
-        deltas[d] = (
-            v.join(acc, ["root", "id"], "left")
-            .select(
-                "root",
-                "id",
-                (F.col("sigma") * F.coalesce("acc", F.lit(0.0))).alias("delta"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        downs[d + 1].unpersist()
-
-    all_delta = deltas[0]
-    for dd in deltas[1:]:
-        all_delta = all_delta.unionByName(dd)
-
-    if root_weights is not None:
-        if len(root_weights) != len(roots):
-            raise ValueError("root_weights must be parallel to roots")
-        w_df = spark.createDataFrame(
-            list(zip(roots, root_weights)), "root long, w double"
-        )
-        bc = (
-            all_delta.filter(F.col("id") != F.col("root"))
-            .join(F.broadcast(w_df), "root")
-            .groupBy("id")
-            .agg(F.sum(F.col("delta") * F.col("w")).alias("bc"))
-        )
-    else:
-        bc = (
-            all_delta.filter(F.col("id") != F.col("root"))
-            .groupBy("id")
-            .agg(F.sum("delta").alias("bc"))
-        )
-    out = nodes.join(bc, "id", "left").select(
-        "id", F.coalesce("bc", F.lit(0.0)).alias("bc")
-    )
-    # materialize before dropping the cached inputs the plan depends on
-    out = out.localCheckpoint(eager=True)
-    e.unpersist()
-    nodes.unpersist()
-    return out
 
 
 def edge_betweenness(
@@ -234,149 +247,83 @@ def edge_betweenness(
     accumulates σ_v·(1+δ_w)/σ_w per root (Brandes 2001 §4 edge form);
     directed edges never on any sampled shortest path score 0.
 
-    Same forward pass as :func:`betweenness_centrality` (level-synchronous
-    K-keyed BFS with σ counting, per-level checkpointed down-edge cache);
-    the backward sweep joins σ_v in once per level, so NODE δ recursion
-    stays exactly the node kernel's expression shape (σ_v · Σ(1+δ_w)/σ_w)
-    while the per-edge terms fall out of the same cached join — no extra
-    pass over the edge table. 6-dp rounding on output (≤ K float terms
-    per edge)."""
+    Same forward pass as :func:`betweenness_centrality`; the backward
+    sweep joins σ_v in once per level, so NODE δ recursion stays exactly
+    the node kernel's expression shape (σ_v · Σ(1+δ_w)/σ_w) while the
+    per-edge terms fall out of the same cached join — no extra pass over
+    the edge table. 6-dp rounding on output (≤ K float terms per edge)."""
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if roots is None:
         roots = pick_roots(edges, k, seed)
 
-    e = edges.select(SRC, DST).distinct().repartition(p, SRC).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    e.count()
-
-    roots_df = spark.createDataFrame([(r,) for r in roots], "root long")
-    level0 = (
-        roots_df.select(
-            "root",
-            F.col("root").alias("id"),
-            F.lit(0).alias("depth"),
-            F.lit(1.0).alias("sigma"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    levels: list[DataFrame] = [level0]
-    counts: list[int] = [len(roots)]
-    downs: list[DataFrame | None] = [None]
-    frontier = level0
-    depth = 0
-    while depth < max_depth:
-        visited = levels[0]
-        for lv in levels[1:]:
-            visited = visited.unionByName(lv)
-        fr = frontier.select("root", F.col("id").alias("vid"), "sigma")
-        cand = (
-            join_side(fr, counts[-1])
-            .join(e, fr["vid"] == e[SRC])
-            .select("root", "vid", F.col(DST).alias("id"), "sigma")
-        )
-        stepped = cand.join(
-            join_side(visited.select("root", "id"), sum(counts)),
-            ["root", "id"],
-            "left_anti",
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # level count rides the eager checkpoint (see node kernel)
-        obs = Observation()
-        nxt = (
-            stepped.groupBy("root", "id")
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("depth", F.lit(depth + 1))
-            .select("root", "id", "depth", "sigma")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = int(obs.get["n"])
-        if n_nxt == 0:
-            stepped.unpersist()
-            break
-        levels.append(nxt)
-        counts.append(n_nxt)
-        downs.append(stepped)
-        frontier = nxt
-        depth += 1
-
-    max_d = len(levels) - 1
-    deltas: list[DataFrame | None] = [None] * (max_d + 1)
-    deltas[max_d] = (
-        levels[max_d]
-        .select("root", "id", F.lit(0.0).alias("delta"))
-        .localCheckpoint(eager=True)
-    )
-    eterms: list[DataFrame] = []
-    joined_frames: list[DataFrame] = []
-    for d in range(max_d - 1, -1, -1):
-        w = (
-            levels[d + 1]
-            .select("root", F.col("id").alias("wid"), F.col("sigma").alias("wsigma"))
-            .join(
-                deltas[d + 1]
-                .withColumnRenamed("id", "wid")
-                .withColumnRenamed("delta", "wdelta"),
-                ["root", "wid"],
+    with rounds() as r:
+        e, _ = r.keep(edges.select(SRC, DST).distinct().repartition(p, SRC))
+        eterms: list[DataFrame] = []
+        with _brandes_forward(e, roots, max_depth) as (levels, counts, descend):
+            max_d = len(levels) - 1
+            deltas: list[DataFrame | None] = [None] * (max_d + 1)
+            deltas[max_d] = (
+                levels[max_d]
+                .select("root", "id", F.lit(0.0).alias("delta"))
+                .localCheckpoint(eager=True)
             )
-        )
-        vsig = levels[d].select(
-            "root", F.col("id").alias("vid"), F.col("sigma").alias("vsigma")
-        )
-        joined = (
-            downs[d + 1]
-            .select("root", "vid", F.col("id").alias("wid"))
-            .join(join_side(w, counts[d + 1]), ["root", "wid"])
-            .join(join_side(vsig, counts[d]), ["root", "vid"])
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # node δ recursion keeps the node kernel's exact expression shape
-        acc = joined.groupBy("root", "vid").agg(
-            F.sum((F.lit(1.0) + F.col("wdelta")) / F.col("wsigma")).alias("acc")
-        )
-        deltas[d] = (
-            levels[d]
-            .select("root", "id", "sigma")
-            .join(acc.withColumnRenamed("vid", "id"), ["root", "id"], "left")
+            for d, down in descend:
+                w = (
+                    levels[d + 1]
+                    .select("root", F.col("id").alias("wid"), F.col("sigma").alias("wsigma"))
+                    .join(
+                        deltas[d + 1]
+                        .withColumnRenamed("id", "wid")
+                        .withColumnRenamed("delta", "wdelta"),
+                        ["root", "wid"],
+                    )
+                )
+                vsig = levels[d].select(
+                    "root", F.col("id").alias("vid"), F.col("sigma").alias("vsigma")
+                )
+                # held until the scores below are materialized
+                joined = r.cache(
+                    down.select("root", "vid", F.col("id").alias("wid"))
+                    .join(join_side(w, counts[d + 1]), ["root", "wid"])
+                    .join(join_side(vsig, counts[d]), ["root", "vid"])
+                )
+                # node δ recursion keeps the node kernel's exact expression shape
+                acc = joined.groupBy("root", "vid").agg(
+                    F.sum((F.lit(1.0) + F.col("wdelta")) / F.col("wsigma")).alias("acc")
+                )
+                deltas[d] = (
+                    levels[d]
+                    .select("root", "id", "sigma")
+                    .join(acc.withColumnRenamed("vid", "id"), ["root", "id"], "left")
+                    .select(
+                        "root",
+                        "id",
+                        (F.col("sigma") * F.coalesce("acc", F.lit(0.0))).alias("delta"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
+                eterms.append(
+                    joined.select(
+                        F.col("vid").alias(SRC),
+                        F.col("wid").alias(DST),
+                        (F.col("vsigma") * (F.lit(1.0) + F.col("wdelta")) / F.col("wsigma"))
+                        .alias("contrib"),
+                    )
+                )
+
+        if eterms:
+            scores = _union(eterms).groupBy(SRC, DST).agg(F.sum("contrib").alias("_s"))
+        else:
+            scores = spark.createDataFrame([], f"{SRC} long, {DST} long, _s double")
+        return (
+            e.filter(F.col(SRC) != F.col(DST))
+            .join(scores, [SRC, DST], "left")
             .select(
-                "root",
-                "id",
-                (F.col("sigma") * F.coalesce("acc", F.lit(0.0))).alias("delta"),
+                SRC, DST, F.round(F.coalesce("_s", F.lit(0.0)), 6).alias("ebc")
             )
             .localCheckpoint(eager=True)
         )
-        eterms.append(
-            joined.select(
-                F.col("vid").alias(SRC),
-                F.col("wid").alias(DST),
-                (F.col("vsigma") * (F.lit(1.0) + F.col("wdelta")) / F.col("wsigma"))
-                .alias("contrib"),
-            )
-        )
-        joined_frames.append(joined)
-        downs[d + 1].unpersist()
-
-    if eterms:
-        all_terms = eterms[0]
-        for t in eterms[1:]:
-            all_terms = all_terms.unionByName(t)
-        scores = all_terms.groupBy(SRC, DST).agg(F.sum("contrib").alias("_s"))
-    else:
-        scores = spark.createDataFrame([], f"{SRC} long, {DST} long, _s double")
-    out = (
-        e.filter(F.col(SRC) != F.col(DST))
-        .join(scores, [SRC, DST], "left")
-        .select(
-            SRC, DST, F.round(F.coalesce("_s", F.lit(0.0)), 6).alias("ebc")
-        )
-        .localCheckpoint(eager=True)
-    )
-    for jf in joined_frames:
-        jf.unpersist()
-    e.unpersist()
-    return out
 
 
 def weighted_betweenness_centrality(
@@ -415,112 +362,102 @@ def weighted_betweenness_centrality(
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     roots = sorted(set(roots))
 
-    dists = multi_source_sssp(
-        edges, roots, weight_col=weight_col, weight_resolution=weight_resolution,
-        max_iter=max_iter,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    dists.count()
-
-    rel = (
-        drop_self_loops(edges)
-        .select(
-            SRC,
-            DST,
-            (
-                F.floor(
-                    F.col(weight_col).cast("double") * F.lit(float(weight_resolution))
-                ).cast("long")
-                + F.lit(1).cast("long")
-            ).alias("w"),
-        )
-        .groupBy(SRC, DST)
-        .agg(F.min("w").alias("w"))
-    )
-    du = dists.select("root", F.col("id").alias(SRC), F.col("dist").alias("du"))
-    dv = dists.select("root", F.col("id").alias(DST), F.col("dist").alias("dv"))
-    dag = (
-        rel.join(du, SRC)
-        .join(dv, ["root", DST])
-        .filter(F.col("du") + F.col("w") == F.col("dv"))
-        .select("root", F.col(SRC).alias("u"), F.col(DST).alias("v"))
-        .repartition(p, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    dag.count()
-
-    reached = dists.select("root", "id")
-    base = (F.col("id") == F.col("root")).cast("long")
-    sigma = reached.withColumn("sigma", base).localCheckpoint(eager=True)
-    prev_total = -1
-    rounds = 0
-    for _ in range(max_iter):
-        contrib = (
-            sigma.withColumnRenamed("id", "u")
-            .join(dag, ["root", "u"])
-            .groupBy("root", F.col("v").alias("id"))
-            .agg(F.sum("sigma").alias("acc"))
-        )
-        # the convergence probe (exact BIGINT total — order-independent)
-        # rides the eager checkpoint as an observed metric: one job per
-        # round instead of checkpoint + aggregate
-        obs = Observation()
-        sigma = (
-            reached.join(contrib, ["root", "id"], "left")
-            .select(
-                "root", "id", (base + F.coalesce("acc", F.lit(0))).alias("sigma")
+    with rounds() as r:
+        dists, _ = r.keep(
+            multi_source_sssp(
+                edges, roots, weight_col=weight_col,
+                weight_resolution=weight_resolution, max_iter=max_iter,
             )
-            .observe(obs, F.sum("sigma").alias("t"))
+        )
+        rel = (
+            drop_self_loops(edges)
+            .select(
+                SRC,
+                DST,
+                (
+                    F.floor(
+                        F.col(weight_col).cast("double") * F.lit(float(weight_resolution))
+                    ).cast("long")
+                    + F.lit(1).cast("long")
+                ).alias("w"),
+            )
+            .groupBy(SRC, DST)
+            .agg(F.min("w").alias("w"))
+        )
+        du = dists.select("root", F.col("id").alias(SRC), F.col("dist").alias("du"))
+        dv = dists.select("root", F.col("id").alias(DST), F.col("dist").alias("dv"))
+        dag, _ = r.keep(
+            rel.join(du, SRC)
+            .join(dv, ["root", DST])
+            .filter(F.col("du") + F.col("w") == F.col("dv"))
+            .select("root", F.col(SRC).alias("u"), F.col(DST).alias("v"))
+            .repartition(p, "u")
+        )
+
+        reached = dists.select("root", "id")
+        base = (F.col("id") == F.col("root")).cast("long")
+        sigma = reached.withColumn("sigma", base).localCheckpoint(eager=True)
+        prev_total = -1
+        n_rounds = 0
+        for _ in range(max_iter):
+            contrib = (
+                sigma.withColumnRenamed("id", "u")
+                .join(dag, ["root", "u"])
+                .groupBy("root", F.col("v").alias("id"))
+                .agg(F.sum("sigma").alias("acc"))
+            )
+            # the convergence probe (exact BIGINT total — order-independent)
+            # rides the eager checkpoint: one job per round instead of
+            # checkpoint + aggregate
+            sigma, m = checkpoint_counted(
+                reached.join(contrib, ["root", "id"], "left").select(
+                    "root", "id", (base + F.coalesce("acc", F.lit(0))).alias("sigma")
+                ),
+                "wbc_sigma",
+                F.sum("sigma").alias("t"),
+            )
+            n_rounds += 1
+            if m["t"] == prev_total:
+                break
+            prev_total = m["t"]
+
+        s_u = sigma.select("root", F.col("id").alias("u"), F.col("sigma").alias("su"))
+        s_v = sigma.select("root", F.col("id").alias("v"), F.col("sigma").alias("sv"))
+        fac, _ = r.keep(
+            dag.join(s_u, ["root", "u"])
+            .join(s_v, ["root", "v"])
+            .select(
+                "root", "u", "v",
+                (F.col("su").cast("double") / F.col("sv").cast("double")).alias("f"),
+            )
+            .repartition(p, "v")
+        )
+
+        delta = reached.withColumn("delta", F.lit(0.0)).localCheckpoint(eager=True)
+        for _ in range(n_rounds):
+            contrib = (
+                delta.withColumnRenamed("id", "v")
+                .join(fac, ["root", "v"])
+                .groupBy("root", F.col("u").alias("id"))
+                .agg(F.sum(F.col("f") * (F.lit(1.0) + F.col("delta"))).alias("acc"))
+            )
+            delta = (
+                reached.join(contrib, ["root", "id"], "left")
+                .select("root", "id", F.coalesce("acc", F.lit(0.0)).alias("delta"))
+                .localCheckpoint(eager=True)
+            )
+
+        bc = (
+            delta.filter(F.col("id") != F.col("root"))
+            .groupBy("id")
+            .agg(F.sum("delta").alias("bc"))
+        )
+        return (
+            nodes_of(edges)
+            .join(bc, "id", "left")
+            .select("id", F.coalesce("bc", F.lit(0.0)).alias("bc"))
             .localCheckpoint(eager=True)
         )
-        rounds += 1
-        total = obs.get["t"]
-        if total == prev_total:
-            break
-        prev_total = total
-
-    s_u = sigma.select("root", F.col("id").alias("u"), F.col("sigma").alias("su"))
-    s_v = sigma.select("root", F.col("id").alias("v"), F.col("sigma").alias("sv"))
-    fac = (
-        dag.join(s_u, ["root", "u"])
-        .join(s_v, ["root", "v"])
-        .select(
-            "root", "u", "v",
-            (F.col("su").cast("double") / F.col("sv").cast("double")).alias("f"),
-        )
-        .repartition(p, "v")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    fac.count()
-
-    delta = reached.withColumn("delta", F.lit(0.0)).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        contrib = (
-            delta.withColumnRenamed("id", "v")
-            .join(fac, ["root", "v"])
-            .groupBy("root", F.col("u").alias("id"))
-            .agg(F.sum(F.col("f") * (F.lit(1.0) + F.col("delta"))).alias("acc"))
-        )
-        delta = (
-            reached.join(contrib, ["root", "id"], "left")
-            .select("root", "id", F.coalesce("acc", F.lit(0.0)).alias("delta"))
-            .localCheckpoint(eager=True)
-        )
-
-    bc = (
-        delta.filter(F.col("id") != F.col("root"))
-        .groupBy("id")
-        .agg(F.sum("delta").alias("bc"))
-    )
-    out = (
-        nodes_of(edges)
-        .join(bc, "id", "left")
-        .select("id", F.coalesce("bc", F.lit(0.0)).alias("bc"))
-        .localCheckpoint(eager=True)
-    )
-    dists.unpersist()
-    dag.unpersist()
-    fac.unpersist()
-    return out
 
 
 def percolation_centrality(

@@ -39,9 +39,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..graph import DST, SRC, join_side, nodes_of, symmetrize
+from ..plans.fixpoint import checkpoint_counted, iterate, rounds
 from .components import connected_components
 
 
@@ -55,123 +55,106 @@ def bfs_forest(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     """
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    und = symmetrize(edges).repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
+    with rounds() as r:
+        und, _ = r.keep(symmetrize(edges).repartition(p, SRC))
 
-    # Fused CC + BFS: one delta fixpoint over lexicographic (component,
-    # depth) — each vertex converges to (min reachable id, BFS distance to
-    # it), i.e. the hash-min label AND the depth from the component root in
-    # a single kernel instead of a CC fixpoint followed by a BFS wave.
-    from ..plans.fixpoint import iterate
+        # Fused CC + BFS: one delta fixpoint over lexicographic (component,
+        # depth) — each vertex converges to (min reachable id, BFS distance
+        # to it), i.e. the hash-min label AND the depth from the component
+        # root in a single kernel instead of a CC fixpoint followed by a BFS
+        # wave.
+        nodes = nodes_of(edges)
+        n = nodes.count()
 
-    nodes = nodes_of(edges)
-    n = nodes.count()
+        init = nodes.select(
+            "id",
+            F.col("id").alias("comp"),
+            F.lit(0).cast("long").alias("depth"),
+            F.lit(True).alias("changed"),
+        )
 
-    init = nodes.select(
-        "id",
-        F.col("id").alias("comp"),
-        F.lit(0).cast("long").alias("depth"),
-        F.lit(True).alias("changed"),
-    )
-
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        frontier = state.filter(F.col("changed")).select("id", "comp", "depth")
-        cand = (
-            join_side(frontier, n).join(und, frontier["id"] == und[SRC])
-            .groupBy(F.col(DST).alias("id"))
-            .agg(
-                F.min(F.struct(F.col("comp"), (F.col("depth") + 1).alias("depth"))).alias(
-                    "c"
+        def step(state: DataFrame, _i: int) -> DataFrame:
+            frontier = state.filter(F.col("changed")).select("id", "comp", "depth")
+            cand = (
+                join_side(frontier, n).join(und, frontier["id"] == und[SRC])
+                .groupBy(F.col(DST).alias("id"))
+                .agg(
+                    F.min(
+                        F.struct(F.col("comp"), (F.col("depth") + 1).alias("depth"))
+                    ).alias("c")
                 )
             )
-        )
-        improved = F.col("c").isNotNull() & (
-            (F.col("c.comp") < F.col("comp"))
-            | ((F.col("c.comp") == F.col("comp")) & (F.col("c.depth") < F.col("depth")))
-        )
-        return state.join(join_side(cand, n), "id", "left").select(
-            "id",
-            F.when(improved, F.col("c.comp")).otherwise(F.col("comp")).alias("comp"),
-            F.when(improved, F.col("c.depth")).otherwise(F.col("depth")).alias("depth"),
-            improved.alias("changed"),
-        )
+            improved = F.col("c").isNotNull() & (
+                (F.col("c.comp") < F.col("comp"))
+                | ((F.col("c.comp") == F.col("comp")) & (F.col("c.depth") < F.col("depth")))
+            )
+            return state.join(join_side(cand, n), "id", "left").select(
+                "id",
+                F.when(improved, F.col("c.comp")).otherwise(F.col("comp")).alias("comp"),
+                F.when(improved, F.col("c.depth")).otherwise(F.col("depth")).alias("depth"),
+                improved.alias("changed"),
+            )
 
-    res = iterate(
-        init,
-        step,
-        max_iter=max_iter,
-        updated_metric=F.sum(F.col("changed").cast("long")),
-        truncate_every=1,
-        name="bfs_forest",
-    )
-    depths = res.state.select("id", F.col("comp").alias("root"), "depth")
+        res = iterate(
+            init,
+            step,
+            max_iter=max_iter,
+            updated_metric=F.sum(F.col("changed").cast("long")),
+            truncate_every=1,
+            name="bfs_forest",
+        )
+        depths = res.state.select("id", F.col("comp").alias("root"), "depth")
 
-    dep_u = depths.select(F.col("id").alias(SRC), F.col("depth").alias("d_src"))
-    dep_v = depths.select(F.col("id").alias(DST), F.col("depth").alias("d_dst"))
-    parents = (
-        und.join(dep_u, SRC)
-        .join(dep_v, DST)
-        .filter(F.col("d_src") == F.col("d_dst") - 1)
-        .groupBy(F.col(DST).alias("id"))
-        .agg(F.min(SRC).alias("parent"))
-    )
-    out = (
-        depths.join(parents, "id", "left")
-        .select("id", "root", "depth", "parent")
-        .localCheckpoint(eager=True)
-    )
-    und.unpersist()
-    return out
+        dep_u = depths.select(F.col("id").alias(SRC), F.col("depth").alias("d_src"))
+        dep_v = depths.select(F.col("id").alias(DST), F.col("depth").alias("d_dst"))
+        parents = (
+            und.join(dep_u, SRC)
+            .join(dep_v, DST)
+            .filter(F.col("d_src") == F.col("d_dst") - 1)
+            .groupBy(F.col(DST).alias("id"))
+            .agg(F.min(SRC).alias("parent"))
+        )
+        return (
+            depths.join(parents, "id", "left")
+            .select("id", "root", "depth", "parent")
+            .localCheckpoint(eager=True)
+        )
 
 
 def _ancestors(forest: DataFrame, max_doublings: int = 12) -> DataFrame:
     """Inclusive ancestor closure DataFrame[id, anc] by pointer doubling:
     (v, v) ∪ (v, parent(v)), then A ← A ∪ (A ∘ A) until fixpoint —
-    O(log depth) rounds, each one distinct-shuffle."""
-    from pyspark.sql import Observation
-
-    anc = (
+    O(log depth) rounds, each one distinct-shuffle. Each round's row
+    count — the convergence probe — rides its checkpoint job."""
+    anc, m = checkpoint_counted(
         forest.select(F.col("id"), F.col("id").alias("anc"))
         .unionByName(
             forest.filter(F.col("parent").isNotNull()).select(
                 "id", F.col("parent").alias("anc")
             )
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "ancestors",
     )
-    n = anc.count()
+    n = m["n"]
     for _d in range(max_doublings):
         hop = anc.select(F.col("id").alias("anc"), F.col("anc").alias("anc2"))
-        # the convergence row count rides the checkpoint job via observe —
-        # one Spark job per doubling round instead of two
-        obs = Observation(f"ancestors_{_d}")
-        grown = (
+        anc, m = checkpoint_counted(
             anc.unionByName(
                 anc.join(hop, "anc").select("id", F.col("anc2").alias("anc"))
-            )
-            .distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            ).distinct(),
+            "ancestors",
         )
-        n_new = int(obs.get["n"] or 0)
-        anc = grown
-        if n_new == n:
+        if m["n"] == n:
             break
-        n = n_new
+        n = m["n"]
     return anc
 
 
-def bridges(edges: DataFrame) -> DataFrame:
-    """Exact cut edges → DataFrame[u, v] with u < v (canonical undirected).
-
-    An edge is a bridge iff its removal disconnects its component. Exact
-    coverage counting over a deterministic BFS forest (module docstring);
-    no randomisation, so the result is bit-stable across partitionings.
-    """
-    forest = bfs_forest(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    forest.count()
-
+def _tree_and_nontree(edges: DataFrame, forest: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(tree [u, v, child], non-tree [u, v]) — the canonical undirected
+    edges (u < v) split by the forest: a tree edge joins ``child`` to its
+    parent."""
     und = symmetrize(edges)
     cund = (
         und.filter(F.col(SRC) < F.col(DST))
@@ -183,28 +166,49 @@ def bridges(edges: DataFrame) -> DataFrame:
         F.greatest("parent", "id").alias("v"),
         F.col("id").alias("child"),
     )
-    nt = cund.join(tree.select("u", "v"), ["u", "v"], "left_anti")
+    return tree, cund.join(tree.select("u", "v"), ["u", "v"], "left_anti")
 
+
+def _endpoint_cover(nt: DataFrame, forest: DataFrame) -> DataFrame:
+    """DataFrame[anc, u, v, cnt] — for each non-tree edge (u, v) and each
+    subtree root ``anc`` holding an endpoint, how many of its two
+    endpoints lie inside subtree(anc)."""
     anc = _ancestors(forest)
     ep = nt.select(F.col("u").alias("w"), "u", "v").unionByName(
         nt.select(F.col("v").alias("w"), "u", "v")
     )
-    per_edge_anc = (
+    return (
         ep.join(anc, ep["w"] == anc["id"])
         .groupBy("anc", "u", "v")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    covered = per_edge_anc.groupBy(F.col("anc").alias("child")).agg(
-        (F.sum("cnt") - 2 * F.sum((F.col("cnt") == 2).cast("long"))).alias("covered")
-    )
-    out = (
-        tree.join(covered, "child", "left")
-        .filter(F.coalesce(F.col("covered"), F.lit(0)) == 0)
-        .select("u", "v")
-    )
-    out = out.localCheckpoint(eager=True)
-    forest.unpersist()
-    return out
+
+
+def bridges(edges: DataFrame) -> DataFrame:
+    """Exact cut edges → DataFrame[u, v] with u < v (canonical undirected).
+
+    An edge is a bridge iff its removal disconnects its component. Exact
+    coverage counting over a deterministic BFS forest (module docstring);
+    no randomisation, so the result is bit-stable across partitionings.
+    """
+    with rounds() as r:
+        forest, _ = r.keep(bfs_forest(edges))
+        tree, nt = _tree_and_nontree(edges, forest)
+        covered = (
+            _endpoint_cover(nt, forest)
+            .groupBy(F.col("anc").alias("child"))
+            .agg(
+                (F.sum("cnt") - 2 * F.sum((F.col("cnt") == 2).cast("long"))).alias(
+                    "covered"
+                )
+            )
+        )
+        return (
+            tree.join(covered, "child", "left")
+            .filter(F.coalesce(F.col("covered"), F.lit(0)) == 0)
+            .select("u", "v")
+            .localCheckpoint(eager=True)
+        )
 
 
 def two_edge_components(edges: DataFrame) -> DataFrame:
@@ -249,66 +253,42 @@ def biconnected_blocks(edges: DataFrame) -> DataFrame:
     Node ids must fit u·(max_id+1)+v in a long (the non-tree-edge encoding
     used to key the bipartite CC) — true for any graph with < 2^31 ids.
     """
-    forest = bfs_forest(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    forest.count()
+    with rounds() as r:
+        forest, _ = r.keep(bfs_forest(edges))
+        tree, nt = _tree_and_nontree(edges, forest)
+        # nt is referenced twice (the coverage pairs AND nt_blocks below) —
+        # left lazy, the symmetrize + distinct + anti-join chain re-ran per
+        # reference; checkpoint it once
+        nt = nt.localCheckpoint(eager=True)
+        per_edge_anc = _endpoint_cover(nt, forest)
+        b = (
+            forest.agg(F.max("id")).collect()[0][0] or 0
+        ) + 1  # encoding base: one 1-row agg
+        nt_id = -(F.col("u") * F.lit(b) + F.col("v")) - 1
+        cover = per_edge_anc.filter(F.col("cnt") == 1).select(
+            F.col("anc").alias(SRC), nt_id.alias(DST)
+        )
+        comp = connected_components(cover)
 
-    und = symmetrize(edges)
-    cund = (
-        und.filter(F.col(SRC) < F.col(DST))
-        .select(F.col(SRC).alias("u"), F.col(DST).alias("v"))
-        .distinct()
-    )
-    tree = forest.filter(F.col("parent").isNotNull()).select(
-        F.least("parent", "id").alias("u"),
-        F.greatest("parent", "id").alias("v"),
-        F.col("id").alias("child"),
-    )
-    # nt is referenced twice (the coverage pairs AND nt_blocks below) —
-    # left lazy, the symmetrize + distinct + anti-join chain re-ran per
-    # reference; checkpoint it once
-    nt = cund.join(tree.select("u", "v"), ["u", "v"], "left_anti").localCheckpoint(
-        eager=True
-    )
-
-    anc = _ancestors(forest)
-    ep = nt.select(F.col("u").alias("w"), "u", "v").unionByName(
-        nt.select(F.col("v").alias("w"), "u", "v")
-    )
-    per_edge_anc = (
-        ep.join(anc, ep["w"] == anc["id"])
-        .groupBy("anc", "u", "v")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    b = (
-        forest.agg(F.max("id")).collect()[0][0] or 0
-    ) + 1  # encoding base: one 1-row agg
-    nt_id = -(F.col("u") * F.lit(b) + F.col("v")) - 1
-    cover = per_edge_anc.filter(F.col("cnt") == 1).select(
-        F.col("anc").alias(SRC), nt_id.alias(DST)
-    )
-    comp = connected_components(cover)
-
-    tree_comp = tree.join(
-        comp.withColumnRenamed("id", "child"), "child", "left"
-    )
-    block_of_comp = (
-        tree_comp.filter(F.col("component").isNotNull())
-        .groupBy("component")
-        .agg(F.min("child").alias("block"))
-    )
-    tree_blocks = (
-        tree_comp.join(block_of_comp, "component", "left")
-        .select("u", "v", F.coalesce("block", "child").alias("block"))
-    )
-    nt_blocks = (
-        nt.withColumn("ntid", nt_id)
-        .join(comp.withColumnRenamed("id", "ntid"), "ntid")
-        .join(block_of_comp, "component")
-        .select("u", "v", "block")
-    )
-    out = tree_blocks.unionByName(nt_blocks).localCheckpoint(eager=True)
-    forest.unpersist()
-    return out
+        tree_comp = tree.join(
+            comp.withColumnRenamed("id", "child"), "child", "left"
+        )
+        block_of_comp = (
+            tree_comp.filter(F.col("component").isNotNull())
+            .groupBy("component")
+            .agg(F.min("child").alias("block"))
+        )
+        tree_blocks = (
+            tree_comp.join(block_of_comp, "component", "left")
+            .select("u", "v", F.coalesce("block", "child").alias("block"))
+        )
+        nt_blocks = (
+            nt.withColumn("ntid", nt_id)
+            .join(comp.withColumnRenamed("id", "ntid"), "ntid")
+            .join(block_of_comp, "component")
+            .select("u", "v", "block")
+        )
+        return tree_blocks.unionByName(nt_blocks).localCheckpoint(eager=True)
 
 
 def articulation_points(edges: DataFrame) -> DataFrame:

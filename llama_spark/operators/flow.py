@@ -22,33 +22,29 @@ anti-join runs BEFORE the min-parent aggregate so both ride one exchange
 on id. Level row count + sink membership ride the level checkpoint as
 observed metrics (no extra count jobs). The augmenting-path walk is a
 lazy chain of exactly sink-depth 1-row⨝parent-map joins (the depth is a
-1-row read off the checkpointed map), one job; the residual update is
-one union + groupBy-sum — the inherent Edmonds–Karp O(E) round cost.
-Augmentation count is bounded by λ(s,t) (tens between web hubs).
+1-row read off the checkpointed map), cached and built by the first job
+that reads it; the residual update is one union + groupBy-sum — the
+inherent Edmonds–Karp O(E) round cost. Augmentation count is bounded by
+λ(s,t) (tens between web hubs).
+
+Cache lifetime: one round scope (plans/fixpoint.rounds) per call owns
+every cached frame. Each augmentation is a round: materializing the new
+residual ends it and releases the previous residual and the round's
+path. The original edges and the reach set are checkpointed result
+parts, so ``s_side`` and ``cut_edges`` stay readable from their
+checkpoint blocks after the scope has released their cache entries.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC, drop_self_loops, join_side, materialize
-
-_obs_seq = 0
-
-
-def _next_obs() -> Observation:
-    global _obs_seq
-    _obs_seq += 1
-    return Observation(f"flow_bfs_{_obs_seq}")
-
-
-def _union(frames: list[DataFrame]) -> DataFrame:
-    return reduce(lambda x, y: x.unionByName(y), frames)
+from ..graph import DST, SRC, drop_self_loops, join_side
+from ..plans.fixpoint import checkpoint_counted, rounds
+from .traversal import _union
 
 
 @dataclass
@@ -100,18 +96,12 @@ def _residual_bfs(
             levels.append(nxt)
             reach_cur = reach_cur.unionByName(nxt.select("id"))
             front_cur = nxt.select("id")
-        obs = _next_obs()
-        blockdf = (
-            _union(levels)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.max((F.col("id") == sink).cast("int")).alias("hit"),
-                F.max("depth").alias("deepest"),
-            )
-            .localCheckpoint(eager=True)
+        blockdf, m = checkpoint_counted(
+            _union(levels),
+            "flow_bfs",
+            F.max((F.col("id") == sink).cast("int")).alias("hit"),
+            F.max("depth").alias("deepest"),
         )
-        m = obs.get
         if m["n"] == 0:
             break
         parts.append(blockdf)
@@ -148,93 +138,90 @@ def max_flow_unit(
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     unit = capacity_col is None
     cap_in = F.lit(1) if unit else F.col(capacity_col).cast("long")
-    orig = materialize(
-        drop_self_loops(edges.select(SRC, DST, cap_in.alias("cap")))
-        .groupBy(SRC, DST)
-        .agg(F.sum("cap").alias("cap"))
-    )
-    n_nodes = (
-        orig.select(F.col(SRC).alias("id"))
-        .unionByName(orig.select(F.col(DST).alias("id")))
-        .distinct()
-        .count()
-    )
-    resid = materialize(
-        orig.select(
-            F.col(SRC).alias("a"), F.col(DST).alias("b"), F.col("cap")
-        ).repartition(p, "a")
-    )
-    root = spark.createDataFrame(
-        [(int(source), None, 0)], "id long, parent long, depth int"
-    ).localCheckpoint(eager=True)
-
-    flow = 0
-    converged = False
-    while True:
-        pm, walk_bound = _residual_bfs(resid, root, sink, max_depth, n_nodes)
-        if walk_bound is None:
-            converged = True
-            s_side = materialize(pm.select("id"))
-            break
-        if flow >= max_augment:
-            converged = False
-            s_side = materialize(pm.select("id"))
-            break
-
-        # unique augmenting path: lazy walk of ≤ walk_bound steps from
-        # the sink over the (checkpointed) parent map — one job; steps
-        # past the source are empty (parent NULL joins nothing)
-        cur = pm.filter(F.col("id") == sink).select("id", "parent")
-        pparts = []
-        for _ in range(walk_bound):
-            pparts.append(
-                cur.select(F.col("parent").alias("pa"), F.col("id").alias("pb"))
-            )
-            cur = pm.join(
-                cur.select(F.col("parent").alias("id")), "id"
-            ).select("id", "parent")
-        path = materialize(_union(pparts).filter(F.col("pa").isNotNull()))
-        if unit:
-            bottleneck = 1  # unit caps — no job needed
-        else:
-            # path bottleneck: 1-row aggregate over path⨝residual caps
-            bottleneck = int(
-                path.join(
-                    resid,
-                    (resid["a"] == path["pa"]) & (resid["b"] == path["pb"]),
-                )
-                .agg(F.min("cap"))
-                .collect()[0][0]
-            )
-
-        upd = (
-            resid.select("a", "b", "cap")
-            .unionByName(
-                path.select(
-                    F.col("pa").alias("a"),
-                    F.col("pb").alias("b"),
-                    F.lit(-bottleneck).alias("cap"),
-                )
-            )
-            .unionByName(
-                path.select(
-                    F.col("pb").alias("a"),
-                    F.col("pa").alias("b"),
-                    F.lit(bottleneck).alias("cap"),
-                )
-            )
-        )
-        new_resid = materialize(
-            upd.groupBy("a", "b")
+    with rounds() as r:
+        orig, _ = r.part(
+            drop_self_loops(edges.select(SRC, DST, cap_in.alias("cap")))
+            .groupBy(SRC, DST)
             .agg(F.sum("cap").alias("cap"))
-            .filter(F.col("cap") > 0)
-            .repartition(p, "a")
         )
-        resid.unpersist()
-        path.unpersist()
-        resid = new_resid
-        flow += bottleneck
+        n_nodes = (
+            orig.select(F.col(SRC).alias("id"))
+            .unionByName(orig.select(F.col(DST).alias("id")))
+            .distinct()
+            .count()
+        )
+        resid, _ = r.start(
+            orig.select(
+                F.col(SRC).alias("a"), F.col(DST).alias("b"), F.col("cap")
+            ).repartition(p, "a")
+        )
+        root = spark.createDataFrame(
+            [(int(source), None, 0)], "id long, parent long, depth int"
+        ).localCheckpoint(eager=True)
 
+        flow = 0
+        while True:
+            pm, walk_bound = _residual_bfs(resid, root, sink, max_depth, n_nodes)
+            converged = walk_bound is None
+            if converged or flow >= max_augment:
+                s_side, _ = r.part(pm.select("id"))
+                break
+
+            # unique augmenting path: lazy walk of ≤ walk_bound steps from
+            # the sink over the (checkpointed) parent map; steps past the
+            # source are empty (parent NULL joins nothing). Cached for the
+            # round: the bottleneck probe and the residual update read it.
+            cur = pm.filter(F.col("id") == sink).select("id", "parent")
+            pparts = []
+            for _ in range(walk_bound):
+                pparts.append(
+                    cur.select(F.col("parent").alias("pa"), F.col("id").alias("pb"))
+                )
+                cur = pm.join(
+                    cur.select(F.col("parent").alias("id")), "id"
+                ).select("id", "parent")
+            path = r.cache(_union(pparts).filter(F.col("pa").isNotNull()))
+            if unit:
+                bottleneck = 1  # unit caps — no job needed
+            else:
+                # path bottleneck: 1-row aggregate over path⨝residual caps
+                bottleneck = int(
+                    path.join(
+                        resid,
+                        (resid["a"] == path["pa"]) & (resid["b"] == path["pb"]),
+                    )
+                    .agg(F.min("cap"))
+                    .collect()[0][0]
+                )
+
+            upd = (
+                resid.select("a", "b", "cap")
+                .unionByName(
+                    path.select(
+                        F.col("pa").alias("a"),
+                        F.col("pb").alias("b"),
+                        F.lit(-bottleneck).alias("cap"),
+                    )
+                )
+                .unionByName(
+                    path.select(
+                        F.col("pb").alias("a"),
+                        F.col("pa").alias("b"),
+                        F.lit(bottleneck).alias("cap"),
+                    )
+                )
+            )
+            # ends the round: the path and the previous residual go
+            resid, _ = r.materialize(
+                upd.groupBy("a", "b")
+                .agg(F.sum("cap").alias("cap"))
+                .filter(F.col("cap") > 0)
+                .repartition(p, "a")
+            )
+            flow += bottleneck
+
+    # orig and s_side are checkpointed: readable after the scope released
+    # their cache entries
     cut = (
         orig.join(s_side.withColumnRenamed("id", SRC), SRC, "left_semi")
         .join(s_side.withColumnRenamed("id", DST), DST, "left_anti")

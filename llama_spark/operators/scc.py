@@ -31,13 +31,11 @@ its own, which releases it as soon as the mark is done.
 
 from __future__ import annotations
 
-from itertools import count
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, drop_self_loops, join_side, nodes_of
-from ..plans.fixpoint import Rounds, iterate, rounds
+from ..plans.fixpoint import Rounds, checkpoint_counted, iterate, rounds
 
 
 def _replace_edges(r: Rounds, df: DataFrame) -> DataFrame:
@@ -46,13 +44,6 @@ def _replace_edges(r: Rounds, df: DataFrame) -> DataFrame:
     df = r.cache(df)
     r.end_round(rows=df.count())
     return df
-
-
-def _checkpoint_counted(df: DataFrame, name: str) -> tuple[DataFrame, int]:
-    """``localCheckpoint`` with the row count riding the same job."""
-    obs = Observation(name)
-    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    return out, int(obs.get["n"] or 0)
 
 
 def _color_step(active_edges: DataFrame, remaining: int):
@@ -78,9 +69,7 @@ def _color_step(active_edges: DataFrame, remaining: int):
     return step
 
 
-def _mark_backward(
-    colors: DataFrame, active_edges: DataFrame, p: int, tag: str
-) -> DataFrame:
+def _mark_backward(colors: DataFrame, active_edges: DataFrame, p: int) -> DataFrame:
     """(id, color) of every node that reaches its color's root: a
     multi-source BFS from the roots along reversed edges, restricted to
     same-color nodes. Levels are checkpointed and unioned lazily (no
@@ -93,8 +82,8 @@ def _mark_backward(
         )
         roots = colors.filter(F.col("id") == F.col("color")).select("id", "color")
         marked = frontier = roots.localCheckpoint(eager=True)
-        for lvl in count():
-            step, n = _checkpoint_counted(
+        while True:
+            step, m = checkpoint_counted(
                 frontier.join(rev, frontier["id"] == rev[SRC])
                 .select(F.col(DST).alias("id"), "color")
                 .join(colors.withColumnRenamed("color", "c2"), "id")
@@ -102,9 +91,9 @@ def _mark_backward(
                 .select("id", "color")
                 .join(marked, ["id", "color"], "left_anti")
                 .distinct(),
-                f"{tag}_b{lvl}",
+                "scc_mark",
             )
-            if n == 0:
+            if m["n"] == 0:
                 return marked
             marked = marked.unionByName(step)
             frontier = step
@@ -143,12 +132,13 @@ def strongly_connected_components(
             # On web graphs trivial SCCs dominate once the giant SCC is gone,
             # so this turns most outer rounds' colorings into no-ops.
             while remaining > 0:
-                keep, n_keep = _checkpoint_counted(
+                keep, m = checkpoint_counted(
                     active_edges.select(F.col(SRC).alias("id"))
                     .distinct()
                     .join(active_edges.select(F.col(DST).alias("id")).distinct(), "id"),
-                    f"scc_trim_{_round}_{_stats['trim_rounds']}",
+                    "scc_trim",
                 )
+                n_keep = m["n"]
                 n_trivial = remaining - n_keep
                 if n_trivial == 0:
                     break
@@ -195,15 +185,16 @@ def strongly_connected_components(
             colors = coloring.state.select("id", "color")
 
             # 2. backward mark from roots within color classes
-            marked = _mark_backward(colors, active_edges, p, f"scc_r{_round}")
+            marked = _mark_backward(colors, active_edges, p)
             # canonical label: min member id per (root) color class found
             canon = marked.groupBy("color").agg(F.min("id").alias("scc"))
             found, _ = r.part(marked.join(canon, "color").select("id", "scc"))
 
             # 3. peel off and continue on the remainder
-            active_nodes, remaining = _checkpoint_counted(
-                active_nodes.join(found, "id", "left_anti"), f"scc_peel_{_round}"
+            active_nodes, m = checkpoint_counted(
+                active_nodes.join(found, "id", "left_anti"), "scc_peel"
             )
+            remaining = m["n"]
             active_edges = _replace_edges(
                 r,
                 active_edges.join(found.select(F.col("id").alias(SRC)), SRC, "left_anti")

@@ -18,9 +18,10 @@ ST_SMALL/ST_QUE→ST_RD transition.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..graph import (
     DST,
@@ -31,7 +32,12 @@ from ..graph import (
     nodes_of,
     symmetrize,
 )
-from ..plans.fixpoint import iterate
+from ..plans.fixpoint import checkpoint_counted, iterate, rounds
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    """Left-deep ``unionByName`` of already-materialized frames."""
+    return reduce(DataFrame.unionByName, frames)
 
 
 def sssp(
@@ -50,61 +56,50 @@ def sssp(
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    rel = (
-        edges.select(SRC, DST, w.alias("w"))
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    m_edges = rel.count()
-    nodes = nodes_of(edges)
-    n = nodes.count()
+    with rounds() as r:
+        rel, m_edges = r.keep(edges.select(SRC, DST, w.alias("w")).repartition(p, SRC))
+        nodes = nodes_of(edges)
+        n = nodes.count()
 
-    init = nodes.select(
-        "id",
-        F.when(F.col("id") == root, F.lit(0.0)).otherwise(F.lit(None).cast("double")).alias(
-            "dist"
-        ),
-        (F.col("id") == root).alias("changed"),
-    )
-
-    # Delta iteration (sssp.h:131-161 relaxes only the updated frontier):
-    # candidates are generated ONLY from rows improved last round, and the
-    # changed flag doubles as the "no update → stop" probe (sssp.h:124-179).
-    def step(dists: DataFrame, _i: int) -> DataFrame:
-        frontier = dists.filter(F.col("changed")).select("id", "dist")
-        cand = (
-            join_side(frontier, n).join(rel, frontier["id"] == rel[SRC])
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
-        )
-        return dists.join(join_side(cand, n), "id", "left").select(
+        init = nodes.select(
             "id",
-            F.when(
-                F.col("cand").isNotNull()
-                & (F.col("dist").isNull() | (F.col("cand") < F.col("dist"))),
-                F.col("cand"),
-            )
-            .otherwise(F.col("dist"))
+            F.when(F.col("id") == root, F.lit(0.0))
+            .otherwise(F.lit(None).cast("double"))
             .alias("dist"),
-            (
-                F.col("cand").isNotNull()
-                & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-            ).alias("changed"),
+            (F.col("id") == root).alias("changed"),
         )
 
-    res = iterate(
-        init,
-        step,
-        max_iter=max_iter,
-        updated_metric=F.sum(F.col("changed").cast("long")),
-        checkpoint_dir=checkpoint_dir,
-        # edge count is already materialized; nodes ≤ 2m, so m bounds the
-        # state size for the tiny/big truncation-cadence choice
-        truncate_every=1 if is_small(m_edges) else 4,
-        resume=resume,
-        name="sssp",
-    )
-    rel.unpersist()
+        # Delta iteration (sssp.h:131-161 relaxes only the updated frontier):
+        # candidates are generated ONLY from rows improved last round, and the
+        # changed flag doubles as the "no update → stop" probe (sssp.h:124-179).
+        def step(dists: DataFrame, _i: int) -> DataFrame:
+            frontier = dists.filter(F.col("changed")).select("id", "dist")
+            cand = (
+                join_side(frontier, n).join(rel, frontier["id"] == rel[SRC])
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
+            )
+            improved = F.col("cand").isNotNull() & (
+                F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
+            )
+            return dists.join(join_side(cand, n), "id", "left").select(
+                "id",
+                F.when(improved, F.col("cand")).otherwise(F.col("dist")).alias("dist"),
+                improved.alias("changed"),
+            )
+
+        res = iterate(
+            init,
+            step,
+            max_iter=max_iter,
+            updated_metric=F.sum(F.col("changed").cast("long")),
+            checkpoint_dir=checkpoint_dir,
+            # edge count is already materialized; nodes ≤ 2m, so m bounds the
+            # state size for the tiny/big truncation-cadence choice
+            truncate_every=1 if is_small(m_edges) else 4,
+            resume=resume,
+            name="sssp",
+        )
     return res.state.select("id", "dist")
 
 
@@ -142,58 +137,41 @@ def multi_source_bfs_depths(
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     roots = sorted(set(roots))
-    rel = edges.select(SRC, DST).distinct().repartition(p, SRC).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    rel.count()
+    with rounds() as r:
+        rel, _ = r.keep(edges.select(SRC, DST).distinct().repartition(p, SRC))
 
-    level0 = spark.createDataFrame(
-        [(r, r, 0) for r in roots], "root long, id long, depth long"
-    ).localCheckpoint(eager=True)
-    levels: list[DataFrame] = [level0]
-    counts: list[int] = [len(roots)]
-    frontier = level0
-    for depth in range(max_iter):
-        visited = levels[0]
-        for lv in levels[1:]:
-            visited = visited.unionByName(lv)
-        fr = frontier.select("root", "id")
-        cand = (
-            join_side(fr, counts[-1])
-            .join(rel, fr["id"] == rel[SRC])
-            .select("root", F.col(DST).alias("id"))
-            .distinct()
-        )
-        # the frontier row count rides the checkpoint job via observe —
-        # one Spark job per level instead of two
-        from pyspark.sql import Observation
-
-        from ..plans.fixpoint import _OBS_SEQ
-
-        obs = Observation(f"msbfs_d{depth}_{next(_OBS_SEQ)}")
-        nxt = (
-            cand.join(
-                join_side(visited.select("root", "id"), sum(counts)),
-                ["root", "id"],
-                "left_anti",
+        level0 = spark.createDataFrame(
+            [(x, x, 0) for x in roots], "root long, id long, depth long"
+        ).localCheckpoint(eager=True)
+        levels: list[DataFrame] = [level0]
+        counts: list[int] = [len(roots)]
+        frontier = level0
+        for depth in range(max_iter):
+            visited = _union(levels)
+            fr = frontier.select("root", "id")
+            cand = (
+                join_side(fr, counts[-1])
+                .join(rel, fr["id"] == rel[SRC])
+                .select("root", F.col(DST).alias("id"))
+                .distinct()
             )
-            .withColumn("depth", F.lit(depth + 1).cast("long"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = int(obs.get["n"] or 0)
-        if n_nxt == 0:
-            break
-        levels.append(nxt)
-        counts.append(n_nxt)
-        frontier = nxt
+            # the frontier row count rides the checkpoint job — one Spark
+            # job per level instead of two
+            nxt, m = checkpoint_counted(
+                cand.join(
+                    join_side(visited.select("root", "id"), sum(counts)),
+                    ["root", "id"],
+                    "left_anti",
+                ).withColumn("depth", F.lit(depth + 1).cast("long")),
+                "msbfs",
+            )
+            if m["n"] == 0:
+                break
+            levels.append(nxt)
+            counts.append(m["n"])
+            frontier = nxt
 
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    out = out.localCheckpoint(eager=True)
-    rel.unpersist()
-    return out
+        return _union(levels).localCheckpoint(eager=True)
 
 
 def closeness_centrality(
@@ -288,84 +266,72 @@ def multi_source_sssp(
 
     Plan per round: relax candidates from the CHANGED frontier only
     (frontier ⨝ cached integer edge table, map-side-combinable min),
-    merged into the state with one (root,id) min-aggregate. State uses
-    the persist + every-4th-round localCheckpoint cadence — it is
-    referenced twice per round (frontier filter + merge), which under
-    checkpoint-only truncation recomputes 2^r deep in this build (the
-    trussness lesson, operators/truss.py).
+    merged into the state with one (root,id) min-aggregate. The state is
+    an ``iterate`` fixpoint on the persist + every-4th-round
+    localCheckpoint cadence — it is referenced twice per round (frontier
+    filter + merge), which under checkpoint-only truncation recomputes
+    2^r deep in this build (the trussness lesson, operators/truss.py) —
+    and the changed-count rides each round's materialization job.
     """
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     roots = sorted(set(roots))
-    rel = (
-        drop_self_loops(edges)
-        .select(
-            SRC,
-            DST,
-            (
-                F.floor(
-                    F.col(weight_col).cast("double")
-                    * F.lit(float(weight_resolution))
-                ).cast("long")
-                + F.lit(1).cast("long")
-            ).alias("w"),
-        )
-        .groupBy(SRC, DST)
-        .agg(F.min("w").alias("w"))
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rel.count()
-
-    state = spark.createDataFrame(
-        [(r, r, 0, True) for r in roots],
-        "root long, id long, dist long, changed boolean",
-    ).localCheckpoint(eager=True)
-    prev_cached = None
-    for _i in range(max_iter):
-        frontier = state.filter(F.col("changed")).select("root", "id", "dist")
-        cand = (
-            frontier.hint("shuffle_hash")
-            .join(rel, frontier["id"] == rel[SRC])
-            .groupBy("root", F.col(DST).alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
-        )
-        merged = (
-            state.select("root", "id", "dist")
-            .join(cand, ["root", "id"], "full_outer")
+    with rounds() as r:
+        rel, _ = r.keep(
+            drop_self_loops(edges)
             .select(
-                "root",
-                "id",
-                F.least(
-                    F.coalesce("dist", F.col("cand")),
-                    F.coalesce("cand", F.col("dist")),
-                ).alias("dist"),
+                SRC,
+                DST,
                 (
-                    F.col("cand").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-                ).alias("changed"),
+                    F.floor(
+                        F.col(weight_col).cast("double")
+                        * F.lit(float(weight_resolution))
+                    ).cast("long")
+                    + F.lit(1).cast("long")
+                ).alias("w"),
             )
+            .groupBy(SRC, DST)
+            .agg(F.min("w").alias("w"))
+            .repartition(p, SRC)
         )
-        if _i % 4 == 3:
-            merged = merged.localCheckpoint(eager=True)
-            held = None
-        else:
-            merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-            held = merged
-        changed = int(
-            merged.agg(F.sum(F.col("changed").cast("long"))).collect()[0][0] or 0
+
+        def step(state: DataFrame, _i: int) -> DataFrame:
+            frontier = state.filter(F.col("changed")).select("root", "id", "dist")
+            cand = (
+                frontier.hint("shuffle_hash")
+                .join(rel, frontier["id"] == rel[SRC])
+                .groupBy("root", F.col(DST).alias("id"))
+                .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
+            )
+            return (
+                state.select("root", "id", "dist")
+                .join(cand, ["root", "id"], "full_outer")
+                .select(
+                    "root",
+                    "id",
+                    F.least(
+                        F.coalesce("dist", F.col("cand")),
+                        F.coalesce("cand", F.col("dist")),
+                    ).alias("dist"),
+                    (
+                        F.col("cand").isNotNull()
+                        & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
+                    ).alias("changed"),
+                )
+            )
+
+        res = iterate(
+            spark.createDataFrame(
+                [(x, x, 0, True) for x in roots],
+                "root long, id long, dist long, changed boolean",
+            ),
+            step,
+            max_iter=max_iter,
+            updated_metric=F.sum(F.col("changed").cast("long")),
+            truncate_every=4,
+            name="mssssp",
         )
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = held
-        state = merged
-        if changed == 0:
-            break
-    out = state.select("root", "id", "dist").localCheckpoint(eager=True)
-    if prev_cached is not None:
-        prev_cached.unpersist()
-    rel.unpersist()
-    return out
+    return res.state.select("root", "id", "dist")
 
 
 def weighted_closeness_centrality(
@@ -421,55 +387,48 @@ def widest_paths(
     partitioned and persisted once; only the changed frontier joins it
     each round; Bellman-Ford-style monotone convergence (width only ever
     increases) in ≤ V-1 rounds, far fewer on small-diameter web graphs."""
-    from pyspark.storagelevel import StorageLevel
-
-    from ..graph import nodes_of
-    from ..plans.fixpoint import iterate
-
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    rel = (
-        edges.select(SRC, DST, F.col(weight_col).cast("double").alias("w"))
-        .repartition(p, SRC)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    m_edges = rel.count()
-    nodes = nodes_of(edges)
-    n = nodes.count()
-
-    init = nodes.select(
-        "id",
-        F.when(F.col("id") == root, F.lit(float(source_width)))
-        .otherwise(F.lit(None).cast("double"))
-        .alias("width"),
-        (F.col("id") == root).alias("changed"),
-    )
-
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        frontier = state.filter(F.col("changed")).select("id", "width")
-        cand = (
-            join_side(frontier, n).join(rel, frontier["id"] == rel[SRC])
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.max(F.least(F.col("width"), F.col("w"))).alias("cand"))
+    with rounds() as r:
+        rel, m_edges = r.keep(
+            edges.select(SRC, DST, F.col(weight_col).cast("double").alias("w"))
+            .repartition(p, SRC)
         )
-        improved = F.col("cand").isNotNull() & (
-            F.col("width").isNull() | (F.col("cand") > F.col("width"))
-        )
-        return state.join(cand, "id", "left").select(
+        nodes = nodes_of(edges)
+        n = nodes.count()
+
+        init = nodes.select(
             "id",
-            F.when(improved, F.col("cand")).otherwise(F.col("width")).alias("width"),
-            improved.alias("changed"),
+            F.when(F.col("id") == root, F.lit(float(source_width)))
+            .otherwise(F.lit(None).cast("double"))
+            .alias("width"),
+            (F.col("id") == root).alias("changed"),
         )
 
-    res = iterate(
-        init,
-        step,
-        max_iter=max_iter,
-        updated_metric=F.sum(F.col("changed").cast("long")),
-        truncate_every=1 if is_small(m_edges) else 4,
-        name="widest_paths",
-    )
-    rel.unpersist()
+        def step(state: DataFrame, _i: int) -> DataFrame:
+            frontier = state.filter(F.col("changed")).select("id", "width")
+            cand = (
+                join_side(frontier, n).join(rel, frontier["id"] == rel[SRC])
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.max(F.least(F.col("width"), F.col("w"))).alias("cand"))
+            )
+            improved = F.col("cand").isNotNull() & (
+                F.col("width").isNull() | (F.col("cand") > F.col("width"))
+            )
+            return state.join(cand, "id", "left").select(
+                "id",
+                F.when(improved, F.col("cand")).otherwise(F.col("width")).alias("width"),
+                improved.alias("changed"),
+            )
+
+        res = iterate(
+            init,
+            step,
+            max_iter=max_iter,
+            updated_metric=F.sum(F.col("changed").cast("long")),
+            truncate_every=1 if is_small(m_edges) else 4,
+            name="widest_paths",
+        )
     return res.state.select("id", "width")
 
 
@@ -582,62 +541,59 @@ def small_world_sigma(
     Roots absent from the graph contribute nothing on either engine
     (depth > 0 filter).
     """
+    from ..plans.overlap import run_concurrent
     from .triangles import transitivity
 
-    und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    nm = und.agg(
-        F.countDistinct(SRC).alias("n"),
-        (F.count(F.lit(1)) / 2).cast("long").alias("m"),
-    )
-    # the triangle/wedge aggregate and the multi-source BFS are
-    # independent — overlap their job chains (plans/overlap.py); both
-    # kernels hand back materialized frames, and the one-row combining
-    # plan below is unchanged
-    from ..plans.overlap import run_concurrent
-
-    tr_raw, depths = run_concurrent(
-        lambda: transitivity(edges),
-        lambda: multi_source_bfs_depths(und, sorted(set(roots)), max_iter=max_iter),
-    )
-    tr = tr_raw.select(F.col("transitivity").alias("c_raw"))
-    lsum = depths.filter(F.col("depth") > 0).agg(
-        F.sum("depth").alias("sd"), F.count(F.lit(1)).alias("np")
-    )
-    out = (
-        nm.crossJoin(F.broadcast(tr))
-        .crossJoin(F.broadcast(lsum))
-        .select(
-            F.col("n").alias("n_nodes"),
-            F.col("m").alias("n_edges"),
-            F.round("c_raw", 6).alias("c"),
-            F.round(
-                (2.0 * F.col("m") / F.col("n")) / (F.col("n") - 1), 6
-            ).alias("c_rand"),
-            F.round(F.col("sd") / F.col("np"), 6).alias("l_hat"),
-            F.round(
-                F.log(F.col("n").cast("double"))
-                / F.log(2.0 * F.col("m") / F.col("n")),
-                6,
-            ).alias("l_rand"),
-            F.round(
-                (
-                    F.col("c_raw") / ((2.0 * F.col("m") / F.col("n")) / (F.col("n") - 1))
-                )
-                / (
-                    (F.col("sd") / F.col("np"))
-                    / (
-                        F.log(F.col("n").cast("double"))
-                        / F.log(2.0 * F.col("m") / F.col("n"))
-                    )
-                ),
-                6,
-            ).alias("sigma"),
+    with rounds() as r:
+        und, _ = r.keep(symmetrize(edges))
+        nm = und.agg(
+            F.countDistinct(SRC).alias("n"),
+            (F.count(F.lit(1)) / 2).cast("long").alias("m"),
         )
-        .localCheckpoint(eager=True)
-    )
-    und.unpersist()
-    return out
+        # the triangle/wedge aggregate and the multi-source BFS are
+        # independent — overlap their job chains (plans/overlap.py); both
+        # kernels hand back materialized frames, and the one-row combining
+        # plan below is unchanged
+        tr_raw, depths = run_concurrent(
+            lambda: transitivity(edges),
+            lambda: multi_source_bfs_depths(und, sorted(set(roots)), max_iter=max_iter),
+        )
+        tr = tr_raw.select(F.col("transitivity").alias("c_raw"))
+        lsum = depths.filter(F.col("depth") > 0).agg(
+            F.sum("depth").alias("sd"), F.count(F.lit(1)).alias("np")
+        )
+        return (
+            nm.crossJoin(F.broadcast(tr))
+            .crossJoin(F.broadcast(lsum))
+            .select(
+                F.col("n").alias("n_nodes"),
+                F.col("m").alias("n_edges"),
+                F.round("c_raw", 6).alias("c"),
+                F.round(
+                    (2.0 * F.col("m") / F.col("n")) / (F.col("n") - 1), 6
+                ).alias("c_rand"),
+                F.round(F.col("sd") / F.col("np"), 6).alias("l_hat"),
+                F.round(
+                    F.log(F.col("n").cast("double"))
+                    / F.log(2.0 * F.col("m") / F.col("n")),
+                    6,
+                ).alias("l_rand"),
+                F.round(
+                    (
+                        F.col("c_raw") / ((2.0 * F.col("m") / F.col("n")) / (F.col("n") - 1))
+                    )
+                    / (
+                        (F.col("sd") / F.col("np"))
+                        / (
+                            F.log(F.col("n").cast("double"))
+                            / F.log(2.0 * F.col("m") / F.col("n"))
+                        )
+                    ),
+                    6,
+                ).alias("sigma"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 def global_efficiency(
@@ -662,32 +618,30 @@ def global_efficiency(
     aggregate; the denominator's root-presence count rides the same
     node-set frame.
     """
-    und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = nodes_of(und)
     rs = sorted(set(roots))
-    nm = nodes.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("id").isin(rs).cast("long")).alias("kr"),
-    )
-    depths = multi_source_bfs_depths(und, rs, max_iter=max_iter)
-    s = depths.filter(F.col("depth") > 0).agg(
-        F.sum(F.lit(1.0) / F.col("depth")).alias("se")
-    )
-    out = (
-        nm.crossJoin(F.broadcast(s))
-        .select(
-            F.col("n").alias("n_nodes"),
-            F.col("kr").cast("long").alias("n_roots"),
-            F.when(
-                (F.col("kr") > 0) & (F.col("n") > 1),
-                F.round(
-                    F.coalesce("se", F.lit(0.0))
-                    / (F.col("kr") * (F.col("n") - 1)),
-                    6,
-                ),
-            ).otherwise(F.lit(0.0)).alias("efficiency"),
+    with rounds() as r:
+        und = r.hold(symmetrize(edges))
+        nm = nodes_of(und).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("id").isin(rs).cast("long")).alias("kr"),
         )
-        .localCheckpoint(eager=True)
-    )
-    und.unpersist()
-    return out
+        depths = multi_source_bfs_depths(und, rs, max_iter=max_iter)
+        s = depths.filter(F.col("depth") > 0).agg(
+            F.sum(F.lit(1.0) / F.col("depth")).alias("se")
+        )
+        return (
+            nm.crossJoin(F.broadcast(s))
+            .select(
+                F.col("n").alias("n_nodes"),
+                F.col("kr").cast("long").alias("n_roots"),
+                F.when(
+                    (F.col("kr") > 0) & (F.col("n") > 1),
+                    F.round(
+                        F.coalesce("se", F.lit(0.0))
+                        / (F.col("kr") * (F.col("n") - 1)),
+                        6,
+                    ),
+                ).otherwise(F.lit(0.0)).alias("efficiency"),
+            )
+            .localCheckpoint(eager=True)
+        )

@@ -26,6 +26,9 @@ entry. ``iterate`` runs its loop inside one; kernels whose round does more
 than ``state ← step(state)`` (HITS' two half-steps, the spectral stats
 probes, the peeling kernels that add each round's selected set to the
 result) write the loop themselves against the same scope.
+``checkpoint_counted`` is the one observed checkpoint for frames a kernel
+checkpoints rather than caches (BFS levels, the ancestor closure): the
+row count and any other metric ride the checkpoint job.
 """
 
 from __future__ import annotations
@@ -36,19 +39,20 @@ import time
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
+from itertools import count
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..graph import materialize_counted
 
 MANIFEST = "manifest.json"
 
-# see iterate(): unique observation names across driver threads
-# (itertools.count.__next__ is atomic under the GIL)
-from itertools import count as _obs_count
-
-_OBS_SEQ = _obs_count()
+# Observation names must be unique across driver threads: two instances of
+# one kernel may run at once (plans/overlap.py). itertools.count.__next__ is
+# atomic under the GIL.
+_OBS_SEQ = count()
 
 
 @dataclass
@@ -91,8 +95,10 @@ class Rounds:
       materialized itself (``iterate`` and the SCC edge table keep their
       own cadence).
     - ``part(df)`` — a piece of the result (the peeling kernels' selected
-      sets): materialized and counted like ``materialize``, held until
-      the scope exits; ``parts()`` is their union in order.
+      sets, max-flow's original edges and reach set): materialized and
+      counted like ``materialize``, held until the scope exits, readable
+      after it through its localCheckpoint blocks; ``parts()`` is their
+      union in order.
 
     Ending round k records one ``IterationMetrics`` (seconds since the
     previous round ended) and releases round k-1's frames: the next
@@ -193,6 +199,19 @@ def rounds() -> Iterator[Rounds]:
         r.close()
 
 
+def checkpoint_counted(
+    df: DataFrame, name: str, *metrics: Column
+) -> tuple[DataFrame, dict]:
+    """``localCheckpoint(eager=True)`` whose metrics ride the same job:
+    ``n`` (the row count) plus any aliased aggregate ``metrics``, returned
+    as a dict. ``name`` prefixes a process-unique observation name."""
+    obs = Observation(f"{name}_{next(_OBS_SEQ)}")
+    out = df.observe(obs, F.count(F.lit(1)).alias("n"), *metrics).localCheckpoint(
+        eager=True
+    )
+    return out, obs.get
+
+
 def _write_manifest(checkpoint_dir: str, entries: list[dict]) -> None:
     tmp = os.path.join(checkpoint_dir, MANIFEST + ".tmp")
     with open(tmp, "w") as f:
@@ -281,11 +300,6 @@ def iterate(
             # same job via observe; row counts are taken opportunistically.
             obs = None
             if updated_metric is not None:
-                from pyspark.sql import Observation
-
-                # process-unique suffix: two instances of the same kernel may
-                # run concurrently from driver threads (plans/overlap.py) and
-                # must not collide on observation names
                 obs = Observation(f"{name}_it{it}_{next(_OBS_SEQ)}")
                 new_state = new_state.observe(obs, updated_metric.alias("updated"))
             persisted = (it - start_iter) % truncate_every != truncate_every - 1
@@ -311,8 +325,6 @@ def iterate(
                 # durable state replaces the in-memory one
                 new_state = spark.read.parquet(path)
                 persisted = False
-                from pyspark.sql import functions as F
-
                 partition_rows = [
                     row["count"]
                     for row in new_state.groupBy(F.spark_partition_id().alias("pid"))

@@ -1,7 +1,77 @@
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import SparkSession
+
+# Tests whose call still leaves live CacheManager entries behind: operators
+# not yet on plans/fixpoint.rounds (functions/, link prediction, louvain,
+# spinner, clique percolation, simrank, temporal PageRank and the facades
+# over them). Porting one removes its tests here; the check below fails any
+# other test that raises the entry count.
+KNOWN_LEAKS = {
+    "tests/test_functions.py::test_near_dup_giant_bucket_star_linking",
+    "tests/test_functions.py::test_lsh_ann_and_near_dups",
+    "tests/test_functions.py::test_kmeans_matches_lloyd_model",
+    "tests/test_graph_kernels2.py::test_link_prediction_model",
+    "tests/test_graph_kernels2.py::test_link_prediction_hub_cap_drops_hub_wedges",
+    "tests/test_graph_kernels2.py::test_materialize_caps_self_join_stats",
+    "tests/test_graph_kernels3.py::test_louvain_multilevel_matches_model_and_improves_q",
+    "tests/test_join_side.py::test_both_sides_agree[spinner_partition]",
+    "tests/test_round5d.py::test_pq_ann_recovers_tight_clusters",
+    "tests/test_round5e.py::test_kmeans_inertia_manual",
+    "tests/test_round5f.py::test_pq_recall_bounds",
+    "tests/test_round5g.py::test_clique_percolation_two_chained_triangles",
+    "tests/test_round5g.py::test_clique_percolation_vertex_shared_communities_stay_separate",
+    "tests/test_round5g.py::test_clique_percolation_excludes_triangle_free_edges",
+    "tests/test_round5g.py::test_graphsession_landmark_and_cpm",
+    "tests/test_round5g.py::test_semdedup_drops_within_cluster_near_dups",
+    "tests/test_round5g.py::test_semdedup_is_cluster_local",
+    "tests/test_round5g.py::test_partition_nmi_identical_is_one",
+    "tests/test_round5g.py::test_partition_nmi_independent_is_zero",
+    "tests/test_round5g.py::test_partition_nmi_matches_python_model",
+    "tests/test_round5h.py::test_spinner_partition_separates_barbell",
+    "tests/test_round5h.py::test_spinner_partition_covers_all_nodes",
+    "tests/test_round5h.py::test_spinner_partition_count_invariance",
+    "tests/test_round5i.py::test_simrank_matches_dense_recurrence",
+    "tests/test_round5i.py::test_simrank_second_iteration_deepens_cocitation",
+    "tests/test_round5i.py::test_simrank_hub_cap_drops_directory_wedges",
+    "tests/test_round5j.py::test_doc_keywords_matches_dense_model",
+    "tests/test_round5j.py::test_doc_keywords_top_k",
+    "tests/test_round5l.py::test_temporal_pagerank_matches_model_and_is_order_sensitive",
+    "tests/test_round5l.py::test_graphsession_continuation6_surface",
+}
+
+
+_ROOT = Path(__file__).resolve().parent.parent
+
+
+def _cached_entries(spark: SparkSession) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _node_id(item) -> str:
+    """``item.nodeid`` relative to the repository root, whatever directory
+    pytest takes as its rootdir."""
+    path = item.path.resolve().relative_to(_ROOT).as_posix()
+    return path + item.nodeid[item.nodeid.index("::"):]
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_call(item):
+    """Fail a test whose call phase leaves more cached entries than it
+    found. Runs only when a SparkSession is already active; never starts
+    one. A lower count passes: a call may drop a shared plan's entry."""
+    spark = SparkSession.getActiveSession()
+    before = None if spark is None else _cached_entries(spark)
+    result = yield
+    if before is not None and _node_id(item) not in KNOWN_LEAKS:
+        after = SparkSession.getActiveSession()
+        left = 0 if after is None else _cached_entries(after) - before
+        if left > 0:
+            pytest.fail(f"call left {left} live cache entries", pytrace=False)
+    return result
 
 
 @pytest.fixture(scope="session")

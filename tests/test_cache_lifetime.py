@@ -3,12 +3,13 @@
 Each case records the session CacheManager's entry count, runs one entry
 point on a seeded R-MAT scale-8 graph, consumes the result and checks the
 count is back where it started. ``unpersist`` drops the entry at once, so
-no GC is needed. Covered: the power-iteration and peeling families that
-run on ``plans/fixpoint.rounds`` (including their empty-graph, self-loop
-and raise paths), the three benchmarked kernels, a durable-checkpoint
-PageRank run, the percolation census, whose callers own the edge table
-they persist, collective influence, and a caller's own entry for a plan
-a scope also caches, which the scope must leave in place.
+no GC is needed. Covered: the power-iteration, peeling and traversal
+families that run on ``plans/fixpoint.rounds`` (including their
+empty-graph, self-loop, no-path and raise paths), the three benchmarked
+kernels, a durable-checkpoint PageRank run, the percolation census, whose
+callers own the edge table they persist, collective influence, and a
+caller's own entry for a plan a scope also caches, which the scope must
+leave in place.
 """
 
 from __future__ import annotations
@@ -41,12 +42,16 @@ def _topic():
 def _call(name, edges, tmp_path):
     from llama_spark.graph import with_synthetic_weights
     from llama_spark.operators import (
+        anf,
+        bc,
         bowtie,
+        bridges,
         centrality,
         coloring,
         components,
         csr,
         diffusion,
+        flow,
         hits,
         matching,
         mis,
@@ -55,8 +60,11 @@ def _call(name, edges, tmp_path):
         percolation,
         scc,
         spectral,
+        traversal,
         trust,
     )
+
+    weighted = with_synthetic_weights(edges)
 
     calls = {
         "topic_sensitive_pagerank": lambda: pagerank.topic_sensitive_pagerank(
@@ -111,6 +119,44 @@ def _call(name, edges, tmp_path):
         ),
         "condensation_levels": lambda: scc.condensation_levels(edges),
         "bowtie_decomposition": lambda: bowtie.bowtie_decomposition(edges),
+        "sssp": lambda: traversal.sssp(edges, root=_seeds(edges)[0]),
+        "sssp_weighted": lambda: traversal.sssp(
+            weighted, root=_seeds(edges)[0], weight_col="weight"
+        ),
+        "multi_source_bfs_depths": lambda: traversal.multi_source_bfs_depths(
+            edges, _seeds(edges)
+        ),
+        "multi_source_sssp": lambda: traversal.multi_source_sssp(weighted, _seeds(edges)),
+        "widest_paths": lambda: traversal.widest_paths(weighted, root=_seeds(edges)[0]),
+        "landmark_distances": lambda: traversal.landmark_distances(edges, k_landmarks=2),
+        "global_efficiency": lambda: traversal.global_efficiency(edges, _seeds(edges)),
+        "small_world_sigma": lambda: traversal.small_world_sigma(edges, _seeds(edges)),
+        "betweenness_centrality": lambda: bc.betweenness_centrality(
+            edges, roots=_seeds(edges)
+        ),
+        "edge_betweenness": lambda: bc.edge_betweenness(edges, roots=_seeds(edges)),
+        "weighted_betweenness_centrality": lambda: bc.weighted_betweenness_centrality(
+            weighted, _seeds(edges), max_iter=4
+        ),
+        "percolation_centrality": lambda: bc.percolation_centrality(
+            edges, roots=_seeds(edges)
+        ),
+        "bfs_forest": lambda: bridges.bfs_forest(edges),
+        "bridges": lambda: bridges.bridges(edges),
+        "biconnected_blocks": lambda: bridges.biconnected_blocks(edges),
+        "neighborhood_function": lambda: anf.neighborhood_function(edges, max_t=3),
+        "hyperball_harmonic": lambda: anf.hyperball_harmonic(edges, max_t=3),
+        # node 0 is the graph's smallest source id; 198 is reachable from it
+        "max_flow_summary": lambda: flow.max_flow_summary(edges, 0, 198),
+        "max_flow_summary_capacity": lambda: flow.max_flow_summary(
+            edges.withColumn("cap", (F.col("src") + F.col("dst")) % 3 + 1),
+            0,
+            198,
+            max_augment=1,
+            capacity_col="cap",
+        ),
+        # no s-t path: the first residual BFS misses the sink
+        "max_flow_summary_no_path": lambda: flow.max_flow_summary(edges, 198, 0),
     }
     return calls[name]()
 
@@ -145,6 +191,26 @@ CASES = [
     "strongly_connected_components",
     "condensation_levels",
     "bowtie_decomposition",
+    "sssp",
+    "sssp_weighted",
+    "multi_source_bfs_depths",
+    "multi_source_sssp",
+    "widest_paths",
+    "landmark_distances",
+    "global_efficiency",
+    "small_world_sigma",
+    "betweenness_centrality",
+    "edge_betweenness",
+    "weighted_betweenness_centrality",
+    "percolation_centrality",
+    "bfs_forest",
+    "bridges",
+    "biconnected_blocks",
+    "neighborhood_function",
+    "hyperball_harmonic",
+    "max_flow_summary",
+    "max_flow_summary_capacity",
+    "max_flow_summary_no_path",
 ]
 
 
@@ -160,10 +226,21 @@ def test_call_leaves_no_cache_entry(spark, rmat, tmp_path, name):
     assert _entries(spark) == before
 
 
-@pytest.mark.parametrize("name", ["hits_result", "fiedler_vector"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "hits_result",
+        "fiedler_vector",
+        "neighborhood_function",
+        "hyperball_harmonic",
+        "max_flow_summary",
+    ],
+)
 def test_empty_graph_leaves_no_cache_entry(spark, rmat, tmp_path, name):
     before = _entries(spark)
-    assert _call(name, rmat.filter(F.lit(False)), tmp_path).collect() == []
+    rows = _call(name, rmat.filter(F.lit(False)), tmp_path).collect()
+    # max-flow's summary is one row even with no edges
+    assert len(rows) == (1 if name == "max_flow_summary" else 0)
     assert _entries(spark) == before
 
 
@@ -173,6 +250,21 @@ def test_raise_leaves_no_cache_entry(spark, rmat):
     before = _entries(spark)
     with pytest.raises(ValueError, match="topic 2 has no seed nodes"):
         topic_sensitive_pagerank(rmat, _topic(), 3, max_iter=2)
+    assert _entries(spark) == before
+
+
+def test_unparallel_root_weights_raise_before_any_job(spark, rmat):
+    from llama_spark.operators.bc import betweenness_centrality
+
+    sc = spark.sparkContext
+    before = _entries(spark)
+    sc.setJobGroup("bc_root_weights", "root_weights length check")
+    try:
+        with pytest.raises(ValueError, match="root_weights must be parallel to roots"):
+            betweenness_centrality(rmat, roots=[0, 1], root_weights=[1.0])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("bc_root_weights") == []
     assert _entries(spark) == before
 
 
