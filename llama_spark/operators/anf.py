@@ -31,7 +31,7 @@ diameter double-sweep (ll_bfs_template.h); ANF generalizes both.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.text import token_hash
@@ -102,38 +102,34 @@ def neighborhood_function(
     """DataFrame[t, avg_reach] for t = 0..max_t: the estimated average
     number of nodes within t hops (directed, out-edges), t=0 ≈ 1.
 
-    Lazy result: each row is a 1-row aggregate over that round's
-    checkpointed state (t=0 recomputes the initial masks), unioned —
-    collecting runs max_t+1 tiny jobs, nothing else. The round scope
-    releases each state's cache entry once the next state exists, and
-    the last one on return.
+    Each row's estimate is a 1-row aggregate observed inside the job that
+    caches that round's state, so the result is a local frame of max_t+1
+    rows: collecting it runs no Spark job and recomputes no mask. The
+    round scope releases each state's cache entry once the next state
+    exists, and the last one on return.
     """
     spark = edges.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     masks = [f"m{r}" for r in range(registers)]
-
-    def estimate(st: DataFrame, t: int) -> DataFrame:
-        # b_r = bit_count(((~m) & -(~m)) - 1); est = 2^(Σb/R)/φ, averaged
-        est = F.pow(
-            F.lit(2.0), _lowest_unset_bits(masks).cast("double") / F.lit(float(registers))
-        )
-        return st.agg(
-            F.round(
-                F.sum(est) / F.lit(FM_PHI) / F.lit(float(n_nodes)), 6
-            ).alias("avg_reach")
-        ).select(F.lit(t).alias("t"), "avg_reach")
+    # b_r = bit_count(((~m) & -(~m)) - 1); est = 2^(Σb/R)/φ, averaged
+    est = F.pow(
+        F.lit(2.0), _lowest_unset_bits(masks).cast("double") / F.lit(float(registers))
+    )
 
     with rounds() as r:
         init, e, n_nodes = _ball_setup(r, edges, masks, p)
-        if n_nodes == 0:
-            return spark.createDataFrame([], "t int, avg_reach double")
-        state = r.cache(init.repartition(p, "id"))
-        state.count()
-        out = estimate(state, 0)
-        for t in range(1, max_t + 1):
-            state, _ = r.materialize(_ball_step(e, state, masks, n_nodes))
-            out = out.unionByName(estimate(state, t))
-    return out
+        out = []
+        if n_nodes > 0:
+            avg_reach = F.round(F.sum(est) / F.lit(FM_PHI) / F.lit(float(n_nodes)), 6)
+            state = init.repartition(p, "id")
+            for t in range(max_t + 1):
+                if t:
+                    state = _ball_step(e, state, masks, n_nodes)
+                obs = Observation()
+                state = r.cache(state.observe(obs, avg_reach.alias("avg_reach")))
+                r.end_round(rows=state.count())
+                out.append((t, obs.get["avg_reach"]))
+    return spark.createDataFrame(out, "t int, avg_reach double")
 
 
 def effective_diameter(
@@ -149,12 +145,9 @@ def effective_diameter(
     over ``neighborhood_function``; both engines compare the same
     6-dp-rounded estimates, so the argmin is stable.
     """
-    # the nf frame is max_t+1 rows but each row is an aggregate job over a
-    # checkpointed round state, and it is referenced twice below (max + argmin)
-    # — checkpoint the tiny result so the aggregates run once
     nf = neighborhood_function(
         edges, max_t=max_t, registers=registers, num_partitions=num_partitions
-    ).localCheckpoint(eager=True)
+    )
     mx = nf.agg(F.max("avg_reach").alias("mx"))
     return (
         nf.crossJoin(F.broadcast(mx))

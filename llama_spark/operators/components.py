@@ -39,7 +39,7 @@ from ..graph import (
     nodes_of,
     symmetrize,
 )
-from ..plans.fixpoint import FixpointResult, iterate
+from ..plans.fixpoint import FixpointResult, iterate, rounds
 
 
 def connected_components_result(
@@ -58,57 +58,54 @@ def connected_components_result(
     the frontier — on a web graph the frontier collapses after ~3 rounds."""
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    und = symmetrize(edges).repartition(p, SRC).persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    nodes = nodes_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if initial_components is not None:
-        # warm start (incremental recompute): hash-min is monotone, so any
-        # init with component(v) ≥ fixpoint(v) — e.g. the previous
-        # snapshot's labels, id for new nodes — converges to the same
-        # fixpoint, usually in far fewer rounds.
-        init = (
-            nodes.join(initial_components, "id", "left")
-            .select(
-                "id",
-                F.coalesce("component", "id").alias("component"),
-                F.lit(True).alias("changed"),
+    with rounds() as r:
+        und, _ = r.keep(symmetrize(edges).repartition(p, SRC))
+        nodes, n = r.keep(nodes_of(edges))
+        if initial_components is not None:
+            # warm start (incremental recompute): hash-min is monotone, so any
+            # init with component(v) ≥ fixpoint(v) — e.g. the previous
+            # snapshot's labels, id for new nodes — converges to the same
+            # fixpoint, usually in far fewer rounds.
+            init = (
+                nodes.join(initial_components, "id", "left")
+                .select(
+                    "id",
+                    F.coalesce("component", "id").alias("component"),
+                    F.lit(True).alias("changed"),
+                )
             )
-        )
-    else:
-        init = nodes.select(
-            "id", F.col("id").alias("component"), F.lit(True).alias("changed")
-        )
+        else:
+            init = nodes.select(
+                "id", F.col("id").alias("component"), F.lit(True).alias("changed")
+            )
 
-    def step(labels: DataFrame, _i: int) -> DataFrame:
-        frontier = labels.filter(F.col("changed")).select("id", "component")
-        neighbor_min = (
-            join_side(frontier, n).join(und, frontier["id"] == und[SRC])
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.min("component").alias("nmin"))
-        )
-        return labels.join(join_side(neighbor_min, n), "id", "left").select(
-            "id",
-            F.least("component", F.coalesce("nmin", "component")).alias("component"),
-            (F.col("nmin").isNotNull() & (F.col("nmin") < F.col("component"))).alias(
-                "changed"
-            ),
-        )
+        def step(labels: DataFrame, _i: int) -> DataFrame:
+            frontier = labels.filter(F.col("changed")).select("id", "component")
+            neighbor_min = (
+                join_side(frontier, n).join(und, frontier["id"] == und[SRC])
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.min("component").alias("nmin"))
+            )
+            return labels.join(join_side(neighbor_min, n), "id", "left").select(
+                "id",
+                F.least("component", F.coalesce("nmin", "component")).alias("component"),
+                (F.col("nmin").isNotNull() & (F.col("nmin") < F.col("component"))).alias(
+                    "changed"
+                ),
+            )
 
-    result = iterate(
-        init,
-        step,
-        max_iter=max_iter,
-        updated_metric=F.sum(F.col("changed").cast("long")),
-        checkpoint_dir=checkpoint_dir,
-        truncate_every=1 if is_small(n) else 4,
-        resume=resume,
-        name="connected_components",
-    )
+        result = iterate(
+            init,
+            step,
+            max_iter=max_iter,
+            updated_metric=F.sum(F.col("changed").cast("long")),
+            checkpoint_dir=checkpoint_dir,
+            truncate_every=1 if is_small(n) else 4,
+            resume=resume,
+            name="connected_components",
+        )
     result.state = result.state.select("id", "component")
     result.n_nodes = n
-    und.unpersist()
-    nodes.unpersist()
     return result
 
 

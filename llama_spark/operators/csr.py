@@ -27,10 +27,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..graph import DST, SRC
-from ..plans.fixpoint import FixpointResult, iterate
+from ..graph import DST, SRC, nodes_of
+from ..plans.fixpoint import FixpointResult, iterate, rounds
 
 CSR_SCHEMA = (
     "part int, node_ids array<long>, indptr array<long>, indices array<long>"
@@ -43,7 +42,7 @@ def pack_csr(edges: DataFrame, num_parts: int | None = None) -> DataFrame:
     spark = edges.sparkSession
     p = num_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([SRC, DST], kind="mergesort")
         srcs = pdf[SRC].to_numpy()
         node_ids, counts = np.unique(srcs, return_counts=True)
@@ -105,35 +104,12 @@ def pagerank_csr_result(
 ) -> FixpointResult:
     """PageRank over packed CSR partitions — identical recurrence to
     operators/pagerank.py (pagerank.h:159-166), SpMV execution."""
-    from ..graph import nodes_of
-
     spark = edges.sparkSession
     p = num_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # cache the packed CSR BEHIND an explicit hash(part) exchange:
-    # FlatMapGroupsInPandas output reports UnknownPartitioning, so without
-    # it every iteration's cogroup re-exchanges the cached E-scale CSR
-    # arrays (measured: one Exchange over the blobs per step); with it the
-    # cached plan's HashPartitioning(part, p) satisfies the cogroup's
-    # clustered-distribution requirement and only the V-row rank vector
-    # shuffles per step (the one-time exchange moves p fat rows once)
-    csr = (
-        pack_csr(edges, p)
-        .repartition(p, "part")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    csr.count()
-    nodes = nodes_of(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()
-    if n == 0:
-        return FixpointResult(
-            state=nodes.select("id", F.lit(0.0).alias("rank")),
-            iterations=0,
-            converged=True,
-        )
-    base = (1.0 - damping) / n
-
-    def gather_scatter(key, csr_pdf: pd.DataFrame, ranks_pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather_scatter(
+        key: tuple, csr_pdf: pd.DataFrame, ranks_pdf: pd.DataFrame
+    ) -> pd.DataFrame:
         if csr_pdf.empty or ranks_pdf.empty:
             return pd.DataFrame({"id": np.array([], dtype=np.int64),
                                  "partial": np.array([], dtype=np.float64)})
@@ -156,30 +132,47 @@ def pagerank_csr_result(
             outs.append(pd.DataFrame({"id": dst_u, "partial": partial}))
         return pd.concat(outs, ignore_index=True)
 
-    csr_grouped = csr.groupBy("part")
-    init = nodes.select("id", F.lit(1.0 / n).alias("rank"))
+    with rounds() as r:
+        # cache the packed CSR BEHIND an explicit hash(part) exchange:
+        # FlatMapGroupsInPandas output reports UnknownPartitioning, so without
+        # it every iteration's cogroup re-exchanges the cached E-scale CSR
+        # arrays (measured: one Exchange over the blobs per step); with it the
+        # cached plan's HashPartitioning(part, p) satisfies the cogroup's
+        # clustered-distribution requirement and only the V-row rank vector
+        # shuffles per step (the one-time exchange moves p fat rows once)
+        csr, _ = r.keep(pack_csr(edges, p).repartition(p, "part"))
+        nodes, n = r.keep(nodes_of(edges))
+        if n == 0:
+            return FixpointResult(
+                state=nodes.select("id", F.lit(0.0).alias("rank")),
+                iterations=0,
+                converged=True,
+            )
+        base = (1.0 - damping) / n
 
-    def step(ranks: DataFrame, _i: int) -> DataFrame:
-        ranks_k = ranks.withColumn(
-            "part", F.pmod(F.xxhash64(F.col("id")), F.lit(p)).cast("int")
-        )
-        partials = csr_grouped.cogroup(ranks_k.groupBy("part")).applyInPandas(
-            gather_scatter, schema="id long, partial double"
-        )
-        contribs = partials.groupBy("id").agg(F.sum("partial").alias("contrib"))
-        return nodes.join(contribs, "id", "left").select(
-            "id",
-            (F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
-        )
+        csr_grouped = csr.groupBy("part")
+        init = nodes.select("id", F.lit(1.0 / n).alias("rank"))
 
-    result = iterate(
-        init,
-        step,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        resume=resume,
-        name="pagerank_csr",
-    )
-    csr.unpersist()
-    nodes.unpersist()
-    return result
+        def step(ranks: DataFrame, _i: int) -> DataFrame:
+            ranks_k = ranks.withColumn(
+                "part", F.pmod(F.xxhash64(F.col("id")), F.lit(p)).cast("int")
+            )
+            partials = csr_grouped.cogroup(ranks_k.groupBy("part")).applyInPandas(
+                gather_scatter, schema="id long, partial double"
+            )
+            contribs = partials.groupBy("id").agg(F.sum("partial").alias("contrib"))
+            return nodes.join(contribs, "id", "left").select(
+                "id",
+                (F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias(
+                    "rank"
+                ),
+            )
+
+        return iterate(
+            init,
+            step,
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            resume=resume,
+            name="pagerank_csr",
+        )

@@ -164,7 +164,7 @@ def max_flow_unit(
             pm, walk_bound = _residual_bfs(resid, root, sink, max_depth, n_nodes)
             converged = walk_bound is None
             if converged or flow >= max_augment:
-                s_side, _ = r.part(pm.select("id"))
+                s_side, s_rows = r.part(pm.select("id"))
                 break
 
             # unique augmenting path: lazy walk of ≤ walk_bound steps from
@@ -221,10 +221,11 @@ def max_flow_unit(
             flow += bottleneck
 
     # orig and s_side are checkpointed: readable after the scope released
-    # their cache entries
+    # their cache entries. Their checkpoint blocks carry the pre-checkpoint
+    # size estimate, so the join side comes from the reach set's row count
     cut = (
-        orig.join(s_side.withColumnRenamed("id", SRC), SRC, "left_semi")
-        .join(s_side.withColumnRenamed("id", DST), DST, "left_anti")
+        orig.join(join_side(s_side.withColumnRenamed("id", SRC), s_rows), SRC, "left_semi")
+        .join(join_side(s_side.withColumnRenamed("id", DST), s_rows), DST, "left_anti")
         .select(SRC, DST, "cap")
     )
     return FlowResult(flow=flow, converged=converged, s_side=s_side, cut_edges=cut)

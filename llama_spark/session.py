@@ -1,6 +1,7 @@
 """SparkSession construction for the llama_spark engine.
 
-Local-mode defaults mirror the sandbox (local[32], single JVM); on a real
+Local mode sizes itself to the machine: ``local[cores]`` over the CPUs
+this process may run on, and 2 × cores shuffle partitions. On a real
 cluster the same code runs unchanged via ``spark-submit --py-files`` — the
 only local-specific knobs are driver memory and shuffle-partition count.
 
@@ -13,8 +14,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def _default_driver_memory() -> str:
@@ -33,13 +32,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for iterative graph analytics.
 
+    ``cores`` defaults to ``SPARK_GRAFT_CPUS``, else the CPUs this process
+    may run on (its affinity mask, not the machine's total).
+    ``shuffle_partitions`` defaults to 2 × cores: every cached state
+    table, ``repartition(p, …)`` and round shuffle then runs about two
+    task waves per stage — one wave leaves cores idle behind an R-MAT
+    hub's partition, and a fixed floor above the core count only adds
+    waves of per-task overhead on a small machine.
+
     AQE stays ON (skew-join splitting + partition coalescing are exactly
     what web-graph hub skew needs); Arrow is ON for the pandas-UDF kernels.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(cores, DEFAULT_SHUFFLE_PARTITIONS)))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     )
+    shuffle_partitions = shuffle_partitions or 2 * cores
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

@@ -234,6 +234,8 @@ def test_call_leaves_no_cache_entry(spark, rmat, tmp_path, name):
         "neighborhood_function",
         "hyperball_harmonic",
         "max_flow_summary",
+        "pagerank_csr_result",
+        "connected_components_result",
     ],
 )
 def test_empty_graph_leaves_no_cache_entry(spark, rmat, tmp_path, name):

@@ -8,6 +8,7 @@ from collections import defaultdict
 import pytest
 
 from llama_spark.operators.flow import max_flow_summary, max_flow_unit
+from tests.conftest import edges_df, rmat_edges
 
 
 def _model(pairs, s, t, max_augment=8, caps=None):
@@ -136,3 +137,14 @@ def test_weighted_summary_has_cut_capacity(spark):
     row = max_flow_summary(df, s, t, capacity_col="cap").collect()[0]
     assert row["converged"] and row["max_flow"] == row["cut_capacity"]
     assert row["cut_edges"] == 4  # the four source out-edges
+
+
+def test_cut_edges_plan_has_no_sort_merge_join(spark):
+    """``cut_edges`` reads the original edges and the reach set from their
+    checkpoint blocks after the scope exits; its joins take their side
+    from the reach set's row count, not the blocks' size estimate."""
+    pairs = sorted({(s, d) for s, d in rmat_edges(scale=8, avg_degree=4, seed=11)})
+    r = max_flow_unit(edges_df(spark, pairs), 0, 198)
+    plan = r.cut_edges._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan
+    assert r.cut_edges.count() == r.flow

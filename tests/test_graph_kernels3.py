@@ -134,6 +134,16 @@ def test_anf_matches_model_exactly(spark):
         assert got[t] == pytest.approx(want[t], abs=1e-6), t
 
 
+def test_anf_result_does_not_recompute_masks(spark):
+    """Each round's estimate is taken while its state is live: the result
+    is local rows, so collecting it never rehashes the initial FM masks."""
+    from llama_spark.operators.anf import neighborhood_function
+
+    nf = neighborhood_function(edges_df(spark, PAIRS), max_t=2, registers=8)
+    assert "md5" not in nf._jdf.queryExecution().optimizedPlan().toString()
+    assert [r["t"] for r in nf.orderBy("t").collect()] == [0, 1, 2]
+
+
 def test_anf_monotone_and_saturates_on_chain(spark):
     # 0->1->2->3: every node's t-ball grows until its reach saturates
     from llama_spark.operators.anf import neighborhood_function
